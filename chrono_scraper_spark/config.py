@@ -17,7 +17,6 @@ from __future__ import annotations
 # Frontier row statuses (reference: ScrapePageStatus, scraping.py:13-36)
 # --------------------------------------------------------------------------
 STATUS_PENDING = "pending"
-STATUS_IN_PROGRESS = "in_progress"
 STATUS_COMPLETED = "completed"
 STATUS_FAILED = "failed"
 STATUS_FILTERED_FILE_EXTENSION = "filtered_file_extension"
@@ -155,7 +154,6 @@ STATIC_ASSET_URL_PATTERNS = [
 # --------------------------------------------------------------------------
 DEFAULT_HOST_RPS = 1.0
 DEFAULT_HOST_BURST = 5
-DEFAULT_GLOBAL_RPS = 10.0
 DEFAULT_ROUND_SECONDS = 60.0   # one frontier round ≙ 60 s of wall-clock budget
 MAX_RETRIES = 3                # scraping.py:134
 

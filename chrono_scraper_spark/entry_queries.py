@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession
 
 from chrono_scraper_spark.queries.q_crawl import *  # noqa: F401,F403
 from chrono_scraper_spark.queries.q_analytics import *  # noqa: F401,F403
@@ -35,15 +35,8 @@ from chrono_scraper_spark.queries.q_quality import *  # noqa: F401,F403
 from chrono_scraper_spark.queries.q_graph_sketch import *  # noqa: F401,F403
 from chrono_scraper_spark.queries.q_topics import *  # noqa: F401,F403
 
-# compat re-exports (underscore helpers used by __spark_entry__ and tests)
-from chrono_scraper_spark.queries._shared import (  # noqa: F401
-    _PRELUDE,
-    _SCHEDULED,
-    _cand,
-    _decided,
-    _scheduled,
-    _t,
-)
+# compat re-export: __spark_entry__.entry builds on the scheduled frontier
+from chrono_scraper_spark.queries._shared import _scheduled  # noqa: F401
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # --- positions 1-42: every query with no driver-green CORRECTNESS
@@ -335,46 +328,28 @@ ORACLES: dict[str, str] = {
 }
 
 from chrono_scraper_spark.queries import recommend as _qrec  # noqa: E402
-from chrono_scraper_spark.queries import q_service as _qsvc  # noqa: E402
-from chrono_scraper_spark.queries import q_validate as _qval  # noqa: E402
-from chrono_scraper_spark.queries import q_access as _qacc  # noqa: E402
-from chrono_scraper_spark.queries import q_compliance as _qcmp  # noqa: E402
 from chrono_scraper_spark.queries import q_dashboard as _qdash  # noqa: E402
 from chrono_scraper_spark.queries import q_keys as _qkeys  # noqa: E402
 from chrono_scraper_spark.queries import q_plans as _qpl  # noqa: E402
 from chrono_scraper_spark.queries import q_queryplan as _qqp  # noqa: E402
-from chrono_scraper_spark.queries import q_user_admin as _qua  # noqa: E402
-from chrono_scraper_spark.queries import q_rbac as _qrb  # noqa: E402
 from chrono_scraper_spark.queries import q_batchsched as _qbs  # noqa: E402
 from chrono_scraper_spark.queries import q_optimizer as _qoz  # noqa: E402
 from chrono_scraper_spark.queries import q_cachemgr as _qcm  # noqa: E402
 
 QUERIES.update(_qrec.QUERIES)
-QUERIES.update(_qsvc.QUERIES)
-QUERIES.update(_qval.QUERIES)
-QUERIES.update(_qacc.QUERIES)
-QUERIES.update(_qcmp.QUERIES)
 QUERIES.update(_qdash.QUERIES)
 QUERIES.update(_qkeys.QUERIES)
 QUERIES.update(_qpl.QUERIES)
 QUERIES.update(_qqp.QUERIES)
-QUERIES.update(_qua.QUERIES)
-QUERIES.update(_qrb.QUERIES)
 QUERIES.update(_qbs.QUERIES)
 QUERIES.update(_qoz.QUERIES)
 QUERIES.update(_qcm.QUERIES)
 
 ORACLES.update(_qrec.ORACLES)
-ORACLES.update(_qsvc.ORACLES)
-ORACLES.update(_qval.ORACLES)
-ORACLES.update(_qacc.ORACLES)
-ORACLES.update(_qcmp.ORACLES)
 ORACLES.update(_qdash.ORACLES)
 ORACLES.update(_qkeys.ORACLES)
 ORACLES.update(_qpl.ORACLES)
 ORACLES.update(_qqp.ORACLES)
-ORACLES.update(_qua.ORACLES)
-ORACLES.update(_qrb.ORACLES)
 ORACLES.update(_qbs.ORACLES)
 ORACLES.update(_qoz.ORACLES)
 ORACLES.update(_qcm.ORACLES)
@@ -391,19 +366,6 @@ _R5_WINDOW = [
     "wat_identity", "pct_normalize", "script_profile", "image_near_dups",
     "recommend_content", "trending_pages", "search_suggest",
     "discover_domains",
-    # round-5 service families: cost model, investigation compare,
-    # engagement, data validation, access control, audit retention
-    # (never driver-checked — new this round) (14)
-    "cost_estimate", "project_cost", "page_compare",
-    "page_compare_fields", "user_engagement",
-    "consistency_rowcount", "consistency_hash", "consistency_rules",
-    "entity_link", "audit_security",
-    "accessible_pages", "shared_pages_stats", "retention_assign",
-    "retention_summary",
-    # compliance reporting (never driver-checked — new this round) (3):
-    # the last three staple slots go to coverage; every staple was
-    # driver-green in r1-r2 and stays in the local check_oracles sweep
-    "compliance_violations", "compliance_status", "compliance_score",
 ]
 
 def _window_order(d: dict) -> dict:

@@ -33,7 +33,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from chrono_scraper_spark.operators.dashboard import _floor_div
 

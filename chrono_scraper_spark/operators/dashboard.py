@@ -14,8 +14,8 @@ Determinism conventions shared with the other service families:
 * rates are integer milli-units (``activity_rate_milli`` = rate·1000
   as an exact floor) instead of the reference's ``round(x, 2)`` floats,
   keeping the driver's value-hash stable across engines;
-* planted user attributes reuse ``user_engagement``'s rules
-  (user_analytics.py parity): verified ⇔ ``user_id % 2 = 0``,
+* planted user attributes follow user_analytics.py:
+  verified ⇔ ``user_id % 2 = 0``,
   approved ⇔ ``user_id % 3 <> 0``.
 
 Scale shape: every metric is a map-side-combinable hash aggregation
@@ -230,21 +230,29 @@ def growth_rates(events: DataFrame, pages: DataFrame) -> DataFrame:
     )
 
 
+def host_project(host: F.Column) -> F.Column:
+    """Planted owning project of a host, derived from the host alone so
+    Spark and the DuckDB oracle agree (the reference reads it from its
+    Domain/Project rows)."""
+    return (F.when(host.endswith(".edu"), "academic")
+            .when(host.endswith(".gov"), "government")
+            .otherwise("web"))
+
+
 def top_domains_projects(pages: DataFrame) -> DataFrame:
     """Top-10 domains by page count and top-10 projects by activity
     (dashboard_metrics.py:692-738), one frame with a ``kind``
-    discriminator. Projects are the planted host→project mapping the
-    cost family uses (``operators/costing.py`` domain_config). Rank
-    ties break on name ascending so the cut is deterministic.
+    discriminator. Projects are the planted host→project mapping
+    (:func:`host_project`). Rank ties break on name ascending so the cut
+    is deterministic.
     """
-    from chrono_scraper_spark.operators.costing import domain_config
     from pyspark.sql.window import Window
 
     host_counts = pages.groupBy("host").agg(
         F.count(F.lit(1)).alias("page_count"))
     proj_counts = (
         host_counts
-        .withColumn("project", domain_config(F.col("host"))["project"])
+        .withColumn("project", host_project(F.col("host")))
         .groupBy("project")
         .agg(F.sum("page_count").alias("page_count"))
     )

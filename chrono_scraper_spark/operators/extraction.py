@@ -618,7 +618,7 @@ def with_extraction_cached(
 
     At 100 TB the win is the steady-state recrawl: the per-page Python
     kernel runs only for the changed-content fraction; unchanged pages cost
-    one hash-join probe. MEASURED caveat (scripts/bench_extract_cache.py,
+    one hash-join probe. MEASURED caveat (cache join vs inline recompute,
     BENCH.md): the pinned contract kernel is so cheap (~13 us/page) that
     recompute beats the cache join (~41 us/page fixed) — hence
     ``CrawlJob(extract_cache=False)`` by default. The cache is for the

@@ -18,7 +18,7 @@ Planted determinism (so Spark and the DuckDB oracle agree):
   6-8 flash, 0-5 spark;
 * projects: the distinct planted project ids
   ``(event_id·13 + 7) mod 1000`` among ``purchase`` events
-  (user_engagement's convention);
+  (a planted convention);
 * "today" = the global max event date; pages scraped today = the
   user's ``view`` events on that date × a planted burst factor
   (``BURST``) so the daily limit has rows on both sides; concurrent

@@ -66,7 +66,7 @@ def project_efficiency(pages: DataFrame) -> DataFrame:
     deduplication pass detects (:233-380); captures with a non-200
     status among the rest are *already processing*; the remainder is
     *to scrape*. Projects are the planted host→project mapping the
-    cost family uses (operators/costing.py domain_config).
+    dashboard family uses (operators/dashboard.py host_project).
 
     The reference's round(x, 2) percentages are exact milli floors:
     scraping_reduction = linked/(linked+to_scrape), time saved =
@@ -77,11 +77,9 @@ def project_efficiency(pages: DataFrame) -> DataFrame:
     Scale shape: one digest-keyed aggregation (distinct projects per
     digest), a broadcast-back join, then a project-sized rollup.
     """
-    from chrono_scraper_spark.operators.costing import domain_config
-    from chrono_scraper_spark.operators.dashboard import _floor_div
+    from chrono_scraper_spark.operators.dashboard import _floor_div, host_project
 
-    tagged = pages.withColumn(
-        "project", domain_config(F.col("host"))["project"])
+    tagged = pages.withColumn("project", host_project(F.col("host")))
     share = tagged.groupBy("digest").agg(
         F.countDistinct("project").alias("_nproj"))
     d = tagged.join(share, "digest")

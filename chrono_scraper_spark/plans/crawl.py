@@ -370,6 +370,7 @@ class CrawlJob:
         # (injected ``discovered``) can re-present an already-filtered
         # capture, so they keep the unconditional probe.
         from concurrent.futures import ThreadPoolExecutor
+        from concurrent.futures import wait as futures_wait
 
         from .catalog import _UNSET as _CAT_UNSET
 
@@ -402,268 +403,272 @@ class CrawlJob:
         _filtered_pool.shutdown(wait=False)
         _tick("commit_filtered_log")
 
-        # politeness budget split (P4/W5)
-        sched = schedule_round(
-            pending, round_idx=round_idx, rps=self.rps, burst=self.burst,
-            round_seconds=self.round_seconds,
-            budget_overrides=round_budget_overrides,
-            prune_salt_k=self.schedule_prune_k,
-        ).cache()
-        scheduled = sched.filter(F.col("sched_status") == "scheduled")
-        deferred = sched.filter(F.col("sched_status") == "deferred")
+        try:
+            # politeness budget split (P4/W5)
+            sched = schedule_round(
+                pending, round_idx=round_idx, rps=self.rps, burst=self.burst,
+                round_seconds=self.round_seconds,
+                budget_overrides=round_budget_overrides,
+                prune_salt_k=self.schedule_prune_k,
+            ).cache()
+            scheduled = sched.filter(F.col("sched_status") == "scheduled")
+            deferred = sched.filter(F.col("sched_status") == "deferred")
 
-        # deterministic global crawl order within the round (P1).
-        # with_global_order is eager (range exchange + cache + per-partition
-        # count collect), so this tick cleanly splits the politeness windows
-        # + ordering from the fetch/extract work below
-        scheduled = with_global_order(scheduled)
-        go_cache = getattr(scheduled, "_global_order_cache", None)
-        _tick("schedule_order")
+            # deterministic global crawl order within the round (P1).
+            # with_global_order is eager (range exchange + cache + per-partition
+            # count collect), so this tick cleanly splits the politeness windows
+            # + ordering from the fetch/extract work below
+            scheduled = with_global_order(scheduled)
+            go_cache = getattr(scheduled, "_global_order_cache", None)
+            _tick("schedule_order")
 
-        # FETCH: the frontier is metadata-only; payloads join back for the
-        # scheduled subset. Broadcasting the scheduled keys keeps the
-        # (payload-heavy) corpus side unshuffled — html moves zero times
-        # before extraction. At 10^10 scale with a >1e7-row schedule, swap
-        # the broadcast for a bucketed join on url (pages table bucketed by
-        # url at write time) — same code path minus the hint. In live-fetch
-        # mode (origin HTTP), with_salted_host_partition distributes the
-        # scheduled set instead (P8; operator tested separately).
-        if "retry_count" not in scheduled.columns:
-            scheduled = scheduled.withColumn("retry_count",
-                                             F.lit(0).cast("int"))
-        # ONE aggregation over the sched cache serves three counters:
-        # n_sched (salt sizing below), counters["deferred"], and — by
-        # arithmetic, since pending = scheduled + deferred —
-        # counters["filtered"] = decided - pending. The former shape ran
-        # three separate count jobs over the same cached frame (guide §1:
-        # don't re-scan for numbers one pass already knows).
-        sched_counts = {r["sched_status"]: r["count"] for r in
-                        sched.groupBy("sched_status").count().collect()}
-        n_sched = int(sched_counts.get("scheduled", 0))
-        n_deferred = int(sched_counts.get("deferred", 0))
-        parallelism = self.spark.sparkContext.defaultParallelism
-        salt_target = self.salt_target_rows or max(
-            200, n_sched // max(1, parallelism * 4))
-        if self.fetch_mode == "http":
-            # S7 live fetch: no corpus join — salt the scheduled set over
-            # (host, salt) so each host's requests serialize in one
-            # partition (fetch_http paces them), mega-hosts split to their
-            # budget-capped salt groups, and the cluster stays wide. Failed
-            # fetches come back html=NULL and terminalize through the
-            # extractor's dead-letter path exactly like replay's
-            # missing-payload rows.
-            work = with_salted_host_partition(
-                scheduled, target_rows_per_partition=salt_target)
-            # http_status/fetch_err are KEPT: fetch_log needs them to
-            # distinguish a definitive 404 from a transient timeout, and
-            # the transient-retry split below gates on them (the
-            # reference retries transport errors, not hard 4xx —
-            # shared_pages_scraping.py retry policy)
-            work = fetch_http(work, **self.http_fetch)
-        else:
-            pages_raw = read_pages(self.spark, self.pages_path)
-            # bucketed-table corpora store ts14; selecting the STORED
-            # column (not a re-derived expression) keeps the join key equal
-            # to the bucket key, so the scan's HashPartitioning satisfies
-            # the join's required distribution — no payload-side Exchange
-            if "ts14" in pages_raw.columns:
-                payload = pages_raw.select("url", "ts14", "html")
-            else:
-                payload = pages_raw.select(
-                    "url",
-                    F.date_format("warc_ts", "yyyyMMddHHmmss").alias("ts14"),
-                    "html")
-            bucketed = self.pages_path.startswith("table:")
-            # broadcast only while the scheduled set is genuinely small;
-            # above the cutoff, a bucketed corpus table keeps the join
-            # bucket-local (only the metadata-sized scheduled set shuffles
-            # into the buckets), and a plain parquet corpus falls back to a
-            # full shuffle join
-            broadcasting = self.broadcast_fetch_join and n_sched <= 500_000
-            if broadcasting:
-                work = payload.join(F.broadcast(scheduled), ["url", "ts14"],
-                                    "inner")
-            else:
-                work = payload.join(scheduled, ["url", "ts14"], "inner")
-            # Scheduled rows with no matching payload (partial-corpus mode)
-            # must still terminalize: give them a null payload so the
-            # extractor marks them failed — they enter fetch_log + url_seen
-            # instead of silently vanishing from the inner join.
-            missing = (scheduled
-                       .join(payload.select("url", "ts14"), ["url", "ts14"],
-                             "left_anti")
-                       .withColumn("html", F.lit(None).cast("binary")))
-            work = work.unionByName(missing, allowMissingColumns=True)
-            # P8 / extraction partitioning. Replay mode with a broadcast
-            # fetch-join needs NO repartition: the join output inherits the
-            # corpus scan's parquet splits, which are BYTE-balanced
-            # regardless of host skew (extraction cost ∝ bytes), and the
-            # payloads never shuffle. Only when the map side is too coarse
-            # to feed the cluster (few splits), or when the payloads were
-            # shuffle-joined anyway, is the work salted over (host, salt) —
-            # with the per-partition target sized to the round (≈4
-            # tasks/core), not a fixed constant: a fixed 50k target gave one
-            # 30k-row mega-host partition a 7-8 s straggler.
-            scan_parts = payload.rdd.getNumPartitions()
-            # bucketed corpora behave like the broadcast case: the join
-            # output inherits the bucket partitioning (url-hash — byte-
-            # balanced regardless of host skew), so no salting repartition
-            # unless the bucket count is too coarse to feed the cluster
-            if (not (broadcasting or bucketed)
-                    or scan_parts < max(2, parallelism * 3 // 4)):
+            # FETCH: the frontier is metadata-only; payloads join back for the
+            # scheduled subset. Broadcasting the scheduled keys keeps the
+            # (payload-heavy) corpus side unshuffled — html moves zero times
+            # before extraction. At 10^10 scale with a >1e7-row schedule, swap
+            # the broadcast for a bucketed join on url (pages table bucketed by
+            # url at write time) — same code path minus the hint. In live-fetch
+            # mode (origin HTTP), with_salted_host_partition distributes the
+            # scheduled set instead (P8; operator tested separately).
+            if "retry_count" not in scheduled.columns:
+                scheduled = scheduled.withColumn("retry_count",
+                                                 F.lit(0).cast("int"))
+            # ONE aggregation over the sched cache serves three counters:
+            # n_sched (salt sizing below), counters["deferred"], and — by
+            # arithmetic, since pending = scheduled + deferred —
+            # counters["filtered"] = decided - pending. The former shape ran
+            # three separate count jobs over the same cached frame (guide §1:
+            # don't re-scan for numbers one pass already knows).
+            sched_counts = {r["sched_status"]: r["count"] for r in
+                            sched.groupBy("sched_status").count().collect()}
+            n_sched = int(sched_counts.get("scheduled", 0))
+            n_deferred = int(sched_counts.get("deferred", 0))
+            parallelism = self.spark.sparkContext.defaultParallelism
+            salt_target = self.salt_target_rows or max(
+                200, n_sched // max(1, parallelism * 4))
+            if self.fetch_mode == "http":
+                # S7 live fetch: no corpus join — salt the scheduled set over
+                # (host, salt) so each host's requests serialize in one
+                # partition (fetch_http paces them), mega-hosts split to their
+                # budget-capped salt groups, and the cluster stays wide. Failed
+                # fetches come back html=NULL and terminalize through the
+                # extractor's dead-letter path exactly like replay's
+                # missing-payload rows.
                 work = with_salted_host_partition(
-                    work, target_rows_per_partition=salt_target)
-        # uniform fetch-provenance columns: replay mode has no HTTP layer,
-        # so its rows carry NULLs (a missing payload is transport-shaped —
-        # unknown status — matching the transient gate below)
-        if "http_status" not in work.columns:
-            work = (work
-                    .withColumn("http_status", F.lit(None).cast("int"))
-                    .withColumn("fetch_err", F.lit(None).cast("string")))
-        # html is consumed by the extraction UDF and nothing after it —
-        # dropping it before the cache keeps ~half the cached bytes (5 KB
-        # payload/row) out of memory and out of every downstream read
-        if self.extract_cache:
-            # E11: payload-hash cache table — unchanged payloads across
-            # rounds/recrawls skip the Arrow kernel (extraction.py docstring)
-            extracted = with_extraction_cached(work, self.cat).drop("html")
-        else:
-            extracted = with_extraction(work).drop("html")
-        extracted = with_quality_score(
-            extracted, "extracted.text").cache()
+                    scheduled, target_rows_per_partition=salt_target)
+                # http_status/fetch_err are KEPT: fetch_log needs them to
+                # distinguish a definitive 404 from a transient timeout, and
+                # the transient-retry split below gates on them (the
+                # reference retries transport errors, not hard 4xx —
+                # shared_pages_scraping.py retry policy)
+                work = fetch_http(work, **self.http_fetch)
+            else:
+                pages_raw = read_pages(self.spark, self.pages_path)
+                # bucketed-table corpora store ts14; selecting the STORED
+                # column (not a re-derived expression) keeps the join key equal
+                # to the bucket key, so the scan's HashPartitioning satisfies
+                # the join's required distribution — no payload-side Exchange
+                if "ts14" in pages_raw.columns:
+                    payload = pages_raw.select("url", "ts14", "html")
+                else:
+                    payload = pages_raw.select(
+                        "url",
+                        F.date_format("warc_ts", "yyyyMMddHHmmss").alias("ts14"),
+                        "html")
+                bucketed = self.pages_path.startswith("table:")
+                # broadcast only while the scheduled set is genuinely small;
+                # above the cutoff, a bucketed corpus table keeps the join
+                # bucket-local (only the metadata-sized scheduled set shuffles
+                # into the buckets), and a plain parquet corpus falls back to a
+                # full shuffle join
+                broadcasting = self.broadcast_fetch_join and n_sched <= 500_000
+                if broadcasting:
+                    work = payload.join(F.broadcast(scheduled), ["url", "ts14"],
+                                        "inner")
+                else:
+                    work = payload.join(scheduled, ["url", "ts14"], "inner")
+                # Scheduled rows with no matching payload (partial-corpus mode)
+                # must still terminalize: give them a null payload so the
+                # extractor marks them failed — they enter fetch_log + url_seen
+                # instead of silently vanishing from the inner join.
+                missing = (scheduled
+                           .join(payload.select("url", "ts14"), ["url", "ts14"],
+                                 "left_anti")
+                           .withColumn("html", F.lit(None).cast("binary")))
+                work = work.unionByName(missing, allowMissingColumns=True)
+                # P8 / extraction partitioning. Replay mode with a broadcast
+                # fetch-join needs NO repartition: the join output inherits the
+                # corpus scan's parquet splits, which are BYTE-balanced
+                # regardless of host skew (extraction cost ∝ bytes), and the
+                # payloads never shuffle. Only when the map side is too coarse
+                # to feed the cluster (few splits), or when the payloads were
+                # shuffle-joined anyway, is the work salted over (host, salt) —
+                # with the per-partition target sized to the round (≈4
+                # tasks/core), not a fixed constant: a fixed 50k target gave one
+                # 30k-row mega-host partition a 7-8 s straggler.
+                scan_parts = payload.rdd.getNumPartitions()
+                # bucketed corpora behave like the broadcast case: the join
+                # output inherits the bucket partitioning (url-hash — byte-
+                # balanced regardless of host skew), so no salting repartition
+                # unless the bucket count is too coarse to feed the cluster
+                if (not (broadcasting or bucketed)
+                        or scan_parts < max(2, parallelism * 3 // 4)):
+                    work = with_salted_host_partition(
+                        work, target_rows_per_partition=salt_target)
+            # uniform fetch-provenance columns: replay mode has no HTTP layer,
+            # so its rows carry NULLs (a missing payload is transport-shaped —
+            # unknown status — matching the transient gate below)
+            if "http_status" not in work.columns:
+                work = (work
+                        .withColumn("http_status", F.lit(None).cast("int"))
+                        .withColumn("fetch_err", F.lit(None).cast("string")))
+            # html is consumed by the extraction UDF and nothing after it —
+            # dropping it before the cache keeps ~half the cached bytes (5 KB
+            # payload/row) out of memory and out of every downstream read
+            if self.extract_cache:
+                # E11: payload-hash cache table — unchanged payloads across
+                # rounds/recrawls skip the Arrow kernel (extraction.py docstring)
+                extracted = with_extraction_cached(work, self.cat).drop("html")
+            else:
+                extracted = with_extraction(work).drop("html")
+            extracted = with_quality_score(
+                extracted, "extracted.text").cache()
 
-        # T7: transient-retry split — failed rows below the retry cap
-        # re-enter the next round's frontier instead of terminalizing.
-        # Only TRANSIENT failures retry: transport-level (http_status NULL —
-        # timeout/refused/missing payload) or retryable statuses; a
-        # definitive 404/410 terminalizes immediately (the reference's
-        # retry policy covers transport errors, not hard 4xx)
-        transient = (F.col("http_status").isNull()
-                     | F.col("http_status").isin(429, 500, 502, 503, 504))
-        if self.retry_transient:
-            retryable = extracted.filter(
-                (F.col("fetch_status") == C.STATUS_FAILED)
-                & transient
-                & (F.col("retry_count") < self.max_retries))
-            terminal = extracted.filter(
-                (F.col("fetch_status") != C.STATUS_FAILED)
-                | ~transient
-                | (F.col("retry_count") >= self.max_retries))
-        else:
-            retryable = extracted.limit(0)
-            terminal = extracted
+            # T7: transient-retry split — failed rows below the retry cap
+            # re-enter the next round's frontier instead of terminalizing.
+            # Only TRANSIENT failures retry: transport-level (http_status NULL —
+            # timeout/refused/missing payload) or retryable statuses; a
+            # definitive 404/410 terminalizes immediately (the reference's
+            # retry policy covers transport errors, not hard 4xx)
+            transient = (F.col("http_status").isNull()
+                         | F.col("http_status").isin(429, 500, 502, 503, 504))
+            if self.retry_transient:
+                retryable = extracted.filter(
+                    (F.col("fetch_status") == C.STATUS_FAILED)
+                    & transient
+                    & (F.col("retry_count") < self.max_retries))
+                terminal = extracted.filter(
+                    (F.col("fetch_status") != C.STATUS_FAILED)
+                    | ~transient
+                    | (F.col("retry_count") >= self.max_retries))
+            else:
+                retryable = extracted.limit(0)
+                terminal = extracted
 
-        # per-partition lineage: rows extracted per (host-salted) partition —
-        # this action also materializes the extraction cache. fetch_status
-        # rides in the same aggregation so the later status counters need no
-        # second scan of the cache (one job instead of two).
-        part_status = (
-            extracted.groupBy(F.spark_partition_id().alias("pid"),
-                              "fetch_status")
-            .count().collect()
-        )
-        pid_totals: dict[int, int] = {}
-        status_totals: dict[str, int] = {}
-        for r in part_status:
-            pid_totals[r["pid"]] = pid_totals.get(r["pid"], 0) + r["count"]
-            status_totals[r["fetch_status"]] = (
-                status_totals.get(r["fetch_status"], 0) + r["count"])
-        part_counts = [{"pid": pid, "count": pid_totals[pid]}
-                       for pid in sorted(pid_totals)]
-        # the extraction cache is materialized now — the range-partitioned
-        # global-order cache behind it is no longer needed
-        if go_cache is not None:
-            go_cache.unpersist()
-        _tick("fetch_extract")
+            # per-partition lineage: rows extracted per (host-salted) partition —
+            # this action also materializes the extraction cache. fetch_status
+            # rides in the same aggregation so the later status counters need no
+            # second scan of the cache (one job instead of two).
+            part_status = (
+                extracted.groupBy(F.spark_partition_id().alias("pid"),
+                                  "fetch_status")
+                .count().collect()
+            )
+            pid_totals: dict[int, int] = {}
+            status_totals: dict[str, int] = {}
+            for r in part_status:
+                pid_totals[r["pid"]] = pid_totals.get(r["pid"], 0) + r["count"]
+                status_totals[r["fetch_status"]] = (
+                    status_totals.get(r["fetch_status"], 0) + r["count"])
+            part_counts = [{"pid": pid, "count": pid_totals[pid]}
+                           for pid in sorted(pid_totals)]
+            # the extraction cache is materialized now — the range-partitioned
+            # global-order cache behind it is no longer needed
+            if go_cache is not None:
+                go_cache.unpersist()
+            _tick("fetch_extract")
 
-        counters["scheduled"] = sum(r["count"] for r in part_counts)
-        counters["deferred"] = n_deferred
-        # pending = scheduled + deferred, so the filtered count is pure
-        # arithmetic over numbers already collected — no job
-        counters["filtered"] = counters["decided"] - n_sched - n_deferred
-        counters["completed"] = int(status_totals.get(C.STATUS_COMPLETED, 0))
-        counters["failed"] = int(status_totals.get(C.STATUS_FAILED, 0))
-        _tick("counters")
+            counters["scheduled"] = sum(r["count"] for r in part_counts)
+            counters["deferred"] = n_deferred
+            # pending = scheduled + deferred, so the filtered count is pure
+            # arithmetic over numbers already collected — no job
+            counters["filtered"] = counters["decided"] - n_sched - n_deferred
+            counters["completed"] = int(status_totals.get(C.STATUS_COMPLETED, 0))
+            counters["failed"] = int(status_totals.get(C.STATUS_FAILED, 0))
+            _tick("counters")
 
-        # ---- commits (all idempotent MERGEs; lineage row last) ----
-        # The four table commits are independent (different tables, all
-        # projections of the materialized extraction cache), so they run as
-        # CONCURRENT Spark jobs from a small thread pool — write stalls of
-        # one commit fill with compute/IO of another; ordering only matters
-        # for the lineage row, which still commits strictly last.
-        # fetch_log records every ATTEMPT: keyed per round so retried rows
-        # appear once per attempt, and a replayed round converges
-        fetch_rows = extracted.select(
-            F.lit(round_idx).alias("round_idx"), "seq", "url", "url_canon",
-            "ts14", "host", "digest", "length",
-            F.col("decision.priority_score").alias("priority_score"),
-            F.col("decision.reason").alias("filter_reason"),
-            "fetch_status", "retry_count", "http_status", "fetch_err",
-            F.col("extracted.word_count").alias("word_count"),
-            F.col("extracted.method").alias("extract_method"),
-        )
-        # only terminal outcomes enter the seen set — a retryable failure
-        # must stay eligible for the next round's anti-join
-        seen_rows = terminal.select(
-            "url_canon", "ts14", "url",
-            F.col("fetch_status").alias("status"),
-            F.lit(round_idx).alias("first_seen_round"),
-        )
-        completed = extracted.filter(F.col("fetch_status") == C.STATUS_COMPLETED)
-        pages_out = completed.select(
-            "url", "url_canon", "ts14", "host", "warc_ts", "lang", "digest",
-            F.col("extracted.text").alias("extracted_text"),
-            F.col("extracted.title").alias("title"),
-            F.col("extracted.word_count").alias("word_count"),
-            "quality_score",
-            F.lit(round_idx).alias("round_idx"), "seq",
-        )
-        # page_index is NOT a separate table: it is a projection of
-        # pages_out (operators/index.py::page_index_from_pages_out) —
-        # committing it would write the full text content twice per round
-        page_index = build_page_index(completed)
-        inv = build_inverted_terms(page_index, doc_key="seq")
+            # ---- commits (all idempotent MERGEs; lineage row last) ----
+            # The four table commits are independent (different tables, all
+            # projections of the materialized extraction cache), so they run as
+            # CONCURRENT Spark jobs from a small thread pool — write stalls of
+            # one commit fill with compute/IO of another; ordering only matters
+            # for the lineage row, which still commits strictly last.
+            # fetch_log records every ATTEMPT: keyed per round so retried rows
+            # appear once per attempt, and a replayed round converges
+            fetch_rows = extracted.select(
+                F.lit(round_idx).alias("round_idx"), "seq", "url", "url_canon",
+                "ts14", "host", "digest", "length",
+                F.col("decision.priority_score").alias("priority_score"),
+                F.col("decision.reason").alias("filter_reason"),
+                "fetch_status", "retry_count", "http_status", "fetch_err",
+                F.col("extracted.word_count").alias("word_count"),
+                F.col("extracted.method").alias("extract_method"),
+            )
+            # only terminal outcomes enter the seen set — a retryable failure
+            # must stay eligible for the next round's anti-join
+            seen_rows = terminal.select(
+                "url_canon", "ts14", "url",
+                F.col("fetch_status").alias("status"),
+                F.lit(round_idx).alias("first_seen_round"),
+            )
+            completed = extracted.filter(F.col("fetch_status") == C.STATUS_COMPLETED)
+            pages_out = completed.select(
+                "url", "url_canon", "ts14", "host", "warc_ts", "lang", "digest",
+                F.col("extracted.text").alias("extracted_text"),
+                F.col("extracted.title").alias("title"),
+                F.col("extracted.word_count").alias("word_count"),
+                "quality_score",
+                F.lit(round_idx).alias("round_idx"), "seq",
+            )
+            # page_index is NOT a separate table: it is a projection of
+            # pages_out (operators/index.py::page_index_from_pages_out) —
+            # committing it would write the full text content twice per round
+            page_index = build_page_index(completed)
+            inv = build_inverted_terms(page_index, doc_key="seq")
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        # Key-newness of each delta is already proven by the round-start
-        # anti-join against url_seen@pinned (a key that ever terminalized is
-        # in url_seen; fetch_log keys carry the fresh round_idx), so when a
-        # table still sits at its pinned version the merge skips the
-        # existing-key probe — commit cost O(delta), not O(accumulated
-        # table). A torn-round replay advances the version and the merge
-        # falls back to the exact anti-join (same converged state).
-        # filtered_log (above) keeps the probe unconditionally: filtered
-        # keys never enter url_seen and may re-present across rounds.
-        # seen_digests: the decision chain's already_processed set as its
-        # own incrementally-deduped table (read next round WITHOUT the old
-        # per-round fetch_log→distinct shuffle). A digest in the pinned set
-        # can't re-complete (its candidates get already_processed), so the
-        # delta is proven-new; within-round duplicates are possible only in
-        # streaming (a new capture sharing a deferred row's digest), hence
-        # assume_unique=False — the dedup shuffle is delta-sized.
-        digest_rows = (completed.select("digest")
-                       .filter(F.col("digest").isNotNull()))
-        commit_jobs = [
-            ("fetch_log", fetch_rows, ["round_idx", *FRONTIER_KEY], True),
-            ("url_seen", seen_rows, FRONTIER_KEY, True),
-            ("pages_out", pages_out, FRONTIER_KEY, True),
-            ("inverted_terms", inv, ["term", "url_canon", "ts14"], True),
-            ("seen_digests", digest_rows, ["digest"], False),
-        ]
-        with ThreadPoolExecutor(max_workers=len(commit_jobs)) as pool:
-            futs = [
-                pool.submit(self.cat.merge_not_matched, table, df, keys,
-                            properties={"round_idx": round_idx},
-                            assume_unique=uniq,
-                            expect_version=prev.get(table))
-                for table, df, keys, uniq in commit_jobs
+            # Key-newness of each delta is already proven by the round-start
+            # anti-join against url_seen@pinned (a key that ever terminalized is
+            # in url_seen; fetch_log keys carry the fresh round_idx), so when a
+            # table still sits at its pinned version the merge skips the
+            # existing-key probe — commit cost O(delta), not O(accumulated
+            # table). A torn-round replay advances the version and the merge
+            # falls back to the exact anti-join (same converged state).
+            # filtered_log (above) keeps the probe unconditionally: filtered
+            # keys never enter url_seen and may re-present across rounds.
+            # seen_digests: the decision chain's already_processed set as its
+            # own incrementally-deduped table (read next round WITHOUT the old
+            # per-round fetch_log→distinct shuffle). A digest in the pinned set
+            # can't re-complete (its candidates get already_processed), so the
+            # delta is proven-new; within-round duplicates are possible only in
+            # streaming (a new capture sharing a deferred row's digest), hence
+            # assume_unique=False — the dedup shuffle is delta-sized.
+            digest_rows = (completed.select("digest")
+                           .filter(F.col("digest").isNotNull()))
+            commit_jobs = [
+                ("fetch_log", fetch_rows, ["round_idx", *FRONTIER_KEY], True),
+                ("url_seen", seen_rows, FRONTIER_KEY, True),
+                ("pages_out", pages_out, FRONTIER_KEY, True),
+                ("inverted_terms", inv, ["term", "url_canon", "ts14"], True),
+                ("seen_digests", digest_rows, ["digest"], False),
             ]
-            for f in futs:
-                f.result()
-        # the background filtered_log commit (submitted before the
-        # schedule phase) must land before the lineage row pins versions
-        filtered_log_fut.result()
+            with ThreadPoolExecutor(max_workers=len(commit_jobs)) as pool:
+                futs = [
+                    pool.submit(self.cat.merge_not_matched, table, df, keys,
+                                properties={"round_idx": round_idx},
+                                assume_unique=uniq,
+                                expect_version=prev.get(table))
+                    for table, df, keys, uniq in commit_jobs
+                ]
+                for f in futs:
+                    f.result()
+            # the background filtered_log commit (submitted before the
+            # schedule phase) must land before the lineage row pins versions
+            filtered_log_fut.result()
+        finally:
+            # no background commit outlives a failed round: a retry in
+            # this process could otherwise allocate the same filtered_log
+            # version while the orphaned merge is still writing it
+            futures_wait([filtered_log_fut])
         _tick("commit_tables")
 
         # the open frontier = deferred rows ∪ retryable failures (with

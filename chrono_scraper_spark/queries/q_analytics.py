@@ -5,41 +5,9 @@ Split from entry_queries.py (round 5) — same definitions, same oracles.
 
 from __future__ import annotations
 
-
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-
-from chrono_scraper_spark import config as C
-from chrono_scraper_spark.corpus import PAGES_CTE_DUCK, cdx_pages_view
+from chrono_scraper_spark.corpus import cdx_pages_view
 from chrono_scraper_spark.functions import oracle_gen as OG
-from chrono_scraper_spark.functions import textops as T
-from chrono_scraper_spark.functions.urls import (
-    url_depth,
-    url_extension,
-    url_host,
-    url_path,
-)
 from chrono_scraper_spark.operators import analytics as A
-from chrono_scraper_spark.operators import ann as ANN
-from chrono_scraper_spark.operators import intervals as IV
-from chrono_scraper_spark.operators import pii as PII
-from chrono_scraper_spark.operators import text_dedup as TD
-from chrono_scraper_spark.operators import url_quality as UQ
-from chrono_scraper_spark.operators.asof import asof_join
-from chrono_scraper_spark.operators.dedup import (
-    anti_join_seen,
-    bloom_prefilter_anti_join,
-    categorize_against_registry,
-    collapse_digest,
-    cuckoo_prefilter_anti_join,
-    snapshot_diff,
-)
-from chrono_scraper_spark.operators.filters import filter_stats, with_filter_decision
-from chrono_scraper_spark.operators.index import build_inverted_terms, tokenize
-from chrono_scraper_spark.operators.politeness import schedule_round, with_global_order
-
 
 from ._shared import _PRELUDE
 

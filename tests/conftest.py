@@ -1,7 +1,7 @@
 """Shared SparkSession for the suite (session-scoped, local[4]).
 
-Small-core master keeps per-test overhead low; scale behavior is exercised
-separately by bench.py at local[8]/local[32].
+Small-core master keeps per-test overhead low; end-to-end speed is measured
+separately by perfbench/run.py (see perfbench/README.md).
 """
 
 from __future__ import annotations

@@ -4,6 +4,8 @@ resume from snapshots, torn-round replay, full-text search over the result.
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from chrono_scraper_spark.corpus import generate_pages
@@ -119,6 +121,48 @@ def test_torn_round_replay(spark, tmp_path, corpus_path, seeds):
     assert replay.next_round() == 1  # the torn round is not "done"
     replay.run(max_rounds=50)
     assert _engine_state(ref.cat) == _engine_state(replay.cat)
+
+
+def test_failed_round_awaits_filtered_log_commit(spark, tmp_path, corpus_path,
+                                                 seeds, monkeypatch):
+    """The filtered_log MERGE runs in the background while the round
+    schedules and fetches. If a later stage raises, run_round must not
+    return before that merge has landed: a retry in the same process would
+    otherwise race the orphaned writer for the same table version. The
+    retried crawl must converge to the oracle."""
+    from chrono_scraper_spark.plans import crawl as crawl_mod
+
+    job = _job(spark, tmp_path, corpus_path, seeds, "wh_fail")
+    merge = job.cat.merge_not_matched
+    landed = []
+
+    def slow_merge(table, *args, **kwargs):
+        if table == "filtered_log":
+            time.sleep(2.0)
+        out = merge(table, *args, **kwargs)
+        if table == "filtered_log":
+            landed.append(time.monotonic())
+        return out
+
+    def failing_schedule(*args, **kwargs):
+        raise RuntimeError("injected schedule failure")
+
+    monkeypatch.setattr(job.cat, "merge_not_matched", slow_merge)
+    monkeypatch.setattr(crawl_mod, "schedule_round", failing_schedule)
+    with pytest.raises(RuntimeError, match="injected schedule failure"):
+        job.run_round(0)
+    raised = time.monotonic()
+    assert landed and landed[0] <= raised
+
+    monkeypatch.undo()
+    retry = _job(spark, tmp_path, corpus_path, seeds, "wh_fail")
+    assert retry.next_round() == 0  # the failed round wrote no lineage row
+    retry.run(max_rounds=50)
+    exp = _oracle(spark, corpus_path)
+    log, seen, filtered = _engine_state(retry.cat)
+    assert log == exp["fetch_log"]
+    assert seen == exp["url_seen"]
+    assert filtered == exp["filtered"]
 
 
 def test_mixed_html_pdf_corpus_end_to_end(spark, tmp_path, seeds):
