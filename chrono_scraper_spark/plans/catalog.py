@@ -15,6 +15,15 @@ its manifest file, then ``os.replace`` the ``_current`` pointer. A crash
 before the pointer swap leaves the previous snapshot current — exactly
 Iceberg's metadata-pointer semantics.
 
+Schema ids: every manifest carries a ``schema_id``, the content hash of the
+table schema at that snapshot (Iceberg's ``current-schema-id``). The schema
+itself is stored once per distinct schema under ``_schemas/<id>.json``, not
+inline in each manifest. A delta commit's schema is the parent's plus any
+columns the new fragment adds, taken from ``df.schema`` on the driver; reads
+pass it to ``spark.read.schema(...)``, so no read infers a schema or merges
+fragment footers, and building a read submits no Spark job. A manifest
+without a schema id is never read.
+
 Scale notes: commits are DELTA-APPEND (Iceberg fast-append / format-v2
 merge-on-read semantics): ``append`` and ``merge_not_matched`` write ONLY the
 delta rows as a new parquet fragment, and the manifest lists the snapshot's
@@ -27,6 +36,7 @@ fragment count grows (Iceberg rewrite_data_files analog).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -34,12 +44,41 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _CURRENT = "_current"
 _MANIFESTS = "_manifests"
+_SCHEMAS = "_schemas"
 # sentinel: distinguishes "no expect_version supplied" from "expected no
 # table yet" (None) in merge_not_matched
 _UNSET = object()
+
+
+def _nullable(dtype: dict) -> dict:
+    """A schema's JSON form with every field, element and value nullable:
+    the schema a parquet read reports (Spark reads file sources
+    ``asNullable``), so a pinned read and an inferred read agree."""
+    if not isinstance(dtype, dict):
+        return dtype
+    out = dict(dtype)
+    kind = out.get("type")
+    if kind == "struct":
+        out["fields"] = [dict(f, nullable=True, type=_nullable(f["type"]))
+                         for f in out["fields"]]
+    elif kind == "array":
+        out.update(containsNull=True, elementType=_nullable(out["elementType"]))
+    elif kind == "map":
+        out.update(valueContainsNull=True, keyType=_nullable(out["keyType"]),
+                   valueType=_nullable(out["valueType"]))
+    return out
+
+
+def _with_new_columns(parent: StructType, delta: StructType) -> StructType:
+    """The parent schema plus the columns of ``delta`` it lacks, appended in
+    ``delta``'s order (what ``mergeSchema`` infers over the fragments)."""
+    have = set(parent.fieldNames())
+    return StructType(parent.fields
+                      + [f for f in delta.fields if f.name not in have])
 
 
 class SnapshotCatalog:
@@ -57,6 +96,38 @@ class SnapshotCatalog:
 
     def _data_dir(self, table: str, version: int) -> str:
         return os.path.join(self._tdir(table), "data", f"v{version:07d}")
+
+    def _schema_path(self, table: str, schema_id: str) -> str:
+        return os.path.join(self._tdir(table), _SCHEMAS, f"{schema_id}.json")
+
+    # -- schemas -------------------------------------------------------------
+    def _store_schema(self, table: str, schema: StructType) -> str:
+        """Record ``schema`` for ``table`` once per distinct content and
+        return its id (a hash of the nullable schema JSON)."""
+        text = json.dumps(_nullable(schema.jsonValue()), sort_keys=True,
+                          separators=(",", ":"))
+        schema_id = hashlib.sha256(text.encode()).hexdigest()[:16]
+        path = self._schema_path(table, schema_id)
+        if not os.path.exists(path):
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            tmp = path + f".tmp-{uuid.uuid4().hex}"
+            with open(tmp, "w") as f:
+                f.write(text)
+            os.replace(tmp, path)
+        return schema_id
+
+    def schema(self, table: str, version: int | None = None) -> StructType:
+        """The table schema at a snapshot, from its manifest's schema id —
+        a local metadata read, never a Spark job."""
+        version = version if version is not None else self.current_version(table)
+        m = self.manifest(table, version)
+        if m is None:
+            raise FileNotFoundError(f"table {table} has no committed snapshot")
+        schema_id = m.get("schema_id")
+        if schema_id is None:
+            raise ValueError(f"{table} v{version}: manifest has no schema id")
+        with open(self._schema_path(table, schema_id)) as f:
+            return StructType.fromJson(json.load(f))
 
     # -- snapshot chain ----------------------------------------------------
     def current_version(self, table: str) -> int | None:
@@ -91,13 +162,9 @@ class SnapshotCatalog:
 
     # -- reads ---------------------------------------------------------------
     def _fragments(self, table: str, version: int) -> list[str]:
-        """Absolute fragment paths for a snapshot (manifest-listed; falls
-        back to the snapshot's own data dir for pre-fragment manifests)."""
-        m = self.manifest(table, version)
-        rels = m.get("fragments") if m else None
-        if rels is None:
-            return [self._data_dir(table, version)]
-        return [os.path.join(self.root, r) for r in rels]
+        """Absolute fragment paths of a snapshot, as its manifest lists."""
+        return [os.path.join(self.root, r)
+                for r in self.manifest(table, version)["fragments"]]
 
     def _fragment_row_count(self, frag_abs: str) -> int:
         """Row count of one fragment dir from parquet FOOTERS only — a local
@@ -131,18 +198,16 @@ class SnapshotCatalog:
 
     def read(self, table: str, version: int | None = None) -> DataFrame:
         """Current (or time-travel) snapshot read = union of the manifest's
-        fragment files. Iceberg:
+        fragment files under the snapshot's pinned schema: fragments
+        written before a column add read it as NULL, and no Spark job runs
+        until the first action. Iceberg:
         ``spark.read.option("snapshot-id", …).table(table)``."""
         version = version if version is not None else self.current_version(table)
         if version is None:
             raise FileNotFoundError(f"table {table} has no committed snapshot")
-        frags = self._fragments(table, version)
-        reader = self.spark.read
-        if len(frags) > 1:
-            # fragments may differ in schema across rounds (column adds) —
-            # Iceberg resolves by schema id; plain parquet needs mergeSchema
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*frags)
+        schema = self.schema(table, version)
+        return self.spark.read.schema(schema).parquet(
+            *self._fragments(table, version))
 
     def read_incremental(self, table: str, from_version: int,
                          to_version: int | None = None) -> DataFrame:
@@ -163,10 +228,8 @@ class SnapshotCatalog:
         new = [p for p in self._fragments(table, to_version) if p not in old]
         if not new:
             return self.read(table, to_version).limit(0)
-        reader = self.spark.read
-        if len(new) > 1:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*new)
+        return self.spark.read.schema(
+            self.schema(table, to_version)).parquet(*new)
 
     def read_or_empty(self, table: str, schema: str) -> DataFrame:
         if self.exists(table):
@@ -174,16 +237,51 @@ class SnapshotCatalog:
         return self.spark.createDataFrame([], schema)
 
     # -- commits -------------------------------------------------------------
-    def _write_fragment(self, table: str, version: int, df: DataFrame,
-                        partition_by: list[str] | None = None) -> str:
+    def _write_fragment(self, table: str, version: int,
+                        df: DataFrame) -> str:
         """Write one fragment dir for the snapshot; returns its root-relative
         path (what the manifest stores)."""
         data_dir = self._data_dir(table, version)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
+        df.write.mode("overwrite").parquet(data_dir)
         return os.path.relpath(data_dir, self.root)
+
+    def _write_rows_fragment(self, table: str, version: int,
+                             rows: list[tuple], schema: StructType) -> str:
+        """``_write_fragment`` for a few driver-side rows: one parquet file
+        written with pyarrow on the driver, so no Spark job runs."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        data_dir = self._data_dir(table, version)
+        shutil.rmtree(data_dir, ignore_errors=True)  # a torn earlier attempt
+        os.makedirs(data_dir)
+        names = schema.fieldNames()
+        pq.write_table(
+            pa.Table.from_pylist([dict(zip(names, r)) for r in rows],
+                                 schema=to_arrow_schema(schema)),
+            os.path.join(data_dir, "part-00000.parquet"))
+        return os.path.relpath(data_dir, self.root)
+
+    def _commit_delta(self, table: str, frag: str, schema: StructType, *,
+                      version: int, prev: int | None, operation: str,
+                      properties: dict | None) -> dict:
+        """Commit a delta fragment: the manifest lists the parent's
+        fragments plus ``frag``; the schema is the parent's plus the
+        columns ``schema`` adds."""
+        rel_prev: list[str] = []
+        if prev is not None:
+            rel_prev = [os.path.relpath(p, self.root)
+                        for p in self._fragments(table, prev)]
+            schema = _with_new_columns(self.schema(table, prev), schema)
+        return self._commit_manifest(table, rel_prev + [frag],
+                                     version=version, prev=prev,
+                                     operation=operation,
+                                     properties=properties,
+                                     row_count=self._delta_row_count(
+                                         table, prev, frag),
+                                     schema_id=self._store_schema(
+                                         table, schema))
 
     def _delta_row_count(self, table: str, prev: int | None,
                          new_frag_rel: str) -> int:
@@ -198,7 +296,7 @@ class SnapshotCatalog:
     def _commit_manifest(self, table: str, fragments: list[str], *,
                          version: int, prev: int | None, operation: str,
                          properties: dict | None,
-                         row_count: int | None) -> dict:
+                         row_count: int | None, schema_id: str) -> dict:
         """Manifest write + atomic ``_current`` pointer swap — the actual
         commit point (a crash before the swap leaves the parent current)."""
         manifest = {
@@ -210,6 +308,7 @@ class SnapshotCatalog:
             "row_count": -1 if row_count is None else row_count,
             "committed_at_unix": time.time(),
             "fragments": fragments,
+            "schema_id": schema_id,
             "properties": properties or {},
         }
         mpath = self._manifest_path(table, version)
@@ -227,7 +326,6 @@ class SnapshotCatalog:
 
     def commit(self, table: str, df: DataFrame, *, operation: str,
                properties: dict | None = None,
-               partition_by: list[str] | None = None,
                row_count: int | None = None) -> dict:
         """OVERWRITE commit: ``df`` becomes the table's entire next snapshot
         (one fragment). Iceberg: ``df.writeTo(table).overwritePartitions()``.
@@ -238,13 +336,15 @@ class SnapshotCatalog:
         metadata the same way)."""
         prev = self.current_version(table)
         version = (prev or 0) + 1
-        frag = self._write_fragment(table, version, df, partition_by)
+        frag = self._write_fragment(table, version, df)
         if row_count is None:
             row_count = self._fragment_row_count(os.path.join(self.root, frag))
         return self._commit_manifest(table, [frag], version=version,
                                      prev=prev, operation=operation,
                                      properties=properties,
-                                     row_count=row_count)
+                                     row_count=row_count,
+                                     schema_id=self._store_schema(
+                                         table, df.schema))
 
     def append(self, table: str, df: DataFrame, *, operation: str = "append",
                properties: dict | None = None) -> dict:
@@ -254,14 +354,22 @@ class SnapshotCatalog:
         prev = self.current_version(table)
         version = (prev or 0) + 1
         frag = self._write_fragment(table, version, df)
-        prev_frags = self._fragments(table, prev) if prev is not None else []
-        rel_prev = [os.path.relpath(p, self.root) for p in prev_frags]
-        return self._commit_manifest(table, rel_prev + [frag],
-                                     version=version, prev=prev,
-                                     operation=operation,
-                                     properties=properties,
-                                     row_count=self._delta_row_count(
-                                         table, prev, frag))
+        return self._commit_delta(table, frag, df.schema, version=version,
+                                  prev=prev, operation=operation,
+                                  properties=properties)
+
+    def append_rows(self, table: str, rows: list[tuple], schema: StructType,
+                    *, operation: str = "append",
+                    properties: dict | None = None) -> dict:
+        """``append`` for a few driver-side rows (a round's lineage row):
+        the fragment is written on the driver, so no Spark job runs (a
+        one-row Spark write took ~0.5 s warm on a 4-core VM)."""
+        prev = self.current_version(table)
+        version = (prev or 0) + 1
+        frag = self._write_rows_fragment(table, version, rows, schema)
+        return self._commit_delta(table, frag, schema, version=version,
+                                  prev=prev, operation=operation,
+                                  properties=properties)
 
     def merge_not_matched(self, table: str, new_rows: DataFrame,
                           keys: list[str], *, operation: str = "merge",
@@ -306,19 +414,15 @@ class SnapshotCatalog:
             fresh = new_rows
         version = (prev or 0) + 1
         frag = self._write_fragment(table, version, fresh)
-        prev_frags = self._fragments(table, prev) if prev is not None else []
-        rel_prev = [os.path.relpath(p, self.root) for p in prev_frags]
-        return self._commit_manifest(table, rel_prev + [frag],
-                                     version=version, prev=prev,
-                                     operation=operation,
-                                     properties=properties,
-                                     row_count=self._delta_row_count(
-                                         table, prev, frag))
+        return self._commit_delta(table, frag, fresh.schema, version=version,
+                                  prev=prev, operation=operation,
+                                  properties=properties)
 
     def compact(self, table: str, *, properties: dict | None = None) -> dict:
         """Fold the fragment chain into one fragment (Iceberg
         rewrite_data_files). Run occasionally — e.g. every N rounds or when
-        ``len(manifest['fragments'])`` crosses a threshold — never per-commit."""
+        ``len(manifest['fragments'])`` crosses a threshold — never per-commit.
+        The pinned read carries the table schema, so the schema id stays."""
         df = self.read(table)
         return self.commit(table, df, operation="compact",
                            properties=properties)
@@ -397,7 +501,7 @@ class SnapshotCatalog:
             table, list(m["fragments"]), version=new_version, prev=prev,
             operation="rollback",
             properties={"rolled_back_to": version},
-            row_count=m.get("row_count", -1))
+            row_count=m.get("row_count", -1), schema_id=m["schema_id"])
 
     def drop(self, table: str) -> None:
         shutil.rmtree(self._tdir(table), ignore_errors=True)

@@ -14,6 +14,17 @@ LAST. A crash mid-round leaves ``crawl_rounds`` without the round's row, so
 (reference analog: CDXResumeState + ON CONFLICT DO NOTHING,
 scraping.py:180-277, cdx_deduplication_service.py:229-238).
 
+Round state lives in manifests: each ``crawl_rounds`` append records the
+round's ``round_idx`` and the ``table_versions`` it committed in its manifest
+``properties`` (the lineage row keeps both columns for readers of the table).
+Rounds run in order, so the current manifest alone answers
+``completed_rounds``, ``next_round`` and ``_prev_versions`` with no Spark
+job. A snapshot without round state (an offline maintenance ``compact`` or a
+``rollback``) falls back to reading the lineage rows, one job, so resume
+survives ``scripts/maintain_catalog.py``. Table reads are pinned to a
+snapshot's schema id (plans/catalog.py), so they infer nothing either.
+The Spark jobs left in a round are the ones that move data.
+
 Scale: the only driver-side data are per-round counter dicts and the per-
 partition lineage counts (one long per partition). Extraction runs over the
 host-salted partitioning (P8) so a mega-host never pins one task; the seen-
@@ -25,8 +36,9 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from .. import config as C
 from ..operators.dedup import (
@@ -48,7 +60,7 @@ from ..operators.politeness import (
     with_global_order,
     with_salted_host_partition,
 )
-from ..sources.cdx import discover, read_pages
+from ..sources.cdx import discover, read_pages, seed_rows
 from ..sources.httpfetch import fetch_http
 from .catalog import SnapshotCatalog
 
@@ -57,6 +69,15 @@ SEEN_SCHEMA = ("url_canon string, ts14 string, url string, status string, "
 FRONTIER_KEY = ["url_canon", "ts14"]
 # Use the exact anti-join below this seen-set size; Bloom pre-filter above.
 BLOOM_THRESHOLD = 100_000
+# tables a round commits; the lineage row pins their versions
+ROUND_TABLES = ("fetch_log", "url_seen", "pages_out", "inverted_terms",
+                "seen_digests", "frontier", "filtered_log")
+LINEAGE_SCHEMA = StructType([
+    StructField("round_idx", IntegerType()),
+    StructField("counters", StringType()),
+    StructField("partition_lineage", StringType()),
+    StructField("table_versions", StringType()),
+])
 
 
 class CrawlJob:
@@ -65,7 +86,7 @@ class CrawlJob:
         spark: SparkSession,
         catalog: SnapshotCatalog,
         pages_path: str,
-        seeds: DataFrame,
+        seeds: DataFrame | list[Row],
         *,
         rps: float = C.DEFAULT_HOST_RPS,
         burst: int = C.DEFAULT_HOST_BURST,
@@ -91,7 +112,11 @@ class CrawlJob:
         self.spark = spark
         self.cat = catalog
         self.pages_path = pages_path
-        self.seeds = seeds
+        # the seed list is config-scale: collected once, not every round
+        self.seeds = seed_rows(seeds)
+        # corpus schema, inferred on the first read only; the file listing
+        # still runs on every read, so files added later are picked up
+        self._pages_schema = None
         self.rps = rps
         self.burst = burst
         self.round_seconds = round_seconds
@@ -160,32 +185,58 @@ class CrawlJob:
         self.honor_crawl_delay = honor_crawl_delay
 
     # ------------------------------------------------------------------ state
+    def _lineage_versions(self) -> dict[int, dict]:
+        """``round_idx → table_versions`` from the lineage rows: one Spark
+        job. Only for what the current manifest cannot answer: a snapshot
+        that records no round state (a maintenance ``compact``, a
+        ``rollback``) or a re-run of an older round."""
+        return {r["round_idx"]: json.loads(r["table_versions"]) for r in
+                self.cat.read("crawl_rounds")
+                .select("round_idx", "table_versions").collect()}
+
+    def _last_round(self) -> tuple[int, dict] | None:
+        """``(round_idx, table_versions)`` of the newest completed round.
+        Rounds run in order and each lineage append records both in its
+        manifest, so the current ``crawl_rounds`` manifest holds them: one
+        local file read, no Spark job (Iceberg analog: the current
+        snapshot's summary)."""
+        m = self.cat.manifest("crawl_rounds")
+        if m is None:
+            return None
+        props = m["properties"]
+        if "table_versions" in props:
+            return props["round_idx"], props["table_versions"]
+        rows = self._lineage_versions()
+        if not rows:
+            return None
+        last = max(rows)
+        return last, rows[last]
+
     def completed_rounds(self) -> list[int]:
-        if not self.cat.exists("crawl_rounds"):
-            return []
-        return [r["round_idx"] for r in
-                self.cat.read("crawl_rounds").select("round_idx").collect()]
+        last = self._last_round()
+        return [] if last is None else list(range(last[0] + 1))
 
     def next_round(self) -> int:
-        done = self.completed_rounds()
-        return (max(done) + 1) if done else 0
+        last = self._last_round()
+        return 0 if last is None else last[0] + 1
 
     def _prev_versions(self, round_idx: int) -> dict:
         """Table versions committed by round ``round_idx - 1`` (from its
-        lineage row). All round inputs are pinned to these versions so a
-        crashed round replays against exactly the state it first saw — a
+        lineage manifest). All round inputs are pinned to these versions so
+        a crashed round replays against exactly the state it first saw — a
         torn commit can never leak into the replay (Iceberg analog:
         snapshot-id-pinned reads off the last crawl_rounds entry)."""
-        if round_idx == 0 or not self.cat.exists("crawl_rounds"):
+        if round_idx == 0:
             return {}
-        rows = (self.cat.read("crawl_rounds")
-                .filter(F.col("round_idx") == round_idx - 1)
-                .select("table_versions").collect())
-        if not rows:
+        last = self._last_round()
+        if last is None or last[0] < round_idx - 1:
             raise RuntimeError(
                 f"cannot run round {round_idx}: round {round_idx - 1} has no "
                 f"lineage row (run rounds in order)")
-        return json.loads(rows[0]["table_versions"])
+        if last[0] == round_idx - 1:
+            return last[1]
+        # re-running an older round: its versions are in the lineage rows
+        return self._lineage_versions()[round_idx - 1]
 
     def _read_pinned(self, table: str, prev: dict, schema: str) -> DataFrame:
         version = prev.get(table)
@@ -193,27 +244,28 @@ class CrawlJob:
             return self.spark.createDataFrame([], schema)
         return self.cat.read(table, version=version)
 
+    def _read_pages(self) -> DataFrame:
+        pages = read_pages(self.spark, self.pages_path, self._pages_schema)
+        self._pages_schema = pages.schema
+        return pages
+
     def _seen_digests(self, prev: dict) -> DataFrame:
         """D3: digests of already-completed pages (drives the
-        already_processed filter branch), pinned to the previous round.
-
-        Reads the dedicated ``seen_digests`` table the round commits
-        maintain (already distinct; one fragment per round) — the former
-        derivation ran ``fetch_log → filter completed → distinct`` every
-        round, an O(accumulated-table) shuffle at 10^10 scale. Falls back
-        to that derivation for catalogs written before the table existed."""
+        already_processed filter branch), pinned to the previous round:
+        the ``seen_digests`` table every round commits (already distinct;
+        one fragment per round). Before the first round it is an empty
+        frame, not None: skipping the join would give round 0 a different
+        decision plan, and the first later round would then compile the
+        ~120-regex chain cold (+1.4 s in the first stream round, measured
+        on a 4-core VM)."""
         ver = prev.get("seen_digests")
-        if ver is not None:
-            return self.cat.read("seen_digests", version=ver)
-        log = self._read_pinned(
-            "fetch_log", prev,
-            "digest string, fetch_status string")
-        return (log.filter(F.col("fetch_status") == C.STATUS_COMPLETED)
-                .select("digest").distinct())
+        if ver is None:
+            return self.spark.createDataFrame([], "digest string")
+        return self.cat.read("seen_digests", version=ver)
 
     # -------------------------------------------------------------- discovery
     def _discover_round0(self) -> tuple[DataFrame, dict]:
-        pages = read_pages(self.spark, self.pages_path)
+        pages = self._read_pages()
         raw = discover(pages, self.seeds,
                        allowed_mime=None if self.include_attachments
                        else ["text/html"]).cache()
@@ -355,8 +407,17 @@ class CrawlJob:
         # force the decision-chain cache NOW so this tick measures the
         # discover/dedup/decide phase and the next one measures the MERGE —
         # without this, the filtered_log commit was the first action to
-        # compute the chain and its phase absorbed the whole cache fill
-        counters["decided"] = decided.count()
+        # compute the chain and its phase absorbed the whole cache fill.
+        # One pass gives both numbers the round needs up front: decided
+        # and pending (the bound that sizes the global order below);
+        # filtered = decided - pending, by arithmetic
+        status_counts = {
+            r["status"]: r["count"] for r in
+            decided.groupBy(F.col("decision.status").alias("status"))
+            .count().collect()}
+        counters["decided"] = sum(status_counts.values())
+        n_pending = int(status_counts.get(C.STATUS_PENDING, 0))
+        counters["filtered"] = counters["decided"] - n_pending
         filtered = decided.filter(F.col("decision.status") != C.STATUS_PENDING)
         pending = decided.filter(F.col("decision.status") == C.STATUS_PENDING)
         _tick("discover_dedup_decide")
@@ -414,11 +475,12 @@ class CrawlJob:
             scheduled = sched.filter(F.col("sched_status") == "scheduled")
             deferred = sched.filter(F.col("sched_status") == "deferred")
 
-            # deterministic global crawl order within the round (P1).
-            # with_global_order is eager (range exchange + cache + per-partition
-            # count collect), so this tick cleanly splits the politeness windows
-            # + ordering from the fetch/extract work below
-            scheduled = with_global_order(scheduled)
+            # deterministic global crawl order within the round (P1). The
+            # pending count bounds the scheduled rows, which sizes the range
+            # exchange: a round-sized schedule fits one range partition,
+            # whose offsets are known, so no sampling, cache or count job
+            # runs; a wider one pays them eagerly here, before fetch/extract
+            scheduled = with_global_order(scheduled, max_rows=n_pending)
             go_cache = getattr(scheduled, "_global_order_cache", None)
             _tick("schedule_order")
 
@@ -433,19 +495,13 @@ class CrawlJob:
             if "retry_count" not in scheduled.columns:
                 scheduled = scheduled.withColumn("retry_count",
                                                  F.lit(0).cast("int"))
-            # ONE aggregation over the sched cache serves three counters:
-            # n_sched (salt sizing below), counters["deferred"], and — by
-            # arithmetic, since pending = scheduled + deferred —
-            # counters["filtered"] = decided - pending. The former shape ran
-            # three separate count jobs over the same cached frame (guide §1:
-            # don't re-scan for numbers one pass already knows).
-            sched_counts = {r["sched_status"]: r["count"] for r in
-                            sched.groupBy("sched_status").count().collect()}
-            n_sched = int(sched_counts.get("scheduled", 0))
-            n_deferred = int(sched_counts.get("deferred", 0))
+            # pending bounds the scheduled count (salt sizing and the
+            # broadcast cutoff below); the exact scheduled and deferred
+            # counts come from the extraction aggregation and the frontier
+            # commit, so no count job runs over the schedule
             parallelism = self.spark.sparkContext.defaultParallelism
             salt_target = self.salt_target_rows or max(
-                200, n_sched // max(1, parallelism * 4))
+                200, n_pending // max(1, parallelism * 4))
             if self.fetch_mode == "http":
                 # S7 live fetch: no corpus join — salt the scheduled set over
                 # (host, salt) so each host's requests serialize in one
@@ -463,7 +519,7 @@ class CrawlJob:
                 # shared_pages_scraping.py retry policy)
                 work = fetch_http(work, **self.http_fetch)
             else:
-                pages_raw = read_pages(self.spark, self.pages_path)
+                pages_raw = self._read_pages()
                 # bucketed-table corpora store ts14; selecting the STORED
                 # column (not a re-derived expression) keeps the join key equal
                 # to the bucket key, so the scan's HashPartitioning satisfies
@@ -481,7 +537,8 @@ class CrawlJob:
                 # bucket-local (only the metadata-sized scheduled set shuffles
                 # into the buckets), and a plain parquet corpus falls back to a
                 # full shuffle join
-                broadcasting = self.broadcast_fetch_join and n_sched <= 500_000
+                broadcasting = (self.broadcast_fetch_join
+                                and n_pending <= 500_000)
                 if broadcasting:
                     work = payload.join(F.broadcast(scheduled), ["url", "ts14"],
                                         "inner")
@@ -579,10 +636,6 @@ class CrawlJob:
             _tick("fetch_extract")
 
             counters["scheduled"] = sum(r["count"] for r in part_counts)
-            counters["deferred"] = n_deferred
-            # pending = scheduled + deferred, so the filtered count is pure
-            # arithmetic over numbers already collected — no job
-            counters["filtered"] = counters["decided"] - n_sched - n_deferred
             counters["completed"] = int(status_totals.get(C.STATUS_COMPLETED, 0))
             counters["failed"] = int(status_totals.get(C.STATUS_FAILED, 0))
             _tick("counters")
@@ -683,26 +736,26 @@ class CrawlJob:
             ).select(*next_frontier.columns)
             next_frontier = next_frontier.unionByName(retry_rows)
             counters["retrying"] = retry_rows.count()
-        self.cat.commit(
+        frontier_m = self.cat.commit(
             "frontier", next_frontier,
             operation="overwrite", properties={"round_idx": round_idx})
+        # the frontier's footer row count, not a count over the schedule:
+        # exact even if a payload join duplicated a scheduled row
+        counters["deferred"] = (frontier_m["row_count"]
+                                - counters.get("retrying", 0))
         _tick("commit_frontier")
         counters["timings"] = timings
 
-        # lineage row LAST — this is the round's commit point
-        lineage = self.spark.createDataFrame(
-            [(round_idx, json.dumps(counters),
-              json.dumps([{"pid": r["pid"], "rows": r["count"]}
-                          for r in part_counts]),
-              json.dumps({t: self.cat.current_version(t)
-                          for t in ("fetch_log", "url_seen", "pages_out",
-                                    "inverted_terms", "seen_digests",
-                                    "frontier", "filtered_log")}))],
-            "round_idx int, counters string, partition_lineage string, "
-            "table_versions string",
-        )
-        self.cat.append("crawl_rounds", lineage,
-                        properties={"round_idx": round_idx})
+        # lineage row LAST — this is the round's commit point. Its manifest
+        # carries the round state too, so reading it needs no Spark job
+        versions = {t: self.cat.current_version(t) for t in ROUND_TABLES}
+        lineage = (round_idx, json.dumps(counters),
+                   json.dumps([{"pid": r["pid"], "rows": r["count"]}
+                               for r in part_counts]),
+                   json.dumps(versions))
+        self.cat.append_rows("crawl_rounds", [lineage], LINEAGE_SCHEMA,
+                             properties={"round_idx": round_idx,
+                                         "table_versions": versions})
         if (self.compact_every
                 and round_idx % self.compact_every == self.compact_every - 1):
             for t in ("url_seen", "inverted_terms", "fetch_log",

@@ -24,6 +24,7 @@ import re
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .. import config as C
 from ..functions.urls import ts14, with_url_parts
@@ -36,7 +37,8 @@ FRONTIER_COLUMNS = [
 ]
 
 
-def read_pages(spark: SparkSession, path: str) -> DataFrame:
+def read_pages(spark: SparkSession, path: str,
+               schema: StructType | None = None) -> DataFrame:
     """The Common-Crawl-style corpus (input_hint shape + frontier columns).
 
     ``path`` is either a parquet directory or ``table:<name>`` — a catalog
@@ -44,10 +46,12 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
     10^10-row deployment shape: bucketed by the fetch-join key, so the
     payload side of every round's fetch join is exchange-free (the Iceberg
     analog is ``PARTITIONED BY (bucket(N, url))`` with storage-partitioned
-    joins)."""
+    joins). ``schema``, when known from an earlier read, skips the parquet
+    schema-inference job (a table has its schema in the metastore)."""
     if path.startswith("table:"):
         return spark.table(path[len("table:"):])
-    return spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def write_bucketed_pages(pages: DataFrame, table_name: str, path: str,
@@ -124,9 +128,15 @@ def union_with_fallback(primary: DataFrame, fallback: DataFrame,
     return primary.unionByName(extra, allowMissingColumns=True)
 
 
+def seed_rows(seeds: DataFrame | list[Row]) -> list[Row]:
+    """The seed list as driver rows: a DataFrame is collected (one job),
+    rows pass through."""
+    return seeds.collect() if isinstance(seeds, DataFrame) else list(seeds)
+
+
 def discover(
     pages: DataFrame,
-    seeds: DataFrame,
+    seeds: DataFrame | list[Row],
     *,
     drop_static_assets: bool = True,
     allowed_mime: list[str] | None = None,
@@ -136,8 +146,9 @@ def discover(
     """S1-S5: corpus scan × seed list → candidate frontier.
 
     ``seeds`` columns: project_id int, domain_name string, match_type string,
-    url_path string, from_date date, to_date date. The seed list is collected
-    (config-scale data) and compiled to literal predicates; a row matching k
+    url_path string, from_date date, to_date date — a DataFrame, or its rows
+    already collected (``CrawlJob.seeds``). The seed list is config-scale
+    data, compiled to literal predicates; a row matching k
     seeds yields k frontier rows (one per project), matching the reference's
     per-project fan-out. Status/mime filters push into the scan.
 
@@ -158,14 +169,14 @@ def discover(
     df = df.filter(F.col("status") == allowed_status)
     df = df.filter(F.col("mime").isin(allowed_mime))
 
-    seed_rows = seeds.collect()
-    if not seed_rows:
+    rows = seed_rows(seeds)
+    if not rows:
         return df.limit(0).withColumn("project_id", F.lit(None).cast("int"))
     url, host, wts = F.col("url"), F.col("host"), F.col("warc_ts")
     per_seed = [
         F.when(_seed_condition(s, url, host, wts),
                F.lit(s["project_id"]).cast("int"))
-        for s in seed_rows
+        for s in rows
     ]
     matched = df.withColumn(
         "project_id",

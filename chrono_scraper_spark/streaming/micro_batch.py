@@ -87,6 +87,10 @@ def run_stream_round(job, new_pages: DataFrame) -> dict:
     budget, global order, extraction, idempotent MERGE commits, lineage —
     is ``CrawlJob.run_round`` ITSELF via its ``discovered`` injection, so
     streaming and batch cannot drift: they run one code path.
+
+    The round index and pinned versions come from the ``crawl_rounds``
+    manifests and the seed list from the job's once-collected rows, so no
+    Spark job runs here before the round's own.
     """
     from ..operators.dedup import collapse_digest, in_batch_dedup
     from ..plans.crawl import FRONTIER_KEY

@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
+import json
 import os
 
+import pytest
+
 from chrono_scraper_spark.plans.catalog import SnapshotCatalog
+
+from .jobcount import count_jobs
 
 
 def test_commit_read_timetravel(spark, tmp_path):
@@ -284,3 +289,94 @@ def test_compact_collapse_latest_wins(spark, tmp_path):
     assert dict((r[0], r[1]) for r in after) == {"u1": "c", "u2": "y"}
     # pre-compaction history remains time-travelable
     assert cat.read("validators", version=pre_version).count() == 5
+
+
+def _three_fragments(spark, cat):
+    """Three delta fragments; the third adds a column."""
+    cat.append("t", spark.createDataFrame([(1, "a")], "id int, v string"))
+    cat.merge_not_matched(
+        "t", spark.createDataFrame([(2, "b")], "id int, v string"), ["id"])
+    cat.append("t", spark.createDataFrame([(3, "c", 1.5)],
+                                          "id int, v string, extra double"))
+
+
+def test_read_pins_schema_like_merge_schema(spark, tmp_path):
+    """A read under the manifest's schema id returns what a mergeSchema
+    read over the same fragments infers, rows and schema, and building it
+    submits no Spark job (no inference, no footer merge)."""
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
+    _three_fragments(spark, cat)
+    inferred = spark.read.option("mergeSchema", "true").parquet(
+        *cat._fragments("t", cat.current_version("t")))
+    with count_jobs(spark) as jobs:
+        df = cat.read("t")
+        schema = df.schema
+    assert jobs["n"] == 0
+    assert schema == inferred.schema
+    assert sorted(df.collect()) == sorted(inferred.collect())
+    assert {r["id"]: r["extra"] for r in df.collect()} == {
+        1: None, 2: None, 3: 1.5}
+    # time travel reads the older schema, without the added column
+    assert cat.read("t", version=2).columns == ["id", "v"]
+    # the incremental read is pinned the same way
+    with count_jobs(spark) as jobs:
+        inc = cat.read_incremental("t", 1)
+        inc_schema = inc.schema
+    assert jobs["n"] == 0
+    assert inc_schema == schema
+    assert sorted(r["id"] for r in inc.collect()) == [2, 3]
+    # one schema file per distinct schema, not one per manifest
+    assert len(os.listdir(os.path.join(cat._tdir("t"), "_schemas"))) == 2
+    assert len({s["schema_id"] for s in cat.snapshots("t")}) == 2
+
+
+def test_compact_and_rollback_keep_schema_id(spark, tmp_path):
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
+    _three_fragments(spark, cat)
+    sid = cat.manifest("t")["schema_id"]
+    assert cat.compact("t")["schema_id"] == sid
+    assert cat.row_count("t") == 3
+    sid_v1 = cat.manifest("t", 1)["schema_id"]
+    assert sid_v1 != sid
+    assert cat.rollback("t", 1)["schema_id"] == sid_v1
+    assert cat.read("t").columns == ["id", "v"]
+
+
+def test_torn_manifest_without_schema_id_is_never_read(spark, tmp_path):
+    """A torn commit (manifest written, pointer not swapped) carries no
+    schema id: reads keep the previous snapshot, and an explicit read of
+    the torn version raises instead of inferring a schema."""
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
+    cat.commit("t", spark.createDataFrame([(1,)], "id int"), operation="a")
+    spark.createDataFrame([(1,), (2,)], "id int").write.parquet(
+        cat._data_dir("t", 2))
+    with open(cat._manifest_path("t", 2), "w") as f:
+        json.dump({"table": "t", "version": 2, "parent_version": 1,
+                   "operation": "a", "fragments": ["t/data/v0000002"],
+                   "properties": {}}, f)
+    assert cat.read("t").count() == 1
+    with pytest.raises(ValueError, match="no schema id"):
+        cat.read("t", version=2)
+    # the next real commit supersedes the torn manifest
+    m = cat.append("t", spark.createDataFrame([(5,)], "id int"))
+    assert m["version"] == 2 and m["schema_id"]
+    assert sorted(r["id"] for r in cat.read("t").collect()) == [1, 5]
+
+
+def test_append_rows_writes_driver_rows_without_a_job(spark, tmp_path):
+    """``append_rows`` commits a few driver-side rows as a delta fragment
+    with no Spark job; a later DataFrame append adds to the same chain."""
+    from pyspark.sql.types import IntegerType, StringType, StructField, \
+        StructType
+
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
+    schema = StructType([StructField("id", IntegerType()),
+                         StructField("v", StringType())])
+    with count_jobs(spark) as jobs:
+        m = cat.append_rows("t", [(1, "a")], schema,
+                            properties={"round_idx": 0})
+    assert jobs["n"] == 0
+    assert m["row_count"] == 1 and m["properties"] == {"round_idx": 0}
+    cat.append("t", spark.createDataFrame([(2, "b")], "id int, v string"))
+    assert sorted(tuple(r) for r in cat.read("t").collect()) == [
+        (1, "a"), (2, "b")]

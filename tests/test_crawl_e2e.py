@@ -4,6 +4,7 @@ resume from snapshots, torn-round replay, full-text search over the result.
 
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
@@ -14,6 +15,7 @@ from chrono_scraper_spark.plans.catalog import SnapshotCatalog
 from chrono_scraper_spark.plans.crawl import CrawlJob
 
 from .crawl_oracle import crawl_oracle
+from .jobcount import count_jobs
 
 RPS, BURST, ROUND_SECONDS = 0.1, 2, 60.0  # budget: 8 in round 0, 6 after
 
@@ -121,6 +123,85 @@ def test_torn_round_replay(spark, tmp_path, corpus_path, seeds):
     assert replay.next_round() == 1  # the torn round is not "done"
     replay.run(max_rounds=50)
     assert _engine_state(ref.cat) == _engine_state(replay.cat)
+
+
+def test_round_state_reads_no_spark_job(spark, tmp_path, corpus_path, seeds):
+    """Round state comes from the current crawl_rounds manifest: on a
+    two-round catalog the next round, the completed rounds and the pinned
+    versions submit no Spark job, and agree with the lineage rows. A
+    rollback snapshot records no round state; its lineage rows answer."""
+    import json
+
+    job = _job(spark, tmp_path, corpus_path, seeds, "wh_state")
+    job.run_round(0)
+    job.run_round(1)
+    with count_jobs(spark) as jobs:
+        nxt = job.next_round()
+        done = job.completed_rounds()
+        pinned = job._prev_versions(2)
+    assert jobs["n"] == 0
+    assert (nxt, done) == (2, [0, 1])
+    rows = {r["round_idx"]: json.loads(r["table_versions"])
+            for r in job.cat.read("crawl_rounds").collect()}
+    assert pinned == rows[1]
+    with count_jobs(spark) as jobs:
+        with pytest.raises(RuntimeError, match="no lineage row"):
+            job._prev_versions(3)
+    assert jobs["n"] == 0
+    assert job._prev_versions(1) == rows[0]   # an older round, from rows
+
+    job.cat.rollback("crawl_rounds", 1)   # back to round 0's lineage
+    assert job.completed_rounds() == [0]
+    assert job.next_round() == 1
+    assert job._prev_versions(1) == rows[0]
+
+
+def test_resume_after_catalog_maintenance(spark, tmp_path, corpus_path,
+                                          seeds):
+    """Offline maintenance between crawl runs (compact every table, then
+    expire all but the last two snapshots, as scripts/maintain_catalog.py
+    does) removes the older crawl_rounds manifests and leaves a compact
+    snapshot without round state current. Resume still finds round 2 and
+    converges to the oracle."""
+    job = _job(spark, tmp_path, corpus_path, seeds, "wh_maint")
+    job.run_round(0)
+    job.run_round(1)
+    cat = job.cat
+    for t in sorted(os.listdir(cat.root)):
+        if cat.exists(t):
+            cat.compact(t, properties={"maintenance": True})
+            cat.expire_snapshots(t, keep_last=2)
+    assert [m["version"] for m in cat.snapshots("crawl_rounds")] == [2, 3]
+    assert "table_versions" not in cat.manifest("crawl_rounds")["properties"]
+    resumed = _job(spark, tmp_path, corpus_path, seeds, "wh_maint")
+    assert resumed.next_round() == 2
+    assert resumed.completed_rounds() == [0, 1]
+    resumed.run(max_rounds=50)
+    exp = _oracle(spark, corpus_path)
+    log, seen, _ = _engine_state(resumed.cat)
+    assert log == exp["fetch_log"]
+    assert seen == exp["url_seen"]
+
+
+# Spark jobs of one warm drain round on the fixture corpus (local[4]).
+# The round's jobs all move data: the decision pass, the schedule and
+# fetch/extract, and the table commits. Round state, schemas, seeds, the
+# lineage row and the global order's offsets cost none; a change that adds
+# a metadata job back fails here.
+DRAIN_ROUND_MAX_JOBS = 27
+
+
+def test_drain_round_job_budget(spark, tmp_path, corpus_path, seeds):
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh_budget"))
+    # budget 3 per host in round 0, then 1: rounds 1 and 2 drain deferrals
+    job = CrawlJob(spark, cat, corpus_path, seeds, rps=0.02, burst=2,
+                   round_seconds=ROUND_SECONDS)
+    job.run_round(0)
+    job.run_round(1)    # warm: compiles the drain round's plans
+    with count_jobs(spark) as jobs:
+        counters = job.run_round(2)
+    assert counters["scheduled"] > 0 and counters["deferred"] > 0
+    assert jobs["n"] <= DRAIN_ROUND_MAX_JOBS, jobs["n"]
 
 
 def test_failed_round_awaits_filtered_log_commit(spark, tmp_path, corpus_path,

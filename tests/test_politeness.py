@@ -61,6 +61,36 @@ def test_global_order_deterministic_and_dense(spark, pages):
     assert keyed == sorted(keyed)
 
 
+def test_global_order_row_bound_gives_identical_seq(spark, pages):
+    """A known row bound only picks the exchange: seq is identical with and
+    without it, whether the bound fits one range partition (no sampling,
+    cache or count job) or exceeds it (the default multi-partition path)."""
+    from .jobcount import count_jobs
+
+    fr = _frontier(spark, pages).cache()
+    n = fr.count()
+
+    def seqs(df):
+        return {(r["url"], r["ts14"]): r["seq"]
+                for r in df.select("seq", "url", "ts14").collect()}
+
+    unbounded = P.with_global_order(fr)
+    assert unbounded.select(F.spark_partition_id()).distinct().count() > 1
+    with count_jobs(spark) as jobs:
+        one = P.with_global_order(fr, max_rows=n)
+    assert jobs["n"] == 0
+    assert not hasattr(one, "_global_order_cache")
+    assert one.rdd.getNumPartitions() == 1
+    assert seqs(one) == seqs(unbounded)
+    above = P.with_global_order(fr, max_rows=P.ORDER_ONE_PARTITION_ROWS + 1)
+    assert above.select(F.spark_partition_id()).distinct().count() > 1
+    assert seqs(above) == seqs(unbounded)
+    assert sorted(seqs(one).values()) == list(range(1, n + 1))
+    for df in (unbounded, above):
+        df._global_order_cache.unpersist()
+    fr.unpersist()
+
+
 def test_salted_host_partitioning_splits_mega_host(spark, pages):
     fr = _frontier(spark, pages)
     out = P.with_salted_host_partition(fr, target_rows_per_partition=10)
