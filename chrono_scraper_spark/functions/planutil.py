@@ -71,6 +71,22 @@ def materialize_once(col: "F.Column") -> "F.Column":
     return F.when(F.monotonically_increasing_id() >= 0, col)
 
 
+def release(df: DataFrame) -> None:
+    """Free the blocks that ``df.cache()`` or ``df.localCheckpoint()`` holds.
+
+    ``DataFrame.unpersist`` frees only a cache. A local checkpoint is no
+    cache entry: its data is the persisted RDD under the frame's
+    ``LogicalRDD`` leaf, which PySpark has no call to unpersist, so the
+    blocks would outlive every reader. Spark never recomputes a local
+    checkpoint: after this, any read of ``df`` or of a frame planned over
+    it raises ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+    else:
+        df.unpersist()
+
+
 def _path_bytes(path: str) -> int:
     if os.path.isfile(path):
         return os.path.getsize(path)

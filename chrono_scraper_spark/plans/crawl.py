@@ -29,18 +29,31 @@ Scale: the only driver-side data are per-round counter dicts and the per-
 partition lineage counts (one long per partition). Extraction runs over the
 host-salted partitioning (P8) so a mega-host never pins one task; the seen-
 set anti-join goes through the Bloom pre-filter once the seen set is big
-enough to matter.
+enough to matter. A round materializes twice, at the decided candidates and
+at the extracted rows, and both are local checkpoints, not caches: the
+checkpoint cuts the plan lineage, so each later frame (the filtered_log
+merge, the schedule and global order, the five commits, the frontier) plans
+over a LogicalRDD leaf instead of the whole round with its ~120-regex
+decision chain. The driver's analysis, cache lookups and plan strings then
+scale with one phase, not the round (a write plan is 0.5-7.5 KB on the test
+fixture, 33-330 KB with caches). The round's checkpoints and caches are
+released in one ``finally``, after their last reader, whether the round
+commits or raises: Spark never recomputes a local checkpoint, so a read
+after the release fails.
 """
 
 from __future__ import annotations
 
 import json
+from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import wait as futures_wait
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from .. import config as C
+from ..functions.planutil import release
 from ..operators.dedup import (
     anti_join_seen,
     bloom_prefilter_anti_join,
@@ -62,6 +75,7 @@ from ..operators.politeness import (
 )
 from ..sources.cdx import discover, read_pages, seed_rows
 from ..sources.httpfetch import fetch_http
+from .catalog import _UNSET as _CAT_UNSET
 from .catalog import SnapshotCatalog
 
 SEEN_SCHEMA = ("url_canon string, ts14 string, url string, status string, "
@@ -264,19 +278,23 @@ class CrawlJob:
         return self.cat.read("seen_digests", version=ver)
 
     # -------------------------------------------------------------- discovery
-    def _discover_round0(self) -> tuple[DataFrame, dict]:
+    def _discover_round0(self, held: list[DataFrame]
+                         ) -> tuple[DataFrame, dict]:
+        """Round 0's candidates and discovery counters. What it persists
+        goes on ``held``, which the round releases."""
         pages = self._read_pages()
         raw = discover(pages, self.seeds,
                        allowed_mime=None if self.include_attachments
                        else ["text/html"]).cache()
+        held.append(raw)
         n_discovered = raw.count()
         # D1: one capture per content digest, earliest wins;
         # D2/D8: in-batch (url, ts) dedup. Cache the DEDUPED set — it feeds
         # the decision chain and the round body; caching upstream instead
         # would re-run both window shuffles.
         cands = in_batch_dedup(collapse_digest(raw), FRONTIER_KEY).cache()
+        held.append(cands)
         n_unique = cands.count()
-        raw.unpersist()
         return cands, {"discovered": n_discovered,
                        "digest_collapsed_or_dup": n_discovered - n_unique}
 
@@ -302,169 +320,172 @@ class CrawlJob:
             _t0 = t1
 
         prev = self._prev_versions(round_idx)
-
-        if discovered is not None:
-            cands = (discovered.drop("decision")
-                     if "decision" in discovered.columns else discovered)
-        elif round_idx == 0:
-            cands, disc_counters = self._discover_round0()
-            counters.update(disc_counters)
-        else:
-            if prev.get("frontier") is None:
-                return {**counters, "empty": True}
-            # deferred rows re-enter the chain from the top: the decision is
-            # recomputed because the seen-digest set may have grown (a digest
-            # completed via another URL makes a deferred row already_processed)
-            cands = self._read_pinned("frontier", prev, "url string").drop(
-                "decision")
-            counters["discovered"] = 0
-
-        # dedup vs the committed URL-seen set (D4): Bloom pre-filter above
-        # threshold, plain anti-join below. The strategy pick + Bloom sizing
-        # need the seen-set cardinality — taken from the pinned snapshot's
-        # manifest/footer metadata (catalog.row_count), NOT a count job: a
-        # per-round COUNT over a 10^10-row table would be an O(table) scan
-        # every round (Iceberg reads total-records from snapshot metadata
-        # the same way).
-        seen = self._read_pinned("url_seen", prev, SEEN_SCHEMA)
-        seen_ver = prev.get("url_seen")
-        seen_n = (self.cat.row_count("url_seen", seen_ver)
-                  if seen_ver is not None else 0)
-        if seen_n > BLOOM_THRESHOLD:
-            import os as _os
-
-            bloom_dir = (_os.path.join(self.cat.root, "_bloom",
-                                       f"r{round_idx:05d}")
-                         if self.bloom_buckets else None)
-            cands = bloom_prefilter_anti_join(cands, seen, FRONTIER_KEY,
-                                              expected_items=seen_n,
-                                              n_buckets=self.bloom_buckets,
-                                              bloom_dir=bloom_dir)
-        elif seen_n > 0:
-            cands = anti_join_seen(cands, seen, FRONTIER_KEY)
-
-        # robots hook (north_rule; allow-all default keeps reference parity).
-        # live_robots: one robots.txt GET per distinct candidate host through
-        # the same keep-alive fetch stage, parsed to rules for THIS round —
-        # the host-cardinality fetch is negligible next to the page fetch.
-        # robots_ttl_s: TTL'd robots_cache catalog table — only hosts whose
-        # entry is missing/expired refetch (allow-all 404s are cached as
-        # NULL bodies so they don't refetch every round); the refreshed
-        # cache commits BEFORE use, so a torn-round replay reads the same
-        # bodies instead of refetching a possibly-changed live file.
-        round_budget_overrides = self.budget_overrides
-        if self.live_robots:
-            from ..operators.politeness import parse_robots
-            from ..sources.httpfetch import fetch_robots
-
-            if self.robots_ttl_s is None:
-                robots_bodies = fetch_robots(cands, **self.http_fetch)
-            else:
-                import time as _t
-
-                now = float(_t.time())
-                hosts = cands.select("host").distinct()
-                cache = self.cat.read_or_empty(
-                    "robots_cache",
-                    "host string, body string, fetched_at_unix double")
-                fresh = cache.filter(
-                    F.col("fetched_at_unix") >= now - self.robots_ttl_s)
-                missing = hosts.join(fresh.select("host"), "host",
-                                     "left_anti")
-                fetched = fetch_robots(
-                    missing, keep_missing=True, **self.http_fetch,
-                ).withColumn("fetched_at_unix", F.lit(now))
-                new_cache = fresh.unionByName(fetched)
-                self.cat.commit("robots_cache", new_cache,
-                                operation="overwrite",
-                                properties={"round_idx": round_idx})
-                robots_bodies = (self.cat.read("robots_cache")
-                                 .join(hosts, "host", "left_semi")
-                                 .filter(F.col("body").isNotNull())
-                                 .select("host", "body"))
-            rules = parse_robots(robots_bodies)
-            if self.honor_crawl_delay:
-                from ..operators.politeness import (
-                    crawl_delay_budgets,
-                    merge_budget_overrides,
-                    parse_crawl_delays,
-                )
-
-                delay_budgets = crawl_delay_budgets(
-                    parse_crawl_delays(robots_bodies), self.round_seconds)
-                round_budget_overrides = merge_budget_overrides(
-                    round_budget_overrides, delay_budgets)
-        else:
-            rules = self.robots_rules
-        cands = robots_filter(cands, rules)
-
-        # filter-decision chain (F1-F7), annotating not dropping
-        decided = with_filter_decision(
-            cands, seen_digests=self._seen_digests(prev),
-            include_attachments=self.include_attachments,
-        ).cache()
-
-        # force the decision-chain cache NOW so this tick measures the
-        # discover/dedup/decide phase and the next one measures the MERGE —
-        # without this, the filtered_log commit was the first action to
-        # compute the chain and its phase absorbed the whole cache fill.
-        # One pass gives both numbers the round needs up front: decided
-        # and pending (the bound that sizes the global order below);
-        # filtered = decided - pending, by arithmetic
-        status_counts = {
-            r["status"]: r["count"] for r in
-            decided.groupBy(F.col("decision.status").alias("status"))
-            .count().collect()}
-        counters["decided"] = sum(status_counts.values())
-        n_pending = int(status_counts.get(C.STATUS_PENDING, 0))
-        counters["filtered"] = counters["decided"] - n_pending
-        filtered = decided.filter(F.col("decision.status") != C.STATUS_PENDING)
-        pending = decided.filter(F.col("decision.status") == C.STATUS_PENDING)
-        _tick("discover_dedup_decide")
-
-        # record filtered rows once (reference keeps FILTERED_* ScrapePages).
-        # Batch rounds prove key-newness: a key filtered once leaves the
-        # frontier permanently (only deferred/retryable rows carry forward,
-        # and those were pending, not filtered), so the delta cannot collide
-        # with earlier rounds and the merge may skip the existing-key probe
-        # while the table sits at its pinned version. Streaming rounds
-        # (injected ``discovered``) can re-present an already-filtered
-        # capture, so they keep the unconditional probe.
-        from concurrent.futures import ThreadPoolExecutor
-        from concurrent.futures import wait as futures_wait
-
-        from .catalog import _UNSET as _CAT_UNSET
-
-        # The filtered_log commit depends only on the (already
-        # materialized) decision cache — nothing downstream reads it this
-        # round — so it runs as a CONCURRENT Spark job overlapping the
-        # politeness windows and the fetch/extract stage (guide §2.6:
-        # submit independent jobs from a driver thread so their tasks
-        # back-fill executors freed by the foreground job's tail). The
-        # future is awaited with the other table commits, strictly before
-        # the lineage row; crash-safety is unchanged (idempotent MERGE,
-        # lineage commits last).
-        _filtered_pool = ThreadPoolExecutor(max_workers=1)
-        filtered_log_fut = _filtered_pool.submit(
-            self.cat.merge_not_matched,
-            "filtered_log",
-            filtered.select(
-                "url", "url_canon", "ts14", "host", "digest", "length",
-                F.col("decision.status").alias("status"),
-                F.col("decision.reason").alias("filter_reason"),
-                F.col("decision.matched_pattern").alias("matched_pattern"),
-                F.col("decision.confidence").alias("filter_confidence"),
-                F.lit(round_idx).alias("round_idx"),
-            ),
-            FRONTIER_KEY, properties={"round_idx": round_idx},
-            assume_unique=True,
-            expect_version=(prev.get("filtered_log") if discovered is None
-                            else _CAT_UNSET),
-        )
-        _filtered_pool.shutdown(wait=False)
-        _tick("commit_filtered_log")
-
+        # frames the round persists (caches and local checkpoints); the
+        # finally below releases them whether the round commits or raises
+        held: list[DataFrame] = []
+        filtered_log_fut = None
         try:
+            if discovered is not None:
+                cands = (discovered.drop("decision")
+                         if "decision" in discovered.columns else discovered)
+            elif round_idx == 0:
+                cands, disc_counters = self._discover_round0(held)
+                counters.update(disc_counters)
+            else:
+                if prev.get("frontier") is None:
+                    return {**counters, "empty": True}
+                # deferred rows re-enter the chain from the top: the decision is
+                # recomputed because the seen-digest set may have grown (a digest
+                # completed via another URL makes a deferred row already_processed)
+                cands = self._read_pinned("frontier", prev, "url string").drop(
+                    "decision")
+                counters["discovered"] = 0
+
+            # dedup vs the committed URL-seen set (D4): Bloom pre-filter above
+            # threshold, plain anti-join below. The strategy pick + Bloom sizing
+            # need the seen-set cardinality — taken from the pinned snapshot's
+            # manifest/footer metadata (catalog.row_count), NOT a count job: a
+            # per-round COUNT over a 10^10-row table would be an O(table) scan
+            # every round (Iceberg reads total-records from snapshot metadata
+            # the same way).
+            seen = self._read_pinned("url_seen", prev, SEEN_SCHEMA)
+            seen_ver = prev.get("url_seen")
+            seen_n = (self.cat.row_count("url_seen", seen_ver)
+                      if seen_ver is not None else 0)
+            if seen_n > BLOOM_THRESHOLD:
+                import os as _os
+
+                bloom_dir = (_os.path.join(self.cat.root, "_bloom",
+                                           f"r{round_idx:05d}")
+                             if self.bloom_buckets else None)
+                cands = bloom_prefilter_anti_join(cands, seen, FRONTIER_KEY,
+                                                  expected_items=seen_n,
+                                                  n_buckets=self.bloom_buckets,
+                                                  bloom_dir=bloom_dir)
+            elif seen_n > 0:
+                cands = anti_join_seen(cands, seen, FRONTIER_KEY)
+
+            # robots hook (north_rule; allow-all default keeps reference parity).
+            # live_robots: one robots.txt GET per distinct candidate host through
+            # the same keep-alive fetch stage, parsed to rules for THIS round —
+            # the host-cardinality fetch is negligible next to the page fetch.
+            # robots_ttl_s: TTL'd robots_cache catalog table — only hosts whose
+            # entry is missing/expired refetch (allow-all 404s are cached as
+            # NULL bodies so they don't refetch every round); the refreshed
+            # cache commits BEFORE use, so a torn-round replay reads the same
+            # bodies instead of refetching a possibly-changed live file.
+            round_budget_overrides = self.budget_overrides
+            if self.live_robots:
+                from ..operators.politeness import parse_robots
+                from ..sources.httpfetch import fetch_robots
+
+                if self.robots_ttl_s is None:
+                    robots_bodies = fetch_robots(cands, **self.http_fetch)
+                else:
+                    import time as _t
+
+                    now = float(_t.time())
+                    hosts = cands.select("host").distinct()
+                    cache = self.cat.read_or_empty(
+                        "robots_cache",
+                        "host string, body string, fetched_at_unix double")
+                    fresh = cache.filter(
+                        F.col("fetched_at_unix") >= now - self.robots_ttl_s)
+                    missing = hosts.join(fresh.select("host"), "host",
+                                         "left_anti")
+                    fetched = fetch_robots(
+                        missing, keep_missing=True, **self.http_fetch,
+                    ).withColumn("fetched_at_unix", F.lit(now))
+                    new_cache = fresh.unionByName(fetched)
+                    self.cat.commit("robots_cache", new_cache,
+                                    operation="overwrite",
+                                    properties={"round_idx": round_idx})
+                    robots_bodies = (self.cat.read("robots_cache")
+                                     .join(hosts, "host", "left_semi")
+                                     .filter(F.col("body").isNotNull())
+                                     .select("host", "body"))
+                rules = parse_robots(robots_bodies)
+                if self.honor_crawl_delay:
+                    from ..operators.politeness import (
+                        crawl_delay_budgets,
+                        merge_budget_overrides,
+                        parse_crawl_delays,
+                    )
+
+                    delay_budgets = crawl_delay_budgets(
+                        parse_crawl_delays(robots_bodies), self.round_seconds)
+                    round_budget_overrides = merge_budget_overrides(
+                        round_budget_overrides, delay_budgets)
+            else:
+                rules = self.robots_rules
+            cands = robots_filter(cands, rules)
+
+            # filter-decision chain (F1-F7), annotating not dropping. A local
+            # checkpoint, not a cache: it cuts the round's plan lineage here,
+            # so nothing below re-plans discovery, the anti-join and the
+            # ~120-regex chain (module docstring, "Scale")
+            decided = with_filter_decision(
+                cands, seen_digests=self._seen_digests(prev),
+                include_attachments=self.include_attachments,
+            ).localCheckpoint(eager=False)
+            held.append(decided)
+
+            # this pass fills the checkpoint, so this tick measures the
+            # discover/dedup/decide phase and the next one the MERGE. One
+            # pass gives both numbers the round needs up front: decided and
+            # pending (the bound that sizes the global order below);
+            # filtered = decided - pending, by arithmetic
+            status_counts = {
+                r["status"]: r["count"] for r in
+                decided.groupBy(F.col("decision.status").alias("status"))
+                .count().collect()}
+            counters["decided"] = sum(status_counts.values())
+            n_pending = int(status_counts.get(C.STATUS_PENDING, 0))
+            counters["filtered"] = counters["decided"] - n_pending
+            is_pending = F.col("decision.status") == C.STATUS_PENDING
+            filtered = decided.filter(~is_pending)
+            pending = decided.filter(is_pending)
+            _tick("discover_dedup_decide")
+
+            # record filtered rows once (reference keeps FILTERED_*
+            # ScrapePages). Batch rounds prove key-newness: a key filtered
+            # once leaves the frontier permanently (only deferred/retryable
+            # rows carry forward, and those were pending, not filtered), so
+            # the delta cannot collide with earlier rounds and the merge may
+            # skip the existing-key probe while the table sits at its pinned
+            # version. Streaming rounds (injected ``discovered``) can
+            # re-present an already-filtered capture, so they keep the
+            # unconditional probe.
+            #
+            # The filtered_log commit depends only on the (already
+            # materialized) decision checkpoint — nothing downstream reads it
+            # this round — so it runs as a CONCURRENT Spark job overlapping
+            # the politeness windows and the fetch/extract stage (guide §2.6:
+            # submit independent jobs from a driver thread so their tasks
+            # back-fill executors freed by the foreground job's tail). The
+            # future is awaited with the other table commits, strictly before
+            # the lineage row; crash-safety is unchanged (idempotent MERGE,
+            # lineage commits last).
+            _filtered_pool = ThreadPoolExecutor(max_workers=1)
+            filtered_log_fut = _filtered_pool.submit(
+                self.cat.merge_not_matched,
+                "filtered_log",
+                filtered.select(
+                    "url", "url_canon", "ts14", "host", "digest", "length",
+                    F.col("decision.status").alias("status"),
+                    F.col("decision.reason").alias("filter_reason"),
+                    F.col("decision.matched_pattern").alias("matched_pattern"),
+                    F.col("decision.confidence").alias("filter_confidence"),
+                    F.lit(round_idx).alias("round_idx"),
+                ),
+                FRONTIER_KEY, properties={"round_idx": round_idx},
+                assume_unique=True,
+                expect_version=(prev.get("filtered_log") if discovered is None
+                                else _CAT_UNSET),
+            )
+            _filtered_pool.shutdown(wait=False)
+            _tick("commit_filtered_log")
+
             # politeness budget split (P4/W5)
             sched = schedule_round(
                 pending, round_idx=round_idx, rps=self.rps, burst=self.burst,
@@ -472,6 +493,7 @@ class CrawlJob:
                 budget_overrides=round_budget_overrides,
                 prune_salt_k=self.schedule_prune_k,
             ).cache()
+            held.append(sched)
             scheduled = sched.filter(F.col("sched_status") == "scheduled")
             deferred = sched.filter(F.col("sched_status") == "deferred")
 
@@ -481,7 +503,8 @@ class CrawlJob:
             # whose offsets are known, so no sampling, cache or count job
             # runs; a wider one pays them eagerly here, before fetch/extract
             scheduled = with_global_order(scheduled, max_rows=n_pending)
-            go_cache = getattr(scheduled, "_global_order_cache", None)
+            if hasattr(scheduled, "_global_order_cache"):
+                held.append(scheduled._global_order_cache)
             _tick("schedule_order")
 
             # FETCH: the frontier is metadata-only; payloads join back for the
@@ -580,16 +603,20 @@ class CrawlJob:
                         .withColumn("http_status", F.lit(None).cast("int"))
                         .withColumn("fetch_err", F.lit(None).cast("string")))
             # html is consumed by the extraction UDF and nothing after it —
-            # dropping it before the cache keeps ~half the cached bytes (5 KB
-            # payload/row) out of memory and out of every downstream read
+            # dropping it before the checkpoint keeps ~half the stored bytes
+            # (5 KB payload/row) out of memory and out of every downstream
+            # read
             if self.extract_cache:
                 # E11: payload-hash cache table — unchanged payloads across
                 # rounds/recrawls skip the Arrow kernel (extraction.py docstring)
                 extracted = with_extraction_cached(work, self.cat).drop("html")
             else:
                 extracted = with_extraction(work).drop("html")
+            # the second lineage cut: the commits below plan over the
+            # extracted rows, not over the fetch join and the schedule
             extracted = with_quality_score(
-                extracted, "extracted.text").cache()
+                extracted, "extracted.text").localCheckpoint(eager=False)
+            held.append(extracted)
 
             # T7: transient-retry split — failed rows below the retry cap
             # re-enter the next round's frontier instead of terminalizing.
@@ -612,10 +639,10 @@ class CrawlJob:
                 retryable = extracted.limit(0)
                 terminal = extracted
 
-            # per-partition lineage: rows extracted per (host-salted) partition —
-            # this action also materializes the extraction cache. fetch_status
-            # rides in the same aggregation so the later status counters need no
-            # second scan of the cache (one job instead of two).
+            # per-partition lineage: rows extracted per (host-salted)
+            # partition — this action also fills the extraction checkpoint.
+            # fetch_status rides in the same aggregation so the later status
+            # counters need no second scan of it (one job instead of two).
             part_status = (
                 extracted.groupBy(F.spark_partition_id().alias("pid"),
                                   "fetch_status")
@@ -629,10 +656,6 @@ class CrawlJob:
                     status_totals.get(r["fetch_status"], 0) + r["count"])
             part_counts = [{"pid": pid, "count": pid_totals[pid]}
                            for pid in sorted(pid_totals)]
-            # the extraction cache is materialized now — the range-partitioned
-            # global-order cache behind it is no longer needed
-            if go_cache is not None:
-                go_cache.unpersist()
             _tick("fetch_extract")
 
             counters["scheduled"] = sum(r["count"] for r in part_counts)
@@ -641,11 +664,12 @@ class CrawlJob:
             _tick("counters")
 
             # ---- commits (all idempotent MERGEs; lineage row last) ----
-            # The four table commits are independent (different tables, all
-            # projections of the materialized extraction cache), so they run as
-            # CONCURRENT Spark jobs from a small thread pool — write stalls of
-            # one commit fill with compute/IO of another; ordering only matters
-            # for the lineage row, which still commits strictly last.
+            # The five table commits are independent (different tables, all
+            # projections of the materialized extraction checkpoint), so they
+            # run as CONCURRENT Spark jobs from a small thread pool — write
+            # stalls of one commit fill with compute/IO of another; ordering
+            # only matters for the lineage row, which still commits strictly
+            # last.
             # fetch_log records every ATTEMPT: keyed per round so retried rows
             # appear once per attempt, and a replayed round converges
             fetch_rows = extracted.select(
@@ -717,33 +741,40 @@ class CrawlJob:
             # the background filtered_log commit (submitted before the
             # schedule phase) must land before the lineage row pins versions
             filtered_log_fut.result()
+            _tick("commit_tables")
+
+            # the open frontier = deferred rows ∪ retryable failures (with
+            # retry_count bumped), the next round's candidates
+            next_frontier = deferred.drop("host_rank", "sched_status")
+            if "retry_count" not in next_frontier.columns:
+                next_frontier = next_frontier.withColumn(
+                    "retry_count", F.lit(0).cast("int"))
+            if self.retry_transient:
+                retry_rows = retryable.withColumn(
+                    "retry_count", F.col("retry_count") + 1
+                ).select(*next_frontier.columns)
+                next_frontier = next_frontier.unionByName(retry_rows)
+                counters["retrying"] = retry_rows.count()
+            frontier_m = self.cat.commit(
+                "frontier", next_frontier,
+                operation="overwrite", properties={"round_idx": round_idx})
+            # the frontier's footer row count, not a count over the schedule:
+            # exact even if a payload join duplicated a scheduled row
+            counters["deferred"] = (frontier_m["row_count"]
+                                    - counters.get("retrying", 0))
+            _tick("commit_frontier")
         finally:
             # no background commit outlives a failed round: a retry in
             # this process could otherwise allocate the same filtered_log
             # version while the orphaned merge is still writing it
-            futures_wait([filtered_log_fut])
-        _tick("commit_tables")
-
-        # the open frontier = deferred rows ∪ retryable failures (with
-        # retry_count bumped), the next round's candidates
-        next_frontier = deferred.drop("host_rank", "sched_status")
-        if "retry_count" not in next_frontier.columns:
-            next_frontier = next_frontier.withColumn(
-                "retry_count", F.lit(0).cast("int"))
-        if self.retry_transient:
-            retry_rows = retryable.withColumn(
-                "retry_count", F.col("retry_count") + 1
-            ).select(*next_frontier.columns)
-            next_frontier = next_frontier.unionByName(retry_rows)
-            counters["retrying"] = retry_rows.count()
-        frontier_m = self.cat.commit(
-            "frontier", next_frontier,
-            operation="overwrite", properties={"round_idx": round_idx})
-        # the frontier's footer row count, not a count over the schedule:
-        # exact even if a payload join duplicated a scheduled row
-        counters["deferred"] = (frontier_m["row_count"]
-                                - counters.get("retrying", 0))
-        _tick("commit_frontier")
+            if filtered_log_fut is not None:
+                futures_wait([filtered_log_fut])
+            # nor does any persisted frame. Released only here: the merge
+            # above reads `decided`, and the frontier commit reads `sched`,
+            # which is planned over it; a local checkpoint is never
+            # recomputed, so a read after its release raises
+            for df in held:
+                release(df)
         counters["timings"] = timings
 
         # lineage row LAST — this is the round's commit point. Its manifest
@@ -769,11 +800,6 @@ class CrawlJob:
                     # expiring them would break a replay after a crash —
                     # the same reason Iceberg separates expire_snapshots
                     # from writers.
-        decided.unpersist()
-        sched.unpersist()
-        extracted.unpersist()
-        if round_idx == 0:
-            cands.unpersist()
         return counters
 
     # ------------------------------------------------------------------ runs

@@ -1,4 +1,4 @@
-"""Count the Spark jobs a block of code submits.
+"""Count the Spark jobs a block of code submits, and list persisted RDDs.
 
 Job ids are sequential per SparkContext, so the number of jobs a block
 submitted is the delta of the highest job id the status tracker reports
@@ -26,3 +26,10 @@ def count_jobs(spark):
     before = last_job_id(spark)
     yield jobs
     jobs["n"] = last_job_id(spark) - before
+
+
+def persisted_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs the SparkContext holds persisted: every cached
+    DataFrame's column buffers and every local checkpoint's blocks."""
+    jids = spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+    return {int(i) for i in jids}

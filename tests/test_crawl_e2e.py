@@ -15,7 +15,7 @@ from chrono_scraper_spark.plans.catalog import SnapshotCatalog
 from chrono_scraper_spark.plans.crawl import CrawlJob
 
 from .crawl_oracle import crawl_oracle
-from .jobcount import count_jobs
+from .jobcount import count_jobs, persisted_rdd_ids
 
 RPS, BURST, ROUND_SECONDS = 0.1, 2, 60.0  # budget: 8 in round 0, 6 after
 
@@ -188,20 +188,45 @@ def test_resume_after_catalog_maintenance(spark, tmp_path, corpus_path,
 # fetch/extract, and the table commits. Round state, schemas, seeds, the
 # lineage row and the global order's offsets cost none; a change that adds
 # a metadata job back fails here.
-DRAIN_ROUND_MAX_JOBS = 27
+DRAIN_ROUND_MAX_JOBS = 26
+# Analyzed plan of any table write in a round. The round cuts its lineage
+# at the decision and extraction checkpoints, so a write plans over a
+# LogicalRDD leaf: 0.5-7.5 KB here. A write that still carries the decision
+# chain (the two materialization points as caches) measures 33-330 KB.
+WRITE_PLAN_MAX_BYTES = 16 * 1024
 
 
-def test_drain_round_job_budget(spark, tmp_path, corpus_path, seeds):
+def test_drain_round_job_budget(spark, tmp_path, corpus_path, seeds,
+                                monkeypatch):
     cat = SnapshotCatalog(spark, str(tmp_path / "wh_budget"))
     # budget 3 per host in round 0, then 1: rounds 1 and 2 drain deferrals
     job = CrawlJob(spark, cat, corpus_path, seeds, rps=0.02, burst=2,
                    round_seconds=ROUND_SECONDS)
     job.run_round(0)
+    write_plans = {}
+    write_fragment = cat._write_fragment
+
+    def recording_write(table, version, df):
+        write_plans[table] = df._jdf.queryExecution().analyzed().toString()
+        return write_fragment(table, version, df)
+
+    monkeypatch.setattr(cat, "_write_fragment", recording_write)
     job.run_round(1)    # warm: compiles the drain round's plans
+    monkeypatch.undo()
+    assert set(write_plans) >= {"fetch_log", "url_seen", "pages_out",
+                                "inverted_terms", "frontier"}
+    for table, plan in write_plans.items():
+        # the ~120-regex filter-decision chain leaked past the checkpoint
+        assert "RLIKE" not in plan, table
+        assert len(plan) < WRITE_PLAN_MAX_BYTES, (table, len(plan))
+
+    persisted = persisted_rdd_ids(spark)
     with count_jobs(spark) as jobs:
         counters = job.run_round(2)
     assert counters["scheduled"] > 0 and counters["deferred"] > 0
     assert jobs["n"] <= DRAIN_ROUND_MAX_JOBS, jobs["n"]
+    # no checkpoint or cache of the round outlives it
+    assert persisted_rdd_ids(spark) == persisted
 
 
 def test_failed_round_awaits_filtered_log_commit(spark, tmp_path, corpus_path,
@@ -230,10 +255,13 @@ def test_failed_round_awaits_filtered_log_commit(spark, tmp_path, corpus_path,
 
     monkeypatch.setattr(job.cat, "merge_not_matched", slow_merge)
     monkeypatch.setattr(crawl_mod, "schedule_round", failing_schedule)
+    persisted = persisted_rdd_ids(spark)
     with pytest.raises(RuntimeError, match="injected schedule failure"):
         job.run_round(0)
     raised = time.monotonic()
     assert landed and landed[0] <= raised
+    # the failed round released its discovery cache and decision checkpoint
+    assert persisted_rdd_ids(spark) == persisted
 
     monkeypatch.undo()
     retry = _job(spark, tmp_path, corpus_path, seeds, "wh_fail")
