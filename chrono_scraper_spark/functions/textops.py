@@ -137,12 +137,6 @@ def shingles(toks: Column, k: int = 3) -> Column:
                  .otherwise(F.array().cast("array<string>")))
 
 
-def rolling_fingerprint(text: Column, k: int = 8) -> Column:
-    """Rolling-hash document fingerprint: min md5 over word k-gram windows —
-    a winnowing-style signature stable under local edits."""
-    return F.array_min(F.transform(shingles(tokens(text), k), F.md5))
-
-
 def _let(val: Column, body) -> Column:
     """Let-binding for column expressions: evaluate ``val`` ONCE and bind
     it as a lambda variable in ``body``. ``transform``'s collection child

@@ -49,7 +49,9 @@ def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 10,
                            query_id_col: str = "query_id") -> DataFrame:
     """Exact top-k by cosine: broadcast the (small) query set against the
     corpus, rank per query. Deterministic tie-break on neighbor id.
-    Output: (query_id, neighbor_id, rank, cosine)."""
+    Output: (query_id, neighbor_id, rank, cosine). The cosine is unrounded:
+    a caller that rounds must round once, or a value just below a rounding
+    half (0.33749967 → 0.3375 → 0.338) lands on the wrong side of it."""
     c = corpus.select(F.col(id_col).alias("neighbor_id"),
                       F.col(vec_col).cast("array<double>").alias("cv"))
     q = queries.select(F.col(query_id_col).alias("query_id"),
@@ -60,8 +62,7 @@ def cosine_topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 10,
         F.desc("cosine"), F.asc("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("cosine", 6).alias("cosine")))
+            .select("query_id", "neighbor_id", "rank", "cosine"))
 
 
 def _hamming1_probes(sig: Column, n_planes: int) -> Column:
@@ -166,8 +167,7 @@ def cosine_topk_ivf(corpus: DataFrame, queries: DataFrame, k: int = 10,
         F.desc("cosine"), F.asc("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("cosine", 6).alias("cosine")))
+            .select("query_id", "neighbor_id", "rank", "cosine"))
 
 
 def cosine_topk_lsh(corpus: DataFrame, queries: DataFrame, k: int = 10,
@@ -205,5 +205,4 @@ def cosine_topk_lsh(corpus: DataFrame, queries: DataFrame, k: int = 10,
         F.desc("cosine"), F.asc("neighbor_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank",
-                    F.round("cosine", 6).alias("cosine")))
+            .select("query_id", "neighbor_id", "rank", "cosine"))

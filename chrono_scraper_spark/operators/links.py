@@ -110,8 +110,8 @@ def meta_robots(pages: DataFrame, html_col: str = "html",
     ``noindex`` → the page may be fetched but must not enter the search
     index (compose: ``pages_out.join(meta_robots(pages).filter("noindex")
     .select("url"), "url", "left_anti")`` before ``build_page_index``);
-    ``nofollow`` → none of the page's links may seed further crawling
-    (the spider honors this). ``none`` implies both (Google/REP
+    ``nofollow`` → none of the page's links may seed further crawling.
+    ``none`` implies both (Google/REP
     convention). ALL robots meta tags combine (REP: directives are the
     union across tags), and tokens may be comma- or space-separated.
     Pure codegen regexp/contains — no UDF — and byte-replayable in the

@@ -318,7 +318,8 @@ def embedding_near_duplicates(
     output is exact wherever a pair is recalled. Recall follows the LSH
     S-curve 1-(1-p^r)^b with p = 1 - θ/π — multiple bands avoid the
     single-AND-band recall cliff. Shuffle volume ∝ bucket collisions
-    (bands × n rows keyed by (band, sig)), never n².
+    (bands × n rows keyed by (band, sig)), never n². The cosine is
+    unrounded (see ``ann.cosine_topk_bruteforce``).
     """
     vecs = emb.select(F.col(id_col).alias("__id"),
                       F.col(vec_col).cast("array<double>").alias("__v"))
@@ -345,7 +346,7 @@ def embedding_near_duplicates(
         pairs = left.crossJoin(right).filter(F.col("a") < F.col("b"))
     return (pairs.withColumn("cosine", cosine(F.col("va"), F.col("vb")))
             .filter(F.col("cosine") >= threshold)
-            .select("a", "b", F.round("cosine", 6).alias("cosine")))
+            .select("a", "b", "cosine"))
 
 
 # --------------------------------------------------------------------------

@@ -427,30 +427,6 @@ class SnapshotCatalog:
         return self.commit(table, df, operation="compact",
                            properties=properties)
 
-    def compact_collapse(self, table: str, key_cols: tuple, ts_col: str,
-                         *, properties: dict | None = None) -> dict:
-        """Latest-wins rewrite: compact an append-only latest-wins table
-        (validators, revalidate_log-style logs read through a
-        newest-row-per-key collapse) down to ONE row per key — the newest
-        by ``ts_col``, ties broken by the remaining columns' struct order
-        exactly like every read-side collapse (operators.dedup.
-        latest_captures, shared code). Readers see identical results
-        before and after; superseded rows stop costing scan time and
-        disk. The Iceberg analog: rewrite_data_files with an
-        equality-delete-style dedup folded in. History stays
-        time-travelable until ``expire_snapshots`` reclaims it.
-
-        Without this, a validators table grows one row per URL per
-        check — linear in checks at 10^10-URL scale; collapsed it is
-        O(distinct urls)."""
-        from chrono_scraper_spark.operators.dedup import latest_captures
-
-        collapsed = latest_captures(self.read(table),
-                                    key_cols=tuple(key_cols),
-                                    ts_col=ts_col)
-        return self.commit(table, collapsed, operation="compact_collapse",
-                           properties=properties)
-
     def expire_snapshots(self, table: str, *, keep_last: int = 2) -> dict:
         """Iceberg ``expire_snapshots`` analog: drop all but the newest
         ``keep_last`` manifests and DELETE fragment directories no retained

@@ -95,6 +95,11 @@ LINEAGE_SCHEMA = StructType([
 
 
 class CrawlJob:
+    # two-phase politeness ranking: prune per (host, salt) before the exact
+    # per-host window — scheduled set provably identical, but a mega-host
+    # never pins one task on a full frontier sort
+    schedule_prune_k = 16
+
     def __init__(
         self,
         spark: SparkSession,
@@ -109,9 +114,6 @@ class CrawlJob:
         robots_rules: DataFrame | None = None,
         budget_overrides: DataFrame | None = None,
         salt_target_rows: int | None = None,
-        schedule_prune_k: int | None = 16,
-        bloom_buckets: int | None = None,
-        compact_every: int | None = None,
         broadcast_fetch_join: bool = True,
         retry_transient: bool = False,
         max_retries: int = C.MAX_RETRIES,
@@ -138,18 +140,6 @@ class CrawlJob:
         self.robots_rules = robots_rules
         self.budget_overrides = budget_overrides
         self.salt_target_rows = salt_target_rows
-        # two-phase politeness ranking: prune per (host, salt) before the
-        # exact per-host window — scheduled set provably identical, but a
-        # mega-host never pins one task on a full frontier sort
-        self.schedule_prune_k = schedule_prune_k
-        # >0: per-bucket executor-built seen-set Bloom filters under the
-        # catalog root (no global broadcast — the 10^10-key path)
-        self.bloom_buckets = bloom_buckets
-        # fold fragment chains every N rounds (Iceberg rewrite_data_files as
-        # a maintenance job, not per-commit — commits stay O(delta)); None =
-        # never (the default: reads tolerate long chains, rewrites are the
-        # thing the delta catalog exists to avoid)
-        self.compact_every = compact_every
         self.broadcast_fetch_join = broadcast_fetch_join
         # T7: re-enter failed rows next round until max_retries (celery
         # retry analog, shared_pages_scraping.py:277-284). Off by default:
@@ -353,15 +343,8 @@ class CrawlJob:
             seen_n = (self.cat.row_count("url_seen", seen_ver)
                       if seen_ver is not None else 0)
             if seen_n > BLOOM_THRESHOLD:
-                import os as _os
-
-                bloom_dir = (_os.path.join(self.cat.root, "_bloom",
-                                           f"r{round_idx:05d}")
-                             if self.bloom_buckets else None)
                 cands = bloom_prefilter_anti_join(cands, seen, FRONTIER_KEY,
-                                                  expected_items=seen_n,
-                                                  n_buckets=self.bloom_buckets,
-                                                  bloom_dir=bloom_dir)
+                                                  expected_items=seen_n)
             elif seen_n > 0:
                 cands = anti_join_seen(cands, seen, FRONTIER_KEY)
 
@@ -787,19 +770,11 @@ class CrawlJob:
         self.cat.append_rows("crawl_rounds", [lineage], LINEAGE_SCHEMA,
                              properties={"round_idx": round_idx,
                                          "table_versions": versions})
-        if (self.compact_every
-                and round_idx % self.compact_every == self.compact_every - 1):
-            for t in ("url_seen", "inverted_terms", "fetch_log",
-                      "pages_out", "filtered_log", "seen_digests"):
-                if self.cat.exists(t):
-                    self.cat.compact(t, properties={"round_idx": round_idx})
-                    # NOTE: disk reclaim (cat.expire_snapshots, keep_last=1)
-                    # must run as an OFFLINE maintenance step between crawl
-                    # runs, not here: this round's lineage row pins the
-                    # PRE-compaction versions for torn-round replay, and
-                    # expiring them would break a replay after a crash —
-                    # the same reason Iceberg separates expire_snapshots
-                    # from writers.
+        # NOTE: compaction and disk reclaim run OFFLINE between crawl runs
+        # (scripts/maintain_catalog.py), never here: this round's lineage row
+        # pins the versions a torn-round replay reads, and expiring them
+        # would break a replay after a crash — the same reason Iceberg
+        # separates expire_snapshots from writers.
         return counters
 
     # ------------------------------------------------------------------ runs

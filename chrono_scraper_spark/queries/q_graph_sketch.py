@@ -412,7 +412,7 @@ SELECT src_url, src_host, href, anchor_text, dst_url, dst_host FROM links""")
 
 def q_links_nofollow(spark, sf_dir):
     """Per-link ``rel="nofollow"`` reporting (operators/links.py): the
-    planted local link carries the token; the spider and link graph can
+    planted local link carries the token; a link-graph consumer can
     drop such edges without re-parsing html. Same RE2-safe tag pass as
     link_extract — the flag is one rel-extraction + token membership on
     a comma-normalized string."""

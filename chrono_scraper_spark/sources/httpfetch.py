@@ -407,10 +407,3 @@ def fetch_robots(frontier: DataFrame, *, scheme: str = "https",
          .otherwise(F.lit(None).cast("string")).alias("body"),
     )
     return out if keep_missing else out.filter(F.col("body").isNotNull())
-
-
-def replay_url_template(archive_host: str = "web.archive.org") -> str:
-    """The reference's wayback content-URL shape
-    (wayback_machine.py / content_extraction_service content_url): the
-    ``id_`` flag requests the unmodified original capture bytes."""
-    return f"https://{archive_host}/web/{{ts14}}id_/{{url}}"

@@ -2,17 +2,20 @@
 
 The reference is a Celery-beat micro-batch system (celery_app.py:115-151);
 the engine's batch round loop (plans/crawl.py) is the deterministic analog.
-This module is the *streaming* deployment of the same operators: new corpus
-files arrive continuously, each micro-batch runs the filter chain + dedup +
-commit via ``foreachBatch``, and watermarked windowed aggregations handle
-late captures (the reference's overlap_days=7 re-read window,
-incremental_scraping.py:131-146, IS a 7-day allowed-lateness watermark).
+This module is the *streaming* deployment of that loop: new corpus files
+arrive continuously and each micro-batch runs one crawl round via
+``foreachBatch`` (``crawl_stream_writer`` → ``run_stream_round`` →
+``CrawlJob.run_round``), so streaming and batch share one code path for
+seen-set dedup, politeness, extraction and the catalog commits. Beside the
+round, watermarked windowed aggregations handle late captures (the
+reference's overlap_days=7 re-read window, incremental_scraping.py:131-146,
+IS a 7-day allowed-lateness watermark), and sketch and alert writers merge
+per-batch results into catalog tables.
 
-Scale notes: ``foreachBatch`` gives the batch DataFrame API inside the
-stream, so the exact same dedup/MERGE code paths run per micro-batch; state
-never lives in executor memory (the url_seen table is the state, as in the
-batch design). The windowed aggregation uses Spark's streaming state store
-with watermark-based eviction — state is bounded by (window × lateness).
+Scale notes: state never lives in executor memory (the url_seen table is
+the state, as in the batch design). The windowed aggregations use Spark's
+streaming state store with watermark-based eviction — state is bounded by
+(window × lateness).
 """
 
 from __future__ import annotations
@@ -20,10 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import in_batch_dedup
-from ..operators.filters import with_filter_decision
-from ..functions.urls import ts14, with_url_parts
+from ..functions.urls import ts14
+from ..operators.dedup import collapse_digest, in_batch_dedup
 from ..plans.catalog import SnapshotCatalog
+from ..plans.crawl import FRONTIER_KEY
+from ..sources.cdx import discover
 
 PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, text string, "
                 "lang string, host string, path string, mime string, "
@@ -38,41 +42,6 @@ def read_pages_stream(spark: SparkSession, path: str,
     return (spark.readStream.schema(PAGES_SCHEMA)
             .option("maxFilesPerTrigger", max_files_per_trigger)
             .parquet(path))
-
-
-def frontier_stream_writer(stream: DataFrame, catalog: SnapshotCatalog,
-                           checkpoint_dir: str):
-    """Per-micro-batch frontier ingestion: filter chain + in-batch dedup +
-    idempotent MERGE into the url_seen/frontier tables. Restart-safe: the
-    streaming checkpoint replays the batch and every MERGE converges
-    (T4/T5)."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.columns:
-            return
-        df = batch_df
-        if "ts14" not in df.columns:
-            df = df.withColumn("ts14", ts14(F.col("warc_ts")))
-        if "url_canon" not in df.columns:
-            df = with_url_parts(df.drop("host", "path"))
-        df = df.filter(F.col("status") == 200)
-        df = in_batch_dedup(df, ["url_canon", "ts14"])
-        decided = with_filter_decision(df)
-        catalog.merge_not_matched(
-            "stream_frontier",
-            decided.select(
-                "url", "url_canon", "ts14", "host", "digest", "length",
-                F.col("decision.status").alias("status"),
-                F.col("decision.priority_score").alias("priority_score"),
-                F.lit(batch_id).alias("batch_id"),
-            ),
-            ["url_canon", "ts14"],
-            properties={"batch_id": batch_id},
-        )
-
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True))
 
 
 def run_stream_round(job, new_pages: DataFrame) -> dict:
@@ -92,10 +61,6 @@ def run_stream_round(job, new_pages: DataFrame) -> dict:
     manifests and the seed list from the job's once-collected rows, so no
     Spark job runs here before the round's own.
     """
-    from ..operators.dedup import collapse_digest, in_batch_dedup
-    from ..plans.crawl import FRONTIER_KEY
-    from ..sources.cdx import discover
-
     round_idx = job.next_round()
     prev = job._prev_versions(round_idx)
     raw = discover(new_pages, job.seeds,
@@ -176,22 +141,6 @@ def sessionized_host_activity(stream: DataFrame,
             .select(F.col("w.start").alias("session_start"),
                     F.col("w.end").alias("session_end"),
                     "host", "n_captures"))
-
-
-def dedup_url_stream(stream: DataFrame,
-                     watermark: str = "7 days") -> DataFrame:
-    """Streaming twin of the D4 URL-seen dedup: first sighting of each
-    ``(url, warc_ts)`` snapshot key passes, replays are dropped —
-    ``dropDuplicatesWithinWatermark``, so the state store holds one key
-    per snapshot seen within the watermark horizon and evicts anything
-    older (bounded state; the batch seen-set is unbounded by design,
-    the stream can't be). A replayed CDX page arriving > watermark late
-    is re-emitted — downstream the idempotent catalog MERGE (D6) makes
-    that harmless, which is exactly the reference's at-least-once +
-    idempotent-insert contract (incremental_scraping.py's allowed-lateness
-    window backstopped by the unique (url, ts) index)."""
-    return (stream.withWatermark("warc_ts", watermark)
-            .dropDuplicatesWithinWatermark(["url", "warc_ts"]))
 
 
 def hll_stream_writer(stream: DataFrame, catalog: SnapshotCatalog,
@@ -277,7 +226,6 @@ def alerts_stream_writer(stream: DataFrame, catalog: SnapshotCatalog,
     the same capture converge to one row. ``ts14`` derives from
     ``warc_ts`` when absent. Per-batch cost is batch-cardinality (the
     corpus never re-tokenizes)."""
-    from ..functions.urls import ts14 as _ts14
     from ..operators.alerts import match_saved_queries
 
     ids = [id_col] if isinstance(id_col, str) else list(id_col)
@@ -287,38 +235,11 @@ def alerts_stream_writer(stream: DataFrame, catalog: SnapshotCatalog,
             return
         df = batch_df
         if "ts14" in ids and "ts14" not in df.columns:
-            df = df.withColumn("ts14", _ts14(F.col("warc_ts")))
+            df = df.withColumn("ts14", ts14(F.col("warc_ts")))
         m = match_saved_queries(df, saved, id_col=tuple(ids),
                                 text_col=text_col)
         catalog.merge_not_matched(table, m, ["query_id", *ids],
                                   properties={"batch_id": batch_id})
-
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True))
-
-
-def revalidate_stream_writer(stream: DataFrame, job, checkpoint_dir: str,
-                             now_ts14_fn=None):
-    """Signal-driven revalidation: each micro-batch of ``url`` rows
-    (sitemap ``stale`` claims, feed items, alert follow-ups — whatever
-    upstream says "this page may have changed") runs ONE RevalidateJob
-    round restricted to exactly those URLs. The conditional-fetch
-    economics carry over: a false signal costs a 304 header exchange,
-    a true one re-extracts and re-indexes just that page.
-
-    ``now_ts14_fn(batch_id) -> ts14`` pins each batch's capture
-    timestamp (tests/replays pass a deterministic map; production passes
-    wall clock). Checkpoint replays converge: pages_out/inverted_terms
-    merges are key-idempotent and validators collapse latest-wins
-    (test_revalidate_plan round-replay property)."""
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.columns or batch_df.isEmpty():
-            return
-        now = (now_ts14_fn(batch_id) if now_ts14_fn
-               else __import__("datetime").datetime.utcnow()
-               .strftime("%Y%m%d%H%M%S"))
-        job.run_round(int(batch_id), now, urls=batch_df.select("url"))
 
     return (stream.writeStream.foreachBatch(_process)
             .option("checkpointLocation", checkpoint_dir)

@@ -52,10 +52,6 @@ def main() -> None:
                          "fragments than this (0 = always compact)")
     ap.add_argument("--keep-last", type=int, default=2,
                     help="snapshots to retain per table (>=1)")
-    ap.add_argument("--collapse", action="append", default=[],
-                    help="latest-wins collapse spec table:key1+key2:ts_col "
-                         "(e.g. validators:url:checked_ts14) — rewrites the "
-                         "table to one newest row per key before compaction")
     ap.add_argument("--master", default=None,
                     help="spark master (default: engine default)")
     args = ap.parse_args()
@@ -70,23 +66,13 @@ def main() -> None:
             if os.path.isdir(os.path.join(args.root, d))
             and cat.exists(d))
 
-    collapse_specs = {}
-    for spec in args.collapse:
-        table, keys, ts_col = spec.split(":")
-        collapse_specs[table] = (tuple(keys.split("+")), ts_col)
-
     before_total = after_total = 0
     for table in tables:
         before = _dir_bytes(os.path.join(args.root, table))
         m = cat.manifest(table)
         n_frags = len(m.get("fragments") or [m]) if m else 0
         compacted = False
-        if table in collapse_specs:
-            keys, ts_col = collapse_specs[table]
-            cat.compact_collapse(table, keys, ts_col,
-                                 properties={"maintenance": True})
-            compacted = True
-        elif n_frags > args.compact_threshold:
+        if n_frags > args.compact_threshold:
             cat.compact(table, properties={"maintenance": True})
             compacted = True
         expired = cat.expire_snapshots(table, keep_last=max(1, args.keep_last))

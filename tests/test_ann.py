@@ -109,3 +109,48 @@ def test_ivf_probe_widening_monotone(spark, emb):
             emb, queries, k=5, n_centroids=8, n_probe=p).collect()}
         rec.append(len(a & brute) / len(brute))
     assert rec[1] >= rec[0], rec
+
+
+def test_headline_cosines_round_once(spark, tmp_path):
+    """``ann_topk`` and ``embedding_near_dups`` round each cosine once, to 3
+    places, as their DuckDB twins do. Rounding a 6-place value again moves
+    a cosine just below a 3-place half across it: 0.33749967 → 0.3375 →
+    0.338, and 0.99949996 → 0.9995 → 1.0."""
+    import math
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from chrono_scraper_spark.queries.q_embed import (
+        SQL_ANN_TOPK,
+        SQL_EMBEDDING_NEAR_DUPS,
+        q_ann_topk,
+        q_embedding_near_dups,
+    )
+
+    def unit(c):
+        return [c, math.sqrt(1.0 - c * c)]
+
+    sf_dir = str(tmp_path)
+    path = f"{sf_dir}/embeddings.parquet"
+    pq.write_table(pa.table({
+        "vec_id": pa.array([0, 1, 2], pa.int32()),
+        "embedding": [[1.0, 0.0], unit(0.33749967), unit(0.99949996)],
+    }), path)
+    con = duckdb.connect()
+    con.execute("CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{path}')")
+
+    ann_rows = {(r["query_id"], r["neighbor_id"]): r["cosine"]
+                for r in q_ann_topk(spark, sf_dir).collect()}
+    assert ann_rows[(0, 1)] == 0.337
+    assert ann_rows[(0, 2)] == 0.999
+    assert ann_rows == {(q, n): c for q, n, _rank, c in
+                        con.sql(SQL_ANN_TOPK).fetchall()}
+
+    dups = {(r["a"], r["b"]): r["cosine"]
+            for r in q_embedding_near_dups(spark, sf_dir).collect()}
+    assert dups[(0, 2)] == 0.999
+    assert dups == {(a, b): c for a, b, c in
+                    con.sql(SQL_EMBEDDING_NEAR_DUPS).fetchall()}

@@ -257,40 +257,6 @@ def test_merge_expect_version_fast_path_and_replay_fallback(spark, tmp_path):
     assert m1["row_count"] == 3
 
 
-def test_compact_collapse_latest_wins(spark, tmp_path):
-    """compact_collapse folds a latest-wins table to one row per key;
-    reads are identical before/after and history stays time-travelable
-    until expiry."""
-    from chrono_scraper_spark.operators.dedup import latest_captures
-    from chrono_scraper_spark.plans.catalog import SnapshotCatalog
-
-    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
-    mk = lambda rows: spark.createDataFrame(  # noqa: E731
-        rows, "url string, etag string, checked_ts14 string")
-    cat.append("validators", mk([("u1", "a", "1"), ("u2", "x", "1")]))
-    cat.append("validators", mk([("u1", "b", "2")]))
-    cat.append("validators", mk([("u1", "c", "3"), ("u2", "y", "2")]))
-    pre_version = cat.current_version("validators")
-    assert cat.row_count("validators") == 5
-
-    before = sorted(map(tuple, latest_captures(
-        cat.read("validators"), key_cols=("url",),
-        ts_col="checked_ts14").collect()))
-    cat.compact_collapse("validators", ("url",), "checked_ts14")
-    assert cat.row_count("validators") == 2     # one row per key
-    after_raw = sorted(map(tuple, cat.read("validators").collect()))
-    assert after_raw == before                  # table IS the collapse now
-    # the read-side collapse is a no-op on the compacted table
-    after = sorted(map(tuple, latest_captures(
-        cat.read("validators"), key_cols=("url",),
-        ts_col="checked_ts14").collect()))
-    assert after == before
-    assert [r[0] for r in after] == ["u1", "u2"]
-    assert dict((r[0], r[1]) for r in after) == {"u1": "c", "u2": "y"}
-    # pre-compaction history remains time-travelable
-    assert cat.read("validators", version=pre_version).count() == 5
-
-
 def _three_fragments(spark, cat):
     """Three delta fragments; the third adds a column."""
     cat.append("t", spark.createDataFrame([(1, "a")], "id int, v string"))

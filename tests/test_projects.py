@@ -1,9 +1,7 @@
 """Project↔page linking: idempotent junction, prefix reuse, shared-doc
-build (D9/J5/J6) and crawl retry/circuit-breaker options (T7/T8)."""
+build (D9/J5/J6)."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from chrono_scraper_spark.operators import projects as P
 
@@ -47,54 +45,6 @@ def test_build_shared_docs(spark):
     docs = {r["url_canon"]: r for r in P.build_shared_docs(pages, j).collect()}
     assert docs["a1"]["project_ids"] == [1, 2] and docs["a1"]["is_shared"]
     assert docs["a2"]["project_ids"] == [1] and not docs["a2"]["is_shared"]
-
-
-def test_retry_transient_and_breaker(spark, tmp_path):
-    """T7: failed extractions re-enter the frontier until max_retries, then
-    terminalize; deterministic corpus → same failure each attempt."""
-    from chrono_scraper_spark.corpus import generate_pages
-    from chrono_scraper_spark.plans.catalog import SnapshotCatalog
-    from chrono_scraper_spark.plans.crawl import CrawlJob
-
-    corpus = str(tmp_path / "pages")
-    # bump the CDX-reported length so short docs (extraction failures)
-    # survive the size filter — in real CDX data `length` is the WARC
-    # record size, not the html byte count
-    generate_pages(spark, 40, partitions=2).withColumn(
-        "length", F.col("length") + 1500
-    ).write.parquet(corpus)
-    seeds = spark.createDataFrame(
-        [(1, r"https://.*", "regex", None, None, None)],
-        "project_id int, domain_name string, match_type string, "
-        "url_path string, from_date date, to_date date")
-
-    job = CrawlJob(spark, SnapshotCatalog(spark, str(tmp_path / "wh")),
-                   corpus, seeds, rps=1000.0, burst=0,
-                   retry_transient=True, max_retries=2)
-    rounds = job.run(max_rounds=10)
-    # short docs fail deterministically → retried twice then terminal
-    assert any(r.get("retrying", 0) > 0 for r in rounds)
-    assert rounds[-1].get("retrying", 0) == 0
-
-    log = job.cat.read("fetch_log")
-    attempts = (log.filter("fetch_status = 'failed'")
-                .groupBy("url_canon", "ts14")
-                .agg(F.count(F.lit(1)).alias("n"),
-                     F.max("retry_count").alias("max_rc")))
-    top = attempts.agg(F.max("n"), F.max("max_rc")).first()
-    assert top[0] == 3 and top[1] == 2  # initial try + 2 retries
-    # terminal failures ended up in url_seen exactly once
-    seen_failed = job.cat.read("url_seen").filter("status = 'failed'")
-    assert seen_failed.count() == attempts.count()
-
-    # T8: breaker trips on high failure rate
-    job2 = CrawlJob(spark, SnapshotCatalog(spark, str(tmp_path / "wh2")),
-                    corpus, seeds, rps=1000.0, burst=0,
-                    retry_transient=True, max_retries=5,
-                    failure_rate_trip=0.01)
-    rounds2 = job2.run(max_rounds=10)
-    assert rounds2[-1].get("circuit_open")
-    assert len(rounds2) < 6
 
 
 class TestProjectEfficiency:

@@ -1,5 +1,6 @@
-"""Structured Streaming surface: micro-batch frontier ingestion via
-foreachBatch (restart-idempotent) and watermarked windowed aggregation."""
+"""Structured Streaming surface: the crawl round as a foreachBatch job
+(parity with the batch CrawlJob), watermarked windowed aggregation and the
+restart-idempotent sketch writers."""
 
 from __future__ import annotations
 
@@ -15,27 +16,6 @@ def stream_corpus(spark, tmp_path_factory):
     p = str(tmp_path_factory.mktemp("stream") / "pages")
     generate_pages(spark, 80, partitions=4).write.parquet(p)
     return p
-
-
-def test_frontier_stream_ingestion(spark, tmp_path, stream_corpus):
-    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
-    stream = MB.read_pages_stream(spark, stream_corpus, max_files_per_trigger=2)
-    q = MB.frontier_stream_writer(stream, cat, str(tmp_path / "ckpt")).start()
-    q.awaitTermination(120)
-    out = cat.read("stream_frontier")
-    n = out.count()
-    assert n > 0
-    # keyed MERGE ⇒ no duplicate (url_canon, ts14)
-    assert out.select("url_canon", "ts14").distinct().count() == n
-    # several micro-batches ran (maxFilesPerTrigger=2 over 4 files)
-    assert len(cat.snapshots("stream_frontier")) >= 2
-
-    # restart over the same checkpoint: no new data → state unchanged
-    q2 = MB.frontier_stream_writer(
-        MB.read_pages_stream(spark, stream_corpus), cat,
-        str(tmp_path / "ckpt")).start()
-    q2.awaitTermination(60)
-    assert cat.read("stream_frontier").count() == n
 
 
 def test_windowed_capture_counts(spark, tmp_path, stream_corpus):
@@ -175,41 +155,6 @@ def test_sessionized_host_activity_matches_batch(spark, tmp_path,
     # corpus must close most of them (max ts - 1 h watermark)
     assert got and got <= exp_all
     assert len(got) >= len(exp_all) * 0.5
-
-
-def test_dedup_url_stream_drops_replays(spark, tmp_path):
-    # two micro-batch files: batch 1 has an internal dup; batch 2 replays
-    # two batch-1 keys and adds one new one — output = 4 distinct keys
-    import datetime as dt
-
-    d = tmp_path / "in"
-    d.mkdir()
-    t0 = dt.datetime(2021, 6, 1, 12, 0, 0)
-    rows1 = [("https://a/x", t0), ("https://a/x", t0),
-             ("https://a/y", t0), ("https://b/z", t0)]
-    rows2 = [("https://a/x", t0), ("https://b/z", t0),
-             ("https://b/w", t0)]
-    schema = "url string, warc_ts timestamp"
-    spark.createDataFrame(rows1, schema).coalesce(1) \
-        .write.parquet(str(d / "b1"))
-    spark.createDataFrame(rows2, schema).coalesce(1) \
-        .write.parquet(str(d / "b2"))
-
-    from chrono_scraper_spark.streaming.micro_batch import dedup_url_stream
-
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(str(d / "*")))
-    out = dedup_url_stream(stream)
-    q = (out.writeStream.format("memory").queryName("dedup_sink")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = sorted((r["url"],) for r in
-                 spark.sql("select url from dedup_sink").collect())
-    assert got == [("https://a/x",), ("https://a/y",),
-                   ("https://b/w",), ("https://b/z",)]
 
 
 def test_hll_stream_matches_batch_sketch(spark, tmp_path, stream_corpus):
