@@ -26,12 +26,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
     sched = _scheduled(spark, "/root/testdata/sf0.001").filter(
         F.col("sched_status") == "scheduled")
-    # _global_order_cache contract: with_global_order caches the
-    # range-partitioned frame (its count pass and seq-assign pass must see
-    # one partitioning). The handle rides on the returned DataFrame;
-    # long-lived callers unpersist it after materializing (CrawlJob does).
-    # Here the driver collects the result and exits — the one cached frame
-    # (~sf0.001 rows) is reclaimed by the ContextCleaner / session stop.
+    # With no row bound, with_global_order caches the range-partitioned
+    # frame (its count pass and seq-assign pass must see one
+    # partitioning) and hangs the handle on the result as
+    # ``_global_order_cache``. CrawlJob passes the pending count as a row
+    # bound, so a round-sized schedule caches nothing. Here the driver
+    # collects the result and exits — the one cached frame (~sf0.001
+    # rows) is reclaimed by the ContextCleaner / session stop.
     return with_global_order(sched).select(
         "seq", "url", "ts14", "host",
         F.col("decision.priority_score").alias("priority_score"),

@@ -102,11 +102,6 @@ PAGES_CTE_DUCK = _PAGES_CTE_TEMPLATE.format(
 )
 
 
-def duck_pages_cte(table: str = "pages_cdx") -> str:
-    """DuckDB CTE prelude for oracle SQL strings."""
-    return f"WITH {table} AS ({PAGES_CTE_DUCK})"
-
-
 def cdx_pages_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The oracle-parity CDX frontier as a Spark DataFrame.
 

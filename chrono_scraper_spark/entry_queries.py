@@ -328,31 +328,12 @@ ORACLES: dict[str, str] = {
 }
 
 from chrono_scraper_spark.queries import recommend as _qrec  # noqa: E402
-from chrono_scraper_spark.queries import q_dashboard as _qdash  # noqa: E402
-from chrono_scraper_spark.queries import q_keys as _qkeys  # noqa: E402
-from chrono_scraper_spark.queries import q_plans as _qpl  # noqa: E402
-from chrono_scraper_spark.queries import q_queryplan as _qqp  # noqa: E402
 from chrono_scraper_spark.queries import q_batchsched as _qbs  # noqa: E402
-from chrono_scraper_spark.queries import q_optimizer as _qoz  # noqa: E402
-from chrono_scraper_spark.queries import q_cachemgr as _qcm  # noqa: E402
 
 QUERIES.update(_qrec.QUERIES)
-QUERIES.update(_qdash.QUERIES)
-QUERIES.update(_qkeys.QUERIES)
-QUERIES.update(_qpl.QUERIES)
-QUERIES.update(_qqp.QUERIES)
 QUERIES.update(_qbs.QUERIES)
-QUERIES.update(_qoz.QUERIES)
-QUERIES.update(_qcm.QUERIES)
-
 ORACLES.update(_qrec.ORACLES)
-ORACLES.update(_qdash.ORACLES)
-ORACLES.update(_qkeys.ORACLES)
-ORACLES.update(_qpl.ORACLES)
-ORACLES.update(_qqp.ORACLES)
 ORACLES.update(_qbs.ORACLES)
-ORACLES.update(_qoz.ORACLES)
-ORACLES.update(_qcm.ORACLES)
 
 _R5_WINDOW = [
     # never driver-checked, oracle-backed (33)

@@ -34,7 +34,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from chrono_scraper_spark.operators.dashboard import _floor_div
+
+def _floor_div(a: F.Column, b: F.Column) -> F.Column:
+    """Exact long floor division (no double round-trip): Spark's ``div``
+    truncates toward zero, so subtract the positive pmod first —
+    ``(a - pmod(a, b)) div b`` == floor(a / b) for b > 0. NOTE:
+    DuckDB's ``//`` truncates toward zero on negatives, so oracles for
+    possibly-negative quotients must use ``floor(a * 1.0 / b)``."""
+    a = a.cast("long")
+    b = b.cast("long")
+    return ((a - F.pmod(a, b)) / b).cast("long")
+
 
 #: config.py:554-556 + :751
 DEFAULT_SIZES = {"cdx_analytics": 50_000, "content_analytics": 25_000,

@@ -45,35 +45,3 @@ def test_build_shared_docs(spark):
     docs = {r["url_canon"]: r for r in P.build_shared_docs(pages, j).collect()}
     assert docs["a1"]["project_ids"] == [1, 2] and docs["a1"]["is_shared"]
     assert docs["a2"]["project_ids"] == [1] and not docs["a2"]["is_shared"]
-
-
-class TestProjectEfficiency:
-    def test_bands_and_arithmetic(self, spark):
-        from pyspark.sql import Row
-        from chrono_scraper_spark.operators.projects import (
-            project_efficiency)
-        # academic project: 4 captures, 3 share digests with web
-        # (linked), 1 unlinked 404 (already processing) → to_scrape 0;
-        # efficiency 75% → High / Excellent; reduction 3/(3+0) = 100%
-        rows = (
-            [Row(host="univ1.edu", digest=f"d{i}", status=200,
-                 url=f"e{i}") for i in range(3)]
-            + [Row(host="univ1.edu", digest="solo", status=404, url="e9")]
-            + [Row(host="site1.com", digest=f"d{i}", status=200,
-                   url=f"w{i}") for i in range(3)]
-        )
-        out = {r.project: r for r in
-               project_efficiency(spark.createDataFrame(rows)).collect()}
-        a = out["academic"]
-        assert a.total_pages_discovered == 4
-        assert a.pages_linked == 3
-        assert a.pages_already_processing == 1
-        assert a.pages_to_scrape == 0
-        assert a.scraping_reduction_milli == 100_000
-        assert a.overall_efficiency_milli == 75_000
-        assert a.sharing_potential == "High"
-        assert a.resource_optimization_level == "Excellent"
-        # time saved: 3 pages · 10 s = 30 s → 30000//3600 = 8 mh
-        assert a.time_saved_milli_hours == 30_000 // 3_600
-        # web: 3 linked of 3 → reduction 100%, efficiency 100%
-        assert out["web"].pages_to_scrape == 0
