@@ -39,10 +39,7 @@ from chrono_scraper_spark.queries.q_topics import *  # noqa: F401,F403
 from chrono_scraper_spark.queries._shared import _scheduled  # noqa: F401
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # --- positions 1-42: every query with no driver-green CORRECTNESS
-    # row through r03 (the 10 carried over from r3 + all round-4
-    # additions), so the 50-entry driver window finally hard-checks
-    # each of them. bpe_merges is rows-only (iterative argmax is not
+    # bpe_merges is rows-only (iterative argmax is not
     # single-SQL-expressible; python-twin parity tests hold its
     # correctness).
     "gopher_quality": q_gopher_quality,
@@ -74,24 +71,12 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "pack_emit": q_pack_emit,
     "vocab_topk": q_vocab_topk,
     "shard_assign": q_shard_assign,
-    # four swaps vs the r3 plan: the sixth-pass queries below are NEW
-    # operator families (SURT/CDXJ sink, redirect resolution, RFC 9309
-    # wildcard matching, budget apportionment) and take the window slots
-    # of four same-family variants whose siblings stay inside
-    # (exact_substring_removal, dedup_clusters, page_changes); the
-    # displaced variants move to position 51+ and remain locally
-    # oracle-checked via scripts/check_oracles.py.
     "surt_cdxj": q_surt_cdxj,
     "redirect_resolve": q_redirect_resolve,
-    "tfidf_topk": q_tfidf_topk,
-    "topic_clusters": q_topic_clusters,
-    "cluster_cohesion": q_cluster_cohesion,
-    "dbscan": q_dbscan,
     "page_changes": q_page_changes,
     "robots_wildcard": q_robots_wildcard,
     "authority_budgets": q_authority_budgets,
     "readability": q_readability,
-    "topic_assign": q_topic_assign,
     "bigram_logprob": q_bigram_logprob,
     "bpe_merges": q_bpe_merges,
     "recrawl_schedule": q_recrawl_schedule,  # new this round: freshness-
@@ -99,22 +84,16 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "bm25_rank": q_bm25_rank,  # new this round: Okapi BM25 relevance
     "link_extract": q_link_extract,  # new this round: href/anchor parsing
     "anchor_texts": q_anchor_texts,  # new this round: per-target anchors
-    "unigram_pieces": q_unigram_pieces,  # new this round: unigram-LM
-    # tokenizer training (rows-only, like bpe_merges)
     "sitemap_discover": q_sitemap_discover,  # new this round: sitemap
     # parsing + lastmod recrawl candidacy
     "wet_identity": q_wet_identity,  # new this round: WET conversion
     # record writer+parser round-trip
     "url_traps": q_url_traps,  # new this round: crawl-trap URL flags
-    # (position 50 — the window is now exactly the 50 queries with no
-    # driver-green row through r03; host_traps, the same family's
-    # host-level aggregate, sits first beyond it)
-    # --- outside the 50-entry driver window: variants and staples
-    # whose family is covered above; every one still runs through
-    # scripts/check_oracles.py ---
+    # --- variants and staples whose family is covered above; every one
+    # runs through scripts/check_oracles.py ---
     "exact_substring_spans": q_exact_substring_spans,  # removal's core
     "dedup_clusters_star": q_dedup_clusters_star,  # same oracle as
-    # dedup_clusters (inside the window)
+    # dedup_clusters
     "change_stats": q_change_stats,          # page_changes rollup
     "content_evolution": q_content_evolution,  # page_changes timeline
     "host_traps": q_host_traps,      # traps family host-level aggregate
@@ -144,8 +123,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "pct_normalize": q_pct_normalize,  # RFC 3986 escape normalization
     "script_profile": q_script_profile,  # Unicode-script composition
     "compression_ratio": q_compression_ratio,  # zlib quality signal
-    "image_near_dups": q_image_near_dups,  # dHash image dedup (real BMP
-    # kernel; full arithmetic-recompute oracle)
     # (rows-only: zlib has no SQL twin — python-twin parity in tests)
     "filter_decisions": q_filter_decisions,
     "robots_rules": q_robots_rules,
@@ -154,7 +131,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "crawl_order": q_crawl_order,
     "extraction_identity": q_extraction_identity,
     "embedding_near_dups": q_embedding_near_dups,
-    "multimodal_features": q_multimodal_features,
     "collapse_digest": q_collapse_digest,
     "registry_categorize": q_registry_categorize,
     "politeness_schedule_pruned": q_politeness_schedule_pruned,
@@ -260,7 +236,6 @@ ORACLES: dict[str, str] = {
     "extraction_identity": SQL_EXTRACTION_IDENTITY,
     "pdf_extraction_identity": SQL_PDF_EXTRACTION_IDENTITY,
     "robots_rules": SQL_ROBOTS_RULES,
-    "multimodal_features": SQL_MULTIMODAL_FEATURES,
     "gopher_quality": SQL_GOPHER_QUALITY,
     "decontaminate": SQL_DECONTAMINATE,
     "stratified_sample": SQL_STRATIFIED_SAMPLE,
@@ -288,15 +263,10 @@ ORACLES: dict[str, str] = {
     "asof_join": SQL_ASOF_JOIN,
     "dedup_clusters_star": SQL_DEDUP_CLUSTERS,
     "lm_buckets": SQL_LM_BUCKETS,
-    "tfidf_topk": SQL_TFIDF_TOPK,
-    "topic_clusters": SQL_TOPIC_CLUSTERS,
-    "cluster_cohesion": SQL_CLUSTER_COHESION,
-    "dbscan": SQL_DBSCAN,
     "page_changes": SQL_PAGE_CHANGES,
     "change_stats": SQL_CHANGE_STATS,
     "content_evolution": SQL_CONTENT_EVOLUTION,
     "readability": SQL_READABILITY,
-    "topic_assign": SQL_TOPIC_ASSIGN,
     "bigram_logprob": SQL_BIGRAM_LOGPROB,
     "frontier_priority": SQL_FRONTIER_PRIORITY,
     "frontier_priority_opic": SQL_FRONTIER_PRIORITY_OPIC,
@@ -324,19 +294,10 @@ ORACLES: dict[str, str] = {
     "wat_identity": SQL_WAT_IDENTITY,
     "pct_normalize": SQL_PCT_NORMALIZE,
     "script_profile": SQL_SCRIPT_PROFILE,
-    "image_near_dups": SQL_IMAGE_NEAR_DUPS,
 }
 
-from chrono_scraper_spark.queries import recommend as _qrec  # noqa: E402
-from chrono_scraper_spark.queries import q_batchsched as _qbs  # noqa: E402
-
-QUERIES.update(_qrec.QUERIES)
-QUERIES.update(_qbs.QUERIES)
-ORACLES.update(_qrec.ORACLES)
-ORACLES.update(_qbs.ORACLES)
-
 _R5_WINDOW = [
-    # never driver-checked, oracle-backed (33)
+    # never driver-checked, oracle-backed (28)
     "exact_substring_spans", "dedup_clusters_star", "change_stats",
     "content_evolution", "host_traps", "unicode_clean",
     "frontier_priority", "frontier_priority_opic", "hits", "url_tree",
@@ -344,9 +305,7 @@ _R5_WINDOW = [
     "rel_canonical", "saved_query_match", "cms_host_counts",
     "surt_collapse", "latest_captures", "mime_sniff", "soft404_detect",
     "feed_discover", "adaptive_budgets", "latest_postings", "opic",
-    "wat_identity", "pct_normalize", "script_profile", "image_near_dups",
-    "recommend_content", "trending_pages", "search_suggest",
-    "discover_domains",
+    "wat_identity", "pct_normalize", "script_profile",
 ]
 
 def _window_order(d: dict) -> dict:

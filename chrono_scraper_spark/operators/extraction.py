@@ -72,9 +72,6 @@ def _prescan_charset(head: bytes) -> str | None:
                 return cm.group(1).decode("ascii", errors="ignore").lower()
     return None
 
-_RE_ARTICLE = re.compile(r"<article>(.*?)</article>", re.S)
-_RE_TITLE = re.compile(r"<title>(.*?)</title>", re.S)
-_RE_PARA = re.compile(r"<p>(.*?)</p>", re.S)
 # E8 metadata: OpenGraph title + published date (extruct/htmldate analog,
 # intelligent_content_extractor.py:499-588)
 _RE_OG_TITLE = re.compile(
@@ -291,11 +288,6 @@ def extract_text_udf(html: pd.Series) -> pd.DataFrame:  # pragma: no cover
     return _batched_extract(extract_one)(html)
 
 
-@pandas_udf(_EXTRACT_CORE_SCHEMA)
-def extract_pdf_udf(payload: pd.Series) -> pd.DataFrame:  # pragma: no cover
-    return _batched_extract(extract_pdf_one)(payload)
-
-
 _UNSUPPORTED_MIME = "unsupported_mime"
 _UNSUPPORTED_ROW = (None, None, _UNSUPPORTED_MIME, 0, None, None, None)
 
@@ -338,10 +330,9 @@ def extract_dispatch_udf(
 # ---------------------------------------------------------------------------
 # PDF text extraction (E-family; the reference admits application/pdf through
 # the CDX filter and extracts PDF text, wayback_machine.py:741-907). No PDF
-# libs in this container, so — like the BMP/WAV kernels in multimodal.py —
-# this is a REAL dependency-free parser for uncompressed text-object PDFs
-# (the co-generated corpus shape), not a stub: writer + parser round-trip
-# text byte-identically.
+# libs in this container, so this is a REAL dependency-free parser for
+# uncompressed text-object PDFs (the co-generated corpus shape), not a stub:
+# writer + parser round-trip text byte-identically.
 # ---------------------------------------------------------------------------
 
 _PDF_ESC = {ord("\\"): "\\\\", ord("("): "\\(", ord(")"): "\\)",

@@ -1,10 +1,9 @@
 """Per-family contract-query modules.
 
-The crawl, search and analytics ``q_*`` modules export Spark query
-functions (``q_<name>``: (spark, sf_dir) -> DataFrame) and their DuckDB
-oracle SQL (``SQL_<NAME>``); ``_shared`` holds the CDX frontier helpers
-and CTE preludes they build on. Only ``recommend`` and the batch-job
-scheduler ``q_batchsched`` export ready-made ``QUERIES`` / ``ORACLES``
-fragments instead. ``entry_queries`` assembles
-both into the registry that ``__spark_entry__`` serves.
+Each ``q_*`` module exports Spark query functions (``q_<name>``:
+(spark, sf_dir) -> DataFrame) and their DuckDB oracle SQL
+(``SQL_<NAME>``); ``_shared`` holds the CDX frontier helpers and CTE
+preludes they build on. ``entry_queries`` star-imports every ``q_*``
+module and names each entry in its ``QUERIES`` / ``ORACLES`` dicts, the
+registry that ``__spark_entry__`` serves.
 """

@@ -1,4 +1,4 @@
-"""Extraction identity, multimodal features, hybrid source, ANN LSH/IVF variants.
+"""Extraction identity, hybrid source, ANN LSH/IVF variants.
 
 Split from entry_queries.py (round 5) — same definitions, same oracles.
 """
@@ -141,36 +141,6 @@ SELECT url, ts14, md5(text) AS text_md5,
   'doc ' || CAST(doc_id AS VARCHAR) AS og_title,
   strftime(warc_ts, '%Y-%m-%d') AS pub_date
 FROM pages_cdx WHERE mime = 'text/html'"""
-
-def q_multimodal_features(spark, sf_dir):
-    """Multimodal plumbing with a value oracle: payloads are deterministic
-    (sha256-derived), so byte-level features (length, entropy, header hex)
-    are recomputable in DuckDB SQL over the regenerated payload strings."""
-    from chrono_scraper_spark.operators.multimodal import (
-        extract_features,
-        synth_media,
-    )
-
-    media = synth_media(spark, 64)
-    return extract_features(media, fake=True).withColumn(
-        "byte_entropy", F.round("byte_entropy", 4))
-
-SQL_MULTIMODAL_FEATURES = """
-WITH m AS (SELECT t.range AS media_id FROM range(0, 64) t),
-p AS (
-  SELECT media_id,
-    CASE WHEN media_id % 3 = 0 THEN 'image'
-         WHEN media_id % 3 = 1 THEN 'audio' ELSE 'video' END AS kind,
-    'PAYLOAD:' || sha256(CAST(media_id AS VARCHAR)) AS s
-  FROM m
-),
-chars AS (SELECT media_id, unnest(string_split(s, '')) AS ch FROM p),
-ent AS (SELECT media_id, entropy(ch) AS e FROM chars GROUP BY 1)
-SELECT p.media_id, p.kind,
-  CAST(length(p.s) AS BIGINT) AS n_bytes,
-  round(round(ent.e, 6), 4) AS byte_entropy,
-  lower(hex(substr(p.s, 1, 4))) AS header_hex
-FROM p JOIN ent USING (media_id)"""
 
 def q_hybrid_source(spark, sf_dir):
     """O5 source union/fallback (archive_service_router.py:61-99 as data

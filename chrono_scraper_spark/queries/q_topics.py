@@ -1,4 +1,4 @@
-"""Topic modeling / clustering + recrawl, BM25, feeds, redirects, recs-adjacent families.
+"""Change detection, recrawl, readability, feeds, OPIC, WAT and text-signal families.
 
 Split from entry_queries.py (round 5) — same definitions, same oracles.
 """
@@ -15,207 +15,6 @@ from chrono_scraper_spark.operators.index import build_inverted_terms
 from ._shared import _t
 from .q_graph_sketch import _FRONTIER_FUSE_SQL, _LINKS_CTES, _linked_pages
 
-
-def q_tfidf_topk(spark, sf_dir):
-    """Per-doc top-5 TF-IDF terms (TfidfVectorizer analog: min_df=2,
-    max_df=0.8, max_features=1000, smooth idf, l2 norm). Ranking uses
-    exact integer tf·idf_micro weights; the vocab cap bounds every doc
-    vector, so the per-doc window is WindowGroupLimit-prunable."""
-    from chrono_scraper_spark.operators import topics as TP
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return TP.tfidf_topk(d, k=5)
-
-def q_topic_clusters(spark, sf_dir):
-    """Deterministic cosine k-means over TF-IDF vectors (KMeans content
-    clustering analog): k=8, two assignment steps from md5-seeded init,
-    exact-integer centroids (sum ≡ mean under cosine)."""
-    from chrono_scraper_spark.operators import topics as TP
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return TP.kmeans_clusters(d, k=8, iters=2)
-
-def q_cluster_cohesion(spark, sf_dir):
-    """Per-cluster summary: size, mean pairwise cosine via the
-    closed-form ‖Σv̂‖² identity (no n×n similarity matrix), centroid
-    top-10 terms."""
-    from chrono_scraper_spark.operators import topics as TP
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return TP.cluster_cohesion(d, k=8, iters=2, top_terms=10)
-
-_TFIDF_CTES = f"""
-tf AS (
-  SELECT doc_id, u.t AS term, count(*) AS tf
-  FROM documents, unnest({OG.tokens_sql('text')}) AS u(t)
-  GROUP BY doc_id, u.t
-),
-nd AS (SELECT count(DISTINCT doc_id) AS n FROM tf),
-vocab AS (
-  SELECT term, df, cf,
-    CAST(floor((ln((1 + n) / (1 + df)) + 1) * 1e6) AS BIGINT) AS idf_micro
-  FROM (SELECT term, count(*) AS df, sum(tf) AS cf FROM tf GROUP BY term), nd
-  WHERE df >= 2 AND df <= floor(0.8 * n)
-  ORDER BY cf DESC, term LIMIT 1000
-),
-w AS (
-  SELECT tf.doc_id, tf.term, tf.tf, tf.tf * v.idf_micro AS w
-  FROM tf JOIN vocab v USING (term)
-),
-n2 AS (
-  SELECT doc_id, sum(CAST(w AS HUGEINT) * w) AS n2 FROM w GROUP BY doc_id
-)"""
-
-SQL_TFIDF_TOPK = f"""
-WITH {_TFIDF_CTES}
-SELECT doc_id, CAST(rnk AS BIGINT) AS rnk, term, CAST(tf AS BIGINT) AS tf,
-       round(w / sqrt(CAST(n2 AS DOUBLE)), 6) AS weight
-FROM (
-  SELECT w.doc_id, w.term, w.tf, w.w, n2.n2,
-    row_number() OVER (PARTITION BY w.doc_id
-                       ORDER BY w.w DESC, w.term) AS rnk
-  FROM w JOIN n2 USING (doc_id))
-WHERE rnk <= 5"""
-
-_KMEANS_CTES = f"""
-{_TFIDF_CTES},
-seeds AS (
-  SELECT doc_id,
-    CAST(row_number() OVER (
-      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) - 1 AS BIGINT) AS cid
-  FROM n2
-  ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id LIMIT 8
-),
-cent0 AS (
-  SELECT s.cid, w.term, CAST(w.w AS HUGEINT) AS cw
-  FROM w JOIN seeds s USING (doc_id)
-),
-cn0 AS (SELECT cid, sum(cw * cw) AS cn2 FROM cent0 GROUP BY cid),
-dot0 AS (
-  SELECT w.doc_id, c.cid, sum(CAST(w.w AS HUGEINT) * c.cw) AS dot
-  FROM w JOIN cent0 c USING (term) GROUP BY w.doc_id, c.cid
-),
-sim0 AS (
-  SELECT d.doc_id, d.cid,
-    CAST(floor(CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(n2.n2 AS DOUBLE)) * sqrt(CAST(cn.cn2 AS DOUBLE)))
-               * 1e9) AS BIGINT) AS cos_nano
-  FROM dot0 d JOIN n2 USING (doc_id) JOIN cn0 cn USING (cid)
-),
-a0 AS (
-  SELECT doc_id, cid FROM (
-    SELECT doc_id, cid, row_number() OVER (
-      PARTITION BY doc_id ORDER BY cos_nano DESC, cid) AS rn
-    FROM sim0) WHERE rn = 1
-),
-cent1 AS (
-  SELECT a.cid, w.term, sum(CAST(w.w AS HUGEINT)) AS cw
-  FROM w JOIN a0 a USING (doc_id) GROUP BY a.cid, w.term
-),
-cn1 AS (SELECT cid, sum(cw * cw) AS cn2 FROM cent1 GROUP BY cid),
-dot1 AS (
-  SELECT w.doc_id, c.cid, sum(CAST(w.w AS HUGEINT) * c.cw) AS dot
-  FROM w JOIN cent1 c USING (term) GROUP BY w.doc_id, c.cid
-),
-sim1 AS (
-  SELECT d.doc_id, d.cid,
-    CAST(floor(CAST(d.dot AS DOUBLE)
-               / (sqrt(CAST(n2.n2 AS DOUBLE)) * sqrt(CAST(cn.cn2 AS DOUBLE)))
-               * 1e9) AS BIGINT) AS cos_nano
-  FROM dot1 d JOIN n2 USING (doc_id) JOIN cn1 cn USING (cid)
-),
-a1 AS (
-  SELECT doc_id, cid, cos_nano FROM (
-    SELECT doc_id, cid, cos_nano, row_number() OVER (
-      PARTITION BY doc_id ORDER BY cos_nano DESC, cid) AS rn
-    FROM sim1) WHERE rn = 1
-)"""
-
-SQL_TOPIC_CLUSTERS = f"""
-WITH {_KMEANS_CTES}
-SELECT doc_id, cid AS cluster_id, round(cos_nano / 1e9, 6) AS cos_sim
-FROM a1"""
-
-SQL_CLUSTER_COHESION = f"""
-WITH {_KMEANS_CTES},
-unit AS (
-  SELECT a.cid, w.term,
-    CAST(floor(w.w / sqrt(CAST(n2.n2 AS DOUBLE)) * 1e9) AS BIGINT) AS u
-  FROM w JOIN n2 USING (doc_id) JOIN a1 a USING (doc_id)
-),
-comp AS (SELECT cid, term, sum(u) AS s FROM unit GROUP BY cid, term),
-ss AS (SELECT cid, sum(CAST(s AS HUGEINT) * s) AS ss2 FROM comp GROUP BY cid),
-sz AS (SELECT cid, count(*) AS n_docs FROM a1 GROUP BY cid),
-tt AS (
-  SELECT cid, string_agg(term, ' ' ORDER BY s DESC, term) AS top_terms
-  FROM (SELECT cid, term, s, row_number() OVER (
-          PARTITION BY cid ORDER BY s DESC, term) AS rn
-        FROM comp)
-  WHERE rn <= 10 GROUP BY cid
-)
-SELECT sz.cid AS cluster_id, CAST(sz.n_docs AS BIGINT) AS n_docs,
-  CASE WHEN sz.n_docs <= 1 THEN 1.0
-       ELSE round((CAST(ss.ss2 AS DOUBLE) / 1e18 - sz.n_docs)
-                  / (sz.n_docs * (sz.n_docs - 1)), 6) END AS cohesion,
-  tt.top_terms
-FROM sz JOIN ss USING (cid) JOIN tt USING (cid)"""
-
-def q_dbscan(spark, sf_dir):
-    """Distributed DBSCAN over the embeddings table (cosine metric,
-    eps=0.7 → cos ≥ 0.3, min_samples=3, self included): ε-pairs → degree
-    → core/border/noise roles, clusters = connected components of the
-    core subgraph (min-id labels, disclosed convention). Exact all-pairs
-    baseline (bands=0) — the oracle contract; LSH pair generation is the
-    scale path."""
-    from chrono_scraper_spark.operators import topics as TP
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return TP.dbscan(emb, eps=0.7, min_samples=3, bands=0)
-
-SQL_DBSCAN = """
-WITH RECURSIVE ev AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-),
-p AS (
-  SELECT l.vec_id AS a, r.vec_id AS b
-  FROM ev l JOIN ev r ON l.vec_id < r.vec_id
-  WHERE list_dot_product(l.v, r.v)
-        / (sqrt(list_dot_product(l.v, l.v))
-           * sqrt(list_dot_product(r.v, r.v))) >= 0.3
-),
-sym AS (SELECT a AS id, b AS nb FROM p UNION ALL SELECT b, a FROM p),
-deg AS (SELECT id, count(*) + 1 AS n_neighbors FROM sym GROUP BY id),
-core AS (SELECT id FROM deg WHERE n_neighbors >= 3),
-ce AS (
-  SELECT s.id AS src, s.nb AS dst FROM sym s
-  JOIN core c1 ON c1.id = s.id JOIN core c2 ON c2.id = s.nb
-),
-reach(node, r) AS (
-  SELECT DISTINCT src, src FROM ce
-  UNION
-  SELECT e.src, reach.r FROM ce e JOIN reach ON reach.node = e.dst
-),
-comp AS (SELECT node, min(r) AS cluster FROM reach GROUP BY node),
-corec AS (
-  SELECT c.id, coalesce(comp.cluster, c.id) AS cluster
-  FROM core c LEFT JOIN comp ON comp.node = c.id
-),
-border AS (
-  SELECT s.id, min(cc.cluster) AS cluster
-  FROM sym s JOIN corec cc ON cc.id = s.nb
-  WHERE s.id NOT IN (SELECT id FROM core)
-  GROUP BY s.id
-)
-SELECT e.vec_id,
-  CAST(coalesce(cr.cluster, bo.cluster, -1) AS BIGINT) AS cluster,
-  CASE WHEN cr.id IS NOT NULL THEN 'core'
-       WHEN bo.id IS NOT NULL THEN 'border'
-       ELSE 'noise' END AS role,
-  CAST(coalesce(d.n_neighbors, 1) AS BIGINT) AS n_neighbors
-FROM ev e
-LEFT JOIN corec cr ON cr.id = e.vec_id
-LEFT JOIN border bo ON bo.id = e.vec_id
-LEFT JOIN deg d ON d.id = e.vec_id"""
 
 def q_page_changes(spark, sf_dir):
     """Per-capture change log over every URL's snapshot sequence
@@ -450,65 +249,6 @@ SELECT doc_id, nw AS n_words, ns AS n_sentences,
        ELSE false END AS well_structured
 FROM f"""
 
-def q_topic_assign(spark, sf_dir):
-    """Topic inference: every doc assigned to the best topic under
-    count-based unigram topic models (add-one smoothing, OOV floor,
-    nano-quantized log scores) built from the k-means clusters' term
-    sums — the document_topics/page_clusters map of the topic service,
-    with a deterministic model in place of sklearn LDA."""
-    from chrono_scraper_spark.operators import topics as TP
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    vectors = TP.tfidf_terms(d)
-    assign = TP.kmeans_clusters(d, k=8, iters=2, vectors=vectors)
-    topics = (vectors
-              .join(assign.select("doc_id", "cluster_id"), "doc_id")
-              .groupBy(F.col("cluster_id").alias("topic_id"), "term")
-              .agg(F.sum("tf").alias("cnt")))
-    return TP.topic_assign(d, topics)
-
-SQL_TOPIC_ASSIGN = f"""
-WITH {_KMEANS_CTES},
-cent2 AS (
-  SELECT a.cid AS topic_id, w.term, sum(w.tf) AS cnt
-  FROM w JOIN a1 a USING (doc_id) GROUP BY 1, 2
-),
-tt AS (SELECT topic_id, sum(cnt) AS tot FROM cent2 GROUP BY 1),
-vv AS (SELECT count(DISTINCT term) AS v FROM cent2),
-toksall AS (
-  SELECT doc_id, u.t AS term
-  FROM documents, unnest({OG.tokens_sql('text')}) AS u(t)
-),
-nt AS (SELECT doc_id, count(*) AS n FROM toksall GROUP BY 1),
-sc AS (
-  SELECT c.topic_id, c.term,
-    CAST(floor(log10((c.cnt + 1) / (tt.tot + vv.v)) * 1e9) AS BIGINT)
-      AS lp
-  FROM cent2 c JOIN tt USING (topic_id), vv
-),
-mt AS (
-  SELECT t.doc_id, s.topic_id, sum(s.lp) AS s, count(*) AS nm
-  FROM toksall t JOIN sc s USING (term) GROUP BY 1, 2
-),
-fl AS (
-  SELECT tt.topic_id,
-    CAST(floor(log10(1.0 / (tt.tot + vv.v)) * 1e9) AS BIGINT) AS oov
-  FROM tt, vv
-),
-scr AS (
-  SELECT nt.doc_id, fl.topic_id, nt.n,
-    coalesce(mt.s, 0) + (nt.n - coalesce(mt.nm, 0)) * fl.oov AS score
-  FROM nt CROSS JOIN fl
-  LEFT JOIN mt ON mt.doc_id = nt.doc_id AND mt.topic_id = fl.topic_id
-)
-SELECT doc_id, topic_id, round(score / n / 1e9, 6) AS mean_logprob,
-  CAST(n AS BIGINT) AS n_tokens
-FROM (
-  SELECT scr.*, row_number() OVER (
-    PARTITION BY doc_id ORDER BY score DESC, topic_id) AS rn
-  FROM scr)
-WHERE rn = 1"""
-
 def q_bigram_logprob(spark, sf_dir):
     """Second-order CCNet LM analog: add-one-smoothed conditional bigram
     model built on the even docs, scored over the odd docs (same split
@@ -574,20 +314,6 @@ def q_bpe_merges(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return Q.bpe_train(d, n_merges=10)
-
-def q_unigram_pieces(spark, sf_dir):
-    """SentencePiece-style unigram-LM tokenizer training (Kudo 2018) —
-    the third tokenizer-training family (operators/unigram_tok.py): EM +
-    prune over the Zipf-bounded word-frequency table, integer nano
-    log-probs make the Viterbi DP and hence the whole training run
-    bit-deterministic (SentencePiece itself is not). NO SQL oracle by
-    design (iterative EM + per-word DP); correctness held by the exact
-    pure-Python twin of the full orchestration, DP unit cases, and the
-    encode-reconstructs-text invariant (tests/test_unigram_tok.py)."""
-    from chrono_scraper_spark.operators.unigram_tok import train_unigram
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    return train_unigram(d, vocab_size=120, em_iters=2, seed_size=500)
 
 def q_mime_sniff(spark, sf_dir):
     """Content sniffing from magic bytes (operators/mime_sniff.py):
@@ -1316,51 +1042,3 @@ def q_compression_ratio(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return with_compression_ratio(d).drop("text")
-
-def q_image_near_dups(spark, sf_dir):
-    """Image near-duplicate detection via 64-bit dHash over REAL BMP
-    payloads (multimodal.image_dhash + dhash_near_dups): 96 synthetic 9×8
-    grayscale BMPs in 8 clusters of 12 variants (each variant perturbs one
-    last-column pixel → ≤ 2 hash bits), banded Hamming-bucket candidate
-    join (pigeonhole-exact for hamming < 4 bands) + bit_count verify ≤ 3.
-    The DuckDB oracle recomputes the hash from the images' arithmetic pixel
-    definition, so the whole BMP encode→decode→luma→downsample→hash path
-    must be value-exact. Reference hook: media dedup for image-rich crawls
-    (the multimodal pipeline's dedup slot)."""
-    from chrono_scraper_spark.operators.multimodal import (
-        dhash_near_dups,
-        image_dhash,
-        synth_dhash_images,
-    )
-
-    media = synth_dhash_images(spark, 96)
-    return dhash_near_dups(image_dhash(media))
-
-SQL_IMAGE_NEAR_DUPS = """
-WITH ids AS (SELECT t.range AS media_id FROM range(0, 96) t),
-cells AS (
-  SELECT i.media_id, x.range AS x, y.range AS y,
-    (17 * (i.media_id % 8) * (x.range + 1) + 31 * x.range * x.range
-     + 57 * y.range + 13 * x.range * y.range
-     + 29 * (i.media_id % 8) * y.range
-     + CASE WHEN i.media_id // 8 >= 1 AND x.range = 8
-            AND y.range = (i.media_id // 8 - 1) % 8
-            THEN 128 ELSE 0 END) % 256 AS g
-  FROM ids i, range(0, 9) x, range(0, 8) y
-),
-bits AS (
-  SELECT a.media_id, a.y * 8 + a.x AS bit_pos
-  FROM cells a JOIN cells b
-    ON a.media_id = b.media_id AND a.y = b.y AND b.x = a.x + 1
-  WHERE a.x < 8 AND a.g > b.g
-),
-hashes AS (
-  SELECT i.media_id, CAST(coalesce(sum(
-    CASE WHEN b.bit_pos = 63 THEN CAST(-9223372036854775808 AS BIGINT)
-         ELSE CAST(1 AS BIGINT) << b.bit_pos END), 0) AS BIGINT) AS dhash
-  FROM ids i LEFT JOIN bits b USING (media_id) GROUP BY 1
-)
-SELECT h1.media_id AS media_id_a, h2.media_id AS media_id_b,
-       CAST(bit_count(xor(h1.dhash, h2.dhash)) AS INTEGER) AS hamming
-FROM hashes h1 JOIN hashes h2 ON h1.media_id < h2.media_id
-WHERE bit_count(xor(h1.dhash, h2.dhash)) <= 3"""

@@ -5,8 +5,7 @@ Common Crawl — the corpus the reference's CC route reads
 fields, content_extraction_service.py:80-95 `_WarcRecord`) — stores pages as
 WARC files: concatenated per-record gzip members, each holding one
 ``WARC/1.0`` response record whose block is a raw HTTP response. Like the
-PDF kernel (operators/extraction.py) and the BMP/WAV kernels
-(operators/multimodal.py), this module implements the REAL format
+PDF kernel (operators/extraction.py), this module implements the REAL format
 dependency-free rather than stubbing it: the writer emits spec-shaped
 records (deterministically — gzip mtime pinned to 0, record IDs derived
 from md5(url, date) instead of random UUIDs) and the parser inverts them

@@ -3,7 +3,8 @@
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB at sf0.01, compares row count, column names, and values
 (order-insensitive: rows sorted, columns sorted by name; floats compared to
-1e-9 relative). Exit non-zero on any mismatch.
+1e-9 relative). Ends with one ``N OK, M rows-only, F FAIL`` count line and
+exits non-zero on any mismatch.
 """
 
 from __future__ import annotations
@@ -70,7 +71,8 @@ def values_equal(a, b):
 
 
 def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark(master="local[8]", shuffle_partitions=8,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
@@ -79,6 +81,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
+    n_ok = n_rows_only = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -94,6 +97,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
             continue
         if name not in oracles:
             print(f"SKIP {name}: no oracle (rows-only check: {len(srows)})")
+            n_rows_only += 1
             continue
         try:
             rel = con.sql(oracles[name])
@@ -126,9 +130,11 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
                     failures.append((name, f"row {i}: spark={a} duck={b}"))
                     ok = False
                     break
+        n_ok += ok
         status = "OK  " if ok else "FAIL"
         print(f"{status} {name}: {len(sr)} rows in {time.time()-t0:.1f}s")
     print()
+    print(f"{n_ok} OK, {n_rows_only} rows-only, {len(failures)} FAIL")
     if failures:
         print(f"{len(failures)} FAILURES:")
         for name, msg in failures:

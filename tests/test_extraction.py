@@ -95,7 +95,6 @@ def test_mime_routing_single_arrow_pass(spark):
     assert plan.count("ArrowEvalPython") == 1
     assert plan.count("extract_dispatch_udf") == 1
     assert "extract_text_udf" not in plan
-    assert "extract_pdf_udf" not in plan
 
 
 def test_extract_any_one_dispatch():
