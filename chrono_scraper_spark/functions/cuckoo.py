@@ -33,7 +33,7 @@ collide), but tables over DISJOINT key shards compose trivially: shard by
   the raw keys) and broadcast the shard list: the "partitioned URL-seen
   filter, broadcast-merged per micro-batch" frontier pattern; or
 - ``build_cuckoo_partitioned``: write ``shard_{i}.cuckoo`` files to shared
-  storage (the same Iceberg-puffin pattern as bloom.py) and probe / DELETE
+  storage (the same Iceberg-puffin pattern as bloom.py) and probe
   shard-locally — the 10^10-key path where no single filter broadcasts.
 
 All hot paths are numpy-vectorized over Arrow batches; the kick loop only
@@ -279,8 +279,8 @@ def build_cuckoo_partitioned(df: DataFrame, key: Column, out_dir: str,
                              n_items: int, n_shards: int = 16,
                              load: float = 0.84) -> dict:
     """10^10-key variant: each shard task writes ``shard_{s}.cuckoo`` to
-    shared storage; the driver receives only (shard, n) counters. Probe and
-    delete run shard-locally against the matching file."""
+    shared storage; the driver receives only (shard, n) counters. Probes
+    run shard-locally against the matching file."""
     os.makedirs(out_dir, exist_ok=True)
     per_shard = optimal_buckets(max(n_items // n_shards, 1), load)
     hashed = df.select(_shard_col(key, n_shards).alias("s"),
@@ -300,11 +300,10 @@ def build_cuckoo_partitioned(df: DataFrame, key: Column, out_dir: str,
     return {"n_shards": n_shards, "dir": out_dir}
 
 
-def _shard_local(df: DataFrame, key: Column, meta: dict, out_col: str,
-                 op: str) -> DataFrame:
-    """Shared shard-local pass: repartition on shard id, one filter file
-    resident per task at a time; ``op`` = probe (read-only) or delete
-    (rewrite mutated shards — cuckoo's headline capability)."""
+def with_cuckoo_probe_partitioned(df: DataFrame, key: Column, meta: dict,
+                                  out_col: str = "maybe_seen") -> DataFrame:
+    """Shard-local probe: repartition on shard id, one filter file
+    resident per task at a time."""
     n_shards, d = meta["n_shards"], meta["dir"]
     cols = df.columns
     hashed = df.withColumns({
@@ -316,22 +315,12 @@ def _shard_local(df: DataFrame, key: Column, meta: dict, out_col: str,
 
     def _run(batches):
         cache: dict = {}
-
-        def _flush():
-            for s, filt in cache.items():
-                if filt is not None and op == "delete":
-                    tmp = os.path.join(d, f".shard_{s}.cuckoo.tmp")
-                    with open(tmp, "wb") as fh:
-                        fh.write(filt.to_bytes())
-                    os.replace(tmp, os.path.join(d, f"shard_{s}.cuckoo"))
-            cache.clear()
-
         for pdf in batches:
             out = np.zeros(len(pdf), dtype=bool)
             for s in pdf["__s"].unique():
                 s = int(s)
                 if s not in cache:
-                    _flush()  # one shard resident at a time
+                    cache.clear()  # one shard resident at a time
                     path = os.path.join(d, f"shard_{s}.cuckoo")
                     if os.path.exists(path):
                         with open(path, "rb") as fh:
@@ -342,25 +331,9 @@ def _shard_local(df: DataFrame, key: Column, meta: dict, out_col: str,
                 mask = (pdf["__s"] == s).to_numpy()
                 if filt is not None:
                     hv = pdf.loc[mask, "__h"].to_numpy(np.int64)
-                    out[mask] = (filt.might_contain_hashes(hv)
-                                 if op == "probe"
-                                 else filt.delete_hashes(hv))
+                    out[mask] = filt.might_contain_hashes(hv)
             res = pdf.drop(columns=["__s", "__h"])
             res[out_col] = out
             yield res
-        _flush()
 
     return hashed.mapInPandas(_run, schema).select(*cols, out_col)
-
-
-def with_cuckoo_probe_partitioned(df: DataFrame, key: Column, meta: dict,
-                                  out_col: str = "maybe_seen") -> DataFrame:
-    return _shard_local(df, key, meta, out_col, "probe")
-
-
-def delete_cuckoo_partitioned(df: DataFrame, key: Column, meta: dict,
-                              out_col: str = "deleted") -> DataFrame:
-    """Retract ``df``'s keys from the shard files in place (rewrite only
-    touched shards). Returns per-row success; an eager action is required
-    to apply (caller collects/counts, as with any Spark write)."""
-    return _shard_local(df, key, meta, out_col, "delete")

@@ -12,12 +12,12 @@ value-checkable in the DuckDB oracle.
 All extraction is ``regexp_extract_all`` column expressions (JVM-side,
 whole-stage codegen); swapping in a real model later means replacing ONE
 column with a pandas-UDF column — the schema (array<struct<entity_type,
-entity>>), the search-side filtering, and the analytics counters all stay.
+entity>>) stays.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # (entity_type, regex) — order defines output order; regexes portable to
@@ -49,34 +49,3 @@ def extract_entities(text: Column) -> Column:
         )
 
     return F.concat(*[_typed(e, p) for e, p in ENTITY_PATTERNS])
-
-
-def with_entities(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Adds ``entities`` plus per-type counts (the content_analytics entity
-    counter columns, content_analytics.sql:55-61)."""
-    out = df.withColumn("entities", extract_entities(F.col(text_col)))
-
-    def _count(etype: str) -> Column:
-        def is_type(e: Column) -> Column:
-            return e["entity_type"] == etype
-
-        return F.size(F.filter(F.col("entities"), is_type))
-
-    counts = {f"{etype}_entities": _count(etype)
-              for etype, _ in ENTITY_PATTERNS}
-    counts["entities_extracted"] = F.size(F.col("entities"))
-    return out.withColumns(counts)
-
-
-def filter_by_entity(page_index: DataFrame, entity_type: str,
-                     entity: str | None = None,
-                     entities_col: str = "entities") -> DataFrame:
-    """Entity-filtered search (meilisearch_service.py:353-412 entity
-    filters): keep pages mentioning the entity type (optionally a specific
-    value). Pure array predicate — pushes inside the scan projection."""
-    pred = F.exists(
-        F.col(entities_col),
-        lambda e: (e["entity_type"] == entity_type)
-        & (F.lit(entity is None) | (e["entity"] == F.lit(entity or ""))),
-    )
-    return page_index.filter(pred)

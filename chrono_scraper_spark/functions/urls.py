@@ -128,10 +128,6 @@ def ts14(ts: Column) -> Column:
     return F.date_format(ts, "yyyyMMddHHmmss")
 
 
-def ts14_to_timestamp(ts14_col: Column) -> Column:
-    return F.to_timestamp(ts14_col, "yyyyMMddHHmmss")
-
-
 def with_url_parts(df, url_col: str = "url"):
     """Annotate a frontier/pages DataFrame with derived URL columns used by
     filters, politeness and analytics. One projection, no shuffle."""

@@ -1,7 +1,7 @@
 """Saved-query alerting: match a table of standing searches against
 documents — the monitoring half of a chrono-scraper deployment (users
 register queries once and are notified when newly crawled captures
-match), and the batch kernel the streaming alert feed reuses.
+match).
 
 Semantics: a saved query is a bag of terms under the engine's standard
 tokenizer (functions/textops.tokens — same convention as the inverted
@@ -12,10 +12,7 @@ is empty match nothing.
 Scale shape: the corpus is tokenized ONCE (one Generate over distinct
 terms per doc); the query-term table is query-cardinality and always
 broadcast, so nothing corpus-sized shuffles — the only exchange carries
-(doc, query) candidate pairs, bounded by actual term hits. The streaming
-twin (streaming/micro_batch.py::alerts_stream_writer) runs this kernel
-per micro-batch: standing queries meet only NEW captures, so an alert
-fires exactly once per (query, capture).
+(doc, query) candidate pairs, bounded by actual term hits.
 """
 
 from __future__ import annotations

@@ -291,23 +291,11 @@ def log2_histogram(df: DataFrame, col: str) -> DataFrame:
     """The sketch STATE: (bin, cnt) with bin = bit length of the value
     (0 for ≤0). Histograms from different shards/days/streams merge by
     ``unionByName → groupBy(bin).sum(cnt)`` — plain addition, the
-    property that makes the sketch distributable (see
-    ``merge_histograms``)."""
+    property that makes the sketch distributable."""
     x = F.col(col).cast("long")
     b = F.when(x <= 0, F.lit(0)).otherwise(F.length(F.bin(x))).cast("int")
     return (df.select(b.alias("bin"))
             .groupBy("bin").agg(F.count("*").alias("cnt")))
-
-
-def merge_histograms(*hists: DataFrame) -> DataFrame:
-    """Merge sketch states by addition — the mergeability contract:
-    quantiles_from_histogram(merge(h(A), h(B))) ==
-    quantiles_from_histogram(h(A ∪ B)) exactly (same integers, not
-    approximately)."""
-    out = hists[0]
-    for h in hists[1:]:
-        out = out.unionByName(h)
-    return out.groupBy("bin").agg(F.sum("cnt").alias("cnt"))
 
 
 def quantiles_from_histogram(hist: DataFrame,
@@ -368,8 +356,7 @@ def hll_registers(df: DataFrame, col: str, keys: tuple = (),
                   p: int = 8) -> DataFrame:
     """Sketch STATE: (*keys, bucket, register) with register = max rho seen
     in the bucket — ≤ 2^p rows per group (absent buckets ≡ register 0).
-    One projection + one max-agg; merge states with
-    ``merge_hll_registers``."""
+    One projection + one max-agg; states merge by per-bucket MAX."""
     k = _hll_check_p(p)
     # COUNT(DISTINCT) semantics ignore NULLs — so must the sketch (a NULL
     # value would otherwise produce a phantom NULL bucket that biases the
@@ -401,18 +388,6 @@ def hll_registers(df: DataFrame, col: str, keys: tuple = (),
                     rho.cast("int").alias("rho"))
             .groupBy(*keys, "bucket")
             .agg(F.max("rho").alias("register")))
-
-
-def merge_hll_registers(*regs: DataFrame, keys: tuple = ()) -> DataFrame:
-    """Merge sketch states by per-bucket MAX — the mergeability contract:
-    estimate(merge(sketch(A), sketch(B))) == estimate(sketch(A ∪ B))
-    exactly (identical registers, hence identical estimate — not merely
-    close)."""
-    out = regs[0]
-    for r in regs[1:]:
-        out = out.unionByName(r)
-    return (out.groupBy(*keys, "bucket")
-            .agg(F.max("register").alias("register")))
 
 
 def hll_estimate(regs: DataFrame, keys: tuple = (),
@@ -471,31 +446,19 @@ def _cms_coords(col: Column, d: int, w: int):
     return F.array(*pairs)
 
 
-def cms_build(df: DataFrame, col: str, d: int = 4, w: int = 1024,
-              weight: str | None = None) -> DataFrame:
+def cms_build(df: DataFrame, col: str, d: int = 4,
+              w: int = 1024) -> DataFrame:
     """Sketch STATE: (row, col_bucket, cnt) — ≤ d·w longs however large
     the input, map-side combinable (the explode is a bounded d-wide
-    fan-out, not corpus-shaped growth). ``weight``: sum that column
-    instead of counting rows (e.g. bytes per host). Merge states with
-    ``cms_merge`` (plain addition); point-estimate with ``cms_query``
+    fan-out, not corpus-shaped growth). States merge by cell-wise
+    addition; point-estimate with ``cms_query``
     (min over the d cells — overestimate-only, ε·N error bound with
     probability 1−(1/2)^d at w=2e/ε)."""
-    wcol = F.col(weight).cast("long") if weight else F.lit(1).cast("long")
     return (df.select(F.explode(_cms_coords(F.col(col), d, w))
-                      .alias("_c"), wcol.alias("_w"))
+                      .alias("_c"))
             .groupBy(F.col("_c.row").alias("row"),
                      F.col("_c.col_bucket").alias("col_bucket"))
-            .agg(F.sum("_w").alias("cnt")))
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge sketch states by cell-wise addition — exact:
-    query(merge(cms(A), cms(B))) == query(cms(A ∪ B)) cell-for-cell."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return (out.groupBy("row", "col_bucket")
-            .agg(F.sum("cnt").alias("cnt")))
+            .agg(F.count("*").alias("cnt")))
 
 
 def cms_query(sketch: DataFrame, keys: DataFrame, col: str, d: int = 4,
@@ -512,35 +475,3 @@ def cms_query(sketch: DataFrame, keys: DataFrame, col: str, d: int = 4,
             .groupBy(col)
             .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0)))
                  .cast("long").alias("est")))
-
-
-def hll_union_estimate(a: DataFrame, b: DataFrame, keys: tuple = (),
-                       p: int = 8) -> DataFrame:
-    """|A ∪ B| from two register tables — estimate of the max-merged
-    sketch (exact HLL semantics: the merged sketch IS the union's
-    sketch)."""
-    return hll_estimate(merge_hll_registers(a, b, keys=keys), keys, p)
-
-
-def hll_intersection_estimate(a: DataFrame, b: DataFrame,
-                              keys: tuple = (), p: int = 8) -> DataFrame:
-    """|A ∩ B| by inclusion-exclusion over three sketch estimates:
-    est(A) + est(B) − est(A ∪ B), floored at 0. Error compounds
-    (~3 × the single-sketch standard error, worse for small overlaps —
-    the standard HLL-intersection caveat; use a higher p when the
-    overlap matters). The cross-crawl overlap question — how many URLs
-    do two crawls share — without storing either URL set."""
-    ea = hll_estimate(a, keys, p).withColumnRenamed("est_distinct", "_ea")
-    eb = hll_estimate(b, keys, p).withColumnRenamed("est_distinct", "_eb")
-    eu = (hll_union_estimate(a, b, keys, p)
-          .withColumnRenamed("est_distinct", "_eu"))
-    if keys:
-        j = ea.join(eb, list(keys), "outer").join(eu, list(keys), "outer")
-    else:
-        j = ea.join(eb).join(eu)
-    return j.select(
-        *keys,
-        F.greatest(F.coalesce("_ea", F.lit(0))
-                   + F.coalesce("_eb", F.lit(0))
-                   - F.coalesce("_eu", F.lit(0)),
-                   F.lit(0)).cast("long").alias("est_overlap"))

@@ -54,13 +54,6 @@ def anti_join_seen(candidates: DataFrame, url_seen: DataFrame,
     return candidates.join(url_seen.select(*keys), keys, "left_anti")
 
 
-def semi_join_seen(candidates: DataFrame, url_seen: DataFrame,
-                   keys: list[str] = SEEN_KEY) -> DataFrame:
-    """D4 complement: candidates already present (the "link existing" branch,
-    cdx_deduplication_service.py:77-107)."""
-    return candidates.join(url_seen.select(*keys), keys, "left_semi")
-
-
 def bloom_prefilter_anti_join(
     candidates: DataFrame,
     url_seen: DataFrame,
@@ -129,7 +122,7 @@ def cuckoo_prefilter_anti_join(
     ANY load), but the filter is a sharded cuckoo table
     (functions/cuckoo.py), which additionally supports RETRACTION: a key
     can be deleted from the seen filter without a rebuild
-    (delete_cuckoo_partitioned), e.g. re-opening a terminally-failed URL
+    (``NumpyCuckoo.delete_hashes``), e.g. re-opening a terminally-failed URL
     for recrawl. ``partitioned=True`` is the 10^10-key path (shard files on
     shared storage, probed shard-locally, no broadcast)."""
     from ..functions.cuckoo import (
@@ -174,20 +167,6 @@ def categorize_against_registry(candidates: DataFrame, registry: DataFrame,
               F.lit("already_processing"))
         .otherwise(F.lit("to_scrape")),
     ).drop("__reg_status")
-
-
-def merge_into_seen(url_seen: DataFrame, new_rows: DataFrame,
-                    keys: list[str] = SEEN_KEY) -> DataFrame:
-    """D6: idempotent insert (``ON CONFLICT DO NOTHING``,
-    cdx_deduplication_service.py:229-238) = MERGE WHEN NOT MATCHED INSERT.
-    Expressed as existing ∪ (new ⟕anti existing); with an Iceberg catalog this
-    is ``MERGE INTO url_seen``, here the caller persists the result through
-    the snapshot catalog."""
-    cols = url_seen.columns
-    fresh = new_rows.select(*cols).join(url_seen.select(*keys), keys, "left_anti")
-    # A batch can carry the same key twice; keep one deterministically.
-    fresh = fresh.dropDuplicates(keys)
-    return url_seen.unionByName(fresh)
 
 
 def in_batch_dedup(frontier: DataFrame, keys: list[str] = SEEN_KEY) -> DataFrame:

@@ -431,8 +431,8 @@ def _real_dispatch_udf():
     module never requires the libraries. Without any real library the
     cascade still contains the vendored readability analog
     (readability_lite.py), so selecting ``kernel='real'`` runs a genuine
-    main-content finder rather than raising; ``real_extractors.available()``
-    reports which strategies are active."""
+    main-content finder rather than raising; the ``*_AVAILABLE`` flags in
+    ``real_extractors`` say which library strategies are active."""
     from . import real_extractors as R  # noqa: F401 (strategy registry)
 
     def kernel(payload, mime):
@@ -516,20 +516,6 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
         len_score * 0.4 + para_score * 0.2 + alpha_ratio * 0.2 + wordlen_score * 0.2
     )
     return df.withColumn("quality_score", F.round(score, 4))
-
-
-def with_word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """E10: word/char counts (shared_pages_scraping.py:195-196)."""
-    text = F.col(text_col)
-    return df.withColumns(
-        {
-            "word_count": F.when(
-                text.isNotNull() & (F.length(F.trim(text)) > 0),
-                F.size(F.split(F.trim(text), r"\s+")),
-            ).otherwise(F.lit(0)),
-            "character_count": F.coalesce(F.length(text), F.lit(0)),
-        }
-    )
 
 
 # ---------------------------------------------------------------------------

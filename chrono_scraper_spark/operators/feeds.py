@@ -1,18 +1,15 @@
-"""RSS/Atom feed discovery and parsing — the third discovery channel.
+"""RSS/Atom feed parsing — the third discovery channel.
 
 The reference discovers URLs through Wayback/CC CDX indexes; round 4
 added sitemaps (publisher URL inventory). Feeds are the remaining
 standard channel — the *freshness* channel: a site's RSS/Atom feed
 announces NEW and UPDATED pages minutes after publication, long before a
-sitemap regenerates or the CDX index sees a capture. Three composable
+sitemap regenerates or the CDX index sees a capture. Two composable
 relational passes, all JVM regexp/array expressions (RE2-compatible,
 shared verbatim with the DuckDB oracle — same no-XML-library rationale
 as sitemaps.py: wild feeds are too dirty for strict parsers, and the
 handful of tags needed are regular):
 
-* ``discover_feeds`` — ``<link rel="alternate" type="application/
-  (rss|atom)+xml" href=…>`` tags from page HTML (attribute order free;
-  href resolved with links.py's documented policy);
 * ``parse_feeds`` — ``<item>`` (RSS 2.0) and ``<entry>`` (Atom) blocks
   → one row per item with ``(host, item_url, title, published_raw,
   published_iso, kind)``. RSS ``pubDate`` is RFC 822 (``Tue, 10 Jun 2003
@@ -24,20 +21,15 @@ handful of tags needed are regular):
   capture log via ``sitemaps.sitemap_recrawl_status`` (an item's
   ``published_iso`` plays lastmod): ``new`` / ``stale`` / ``fresh``.
 
-Scale: discovery and parsing are map-only (one ``Generate`` per page /
-feed body — zero exchanges); the status join is one shuffle on the url
-key, dominated by the capture-log agg exactly like the sitemap path.
+Scale: parsing is map-only (one ``Generate`` per feed body — zero
+exchanges); the status join is one shuffle on the url key, dominated by
+the capture-log agg exactly like the sitemap path.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-LINK_TAG_RE = r"(?is)<link\s[^>]*>"
-HREF_RE = "(?i)href\\s*=\\s*[\"']([^\"']*)[\"']"
-REL_RE = "(?i)rel\\s*=\\s*[\"']([^\"']*)[\"']"
-TYPE_RE = "(?i)type\\s*=\\s*[\"']([^\"']*)[\"']"
 
 ITEM_BLOCK_RE = r"(?is)<item[\s>].*?</item>"
 ENTRY_BLOCK_RE = r"(?is)<entry[\s>].*?</entry>"
@@ -50,44 +42,6 @@ TITLE_RE = r"(?is)<title>\s*(.*?)\s*</title>"
 #: RFC 822 zone suffix we normalize away before the English-locale parse;
 #: non-UTC numeric offsets are rare in feeds and parse to NULL (no claim).
 _RFC822_TZ_RE = r"\s+(GMT|UT|UTC|Z|\+0000)$"
-
-FEED_TYPES = ["application/rss+xml", "application/atom+xml"]
-
-
-def discover_feeds(pages: DataFrame, html_col: str = "html",
-                   url_col: str = "url",
-                   host_col: str = "host") -> DataFrame:
-    """One row per advertised feed: (src_url, host, feed_url, feed_type).
-    Matches ``<link>`` tags whose rel-token list contains ``alternate``
-    and whose type is an RSS/Atom media type, any attribute order.
-    Map-only (one Generate per page), zero exchanges before the final
-    distinct."""
-    html = F.col(html_col).cast("string")
-    tags = F.regexp_extract_all(html, F.lit(LINK_TAG_RE), F.lit(0))
-    rel_norm = F.concat(
-        F.lit(","),
-        F.regexp_replace(F.lower(F.regexp_extract("tag", REL_RE, 1)),
-                         r"\s+", ","),
-        F.lit(","))
-    ftype = F.lower(F.trim(F.split(
-        F.regexp_extract("tag", TYPE_RE, 1), ";").getItem(0)))
-    out = (pages
-           .select(F.col(url_col).alias("src_url"),
-                   F.col(host_col).alias("host"),
-                   F.explode(tags).alias("tag"))
-           .withColumn("href", F.regexp_extract("tag", HREF_RE, 1))
-           .withColumn("feed_type", ftype)
-           .filter(rel_norm.contains(",alternate,")
-                   & F.col("feed_type").isin(*FEED_TYPES)
-                   & (F.col("href") != "")))
-    feed_url = (F.when(F.col("href").rlike("(?i)^https?://"), F.col("href"))
-                .when(F.col("href").startswith("/"),
-                      F.concat(F.lit("https://"), F.col("host"),
-                               F.col("href"))))
-    return (out.withColumn("feed_url", feed_url)
-            .filter(F.col("feed_url").isNotNull())
-            .select("src_url", "host", "feed_url", "feed_type")
-            .distinct())
 
 
 def _rss_iso(pub: Column) -> Column:

@@ -92,10 +92,10 @@ def build_inverted_terms(page_index: DataFrame,
     ``positions=True`` additionally stores ``first_pos`` — the 0-based
     token position of the term's first occurrence (title tokens precede
     content tokens) — feeding the position/attribute ranking rule
-    (``search_positional``; Meilisearch ``attribute`` rule analog,
-    meilisearch_service.py:454-470) — plus ``pos_arr``, the sorted array of
-    ALL the term's occurrence positions in the doc, feeding the true
-    pairwise-distance ``proximity`` rule (``search_proximity``). posexplode
+    (Meilisearch ``attribute`` rule analog, meilisearch_service.py:454-470)
+    — plus ``pos_arr``, the sorted array of ALL the term's occurrence
+    positions in the doc, feeding the true pairwise-distance ``proximity``
+    rule (both in ``ranked_match_set``). posexplode
     instead of explode; same single shuffle (pos_arr rides the existing
     (term, doc) aggregation as a collect_list).
     """
@@ -211,34 +211,6 @@ def match_terms_scan(docs: DataFrame, terms: list[str],
             .select(id_col, "matched_terms", "tf_sum"))
 
 
-def search_positional(page_index: DataFrame, inverted_terms: DataFrame,
-                      query: str, limit: int = 20) -> DataFrame:
-    """Ranked search with the position/attribute rule: after matched-terms
-    and tf, documents whose EARLIEST matching token sits closer to the
-    start rank higher (Meilisearch ``attribute``/``position`` ranking,
-    meilisearch_service.py:454-470 — a title/lead-paragraph hit beats a
-    footer hit). Requires an index built with ``positions=True``."""
-    terms = tokenize_query(query)
-    spark = page_index.sparkSession
-    if not terms:
-        return page_index.limit(0).withColumns(
-            {"matched_terms": F.lit(0).cast("long"),
-             "tf_sum": F.lit(0).cast("long"),
-             "best_pos": F.lit(0).cast("int")})
-    qdf = spark.createDataFrame([(t,) for t in set(terms)], "term string")
-    hits = inverted_terms.join(F.broadcast(qdf), "term", "inner")
-    scored = hits.groupBy("url_canon", "ts14").agg(
-        F.countDistinct("term").alias("matched_terms"),
-        F.sum("tf").alias("tf_sum"),
-        F.min("first_pos").alias("best_pos"),
-    )
-    out = scored.join(page_index, ["url_canon", "ts14"], "inner")
-    return (out.orderBy(
-        F.desc("matched_terms"), F.asc("best_pos"), F.desc("tf_sum"),
-        F.asc("url_canon"), F.asc("ts14"))
-        .limit(limit))
-
-
 def min_pair_distance(entries: Column) -> Column:
     """Min token distance between occurrences of two DIFFERENT terms, given
     ``entries: array<struct<term, pos_arr>>`` for one document's matched
@@ -269,37 +241,6 @@ def min_pair_distance(entries: Column) -> Column:
 
     raw = F.aggregate(occ, zero, step, lambda acc: acc["best"])
     return F.when(raw < big, raw).cast("int")
-
-
-def search_proximity(page_index: DataFrame, inverted_terms: DataFrame,
-                     query: str, limit: int = 20) -> DataFrame:
-    """Ranked search with the TRUE proximity rule (Meilisearch rule #3,
-    shared_pages_meilisearch.py:167-176): after words (matched terms), docs
-    whose query terms sit closest together (min pairwise token distance)
-    rank higher — adjacent terms beat scattered terms. Requires an index
-    built with ``positions=True``. Single-term matches get null proximity
-    and rank after any doc with a measured distance (nulls last)."""
-    terms = tokenize_query(query)
-    spark = page_index.sparkSession
-    if not terms:
-        return page_index.limit(0).withColumns(
-            {"matched_terms": F.lit(0).cast("long"),
-             "tf_sum": F.lit(0).cast("long"),
-             "proximity": F.lit(None).cast("int")})
-    qdf = spark.createDataFrame([(t,) for t in set(terms)], "term string")
-    hits = inverted_terms.join(F.broadcast(qdf), "term", "inner")
-    scored = hits.groupBy("url_canon", "ts14").agg(
-        F.countDistinct("term").alias("matched_terms"),
-        F.sum("tf").alias("tf_sum"),
-        min_pair_distance(
-            F.collect_list(F.struct("term", "pos_arr"))).alias("proximity"),
-    )
-    out = scored.join(page_index, ["url_canon", "ts14"], "inner")
-    return (out.orderBy(
-        F.desc("matched_terms"), F.asc_nulls_last("proximity"),
-        F.desc("tf_sum"), F.desc("quality_score"), F.desc("word_count"),
-        F.asc("url_canon"), F.asc("ts14"))
-        .limit(limit))
 
 
 def with_snippet(matched: DataFrame, terms: list[str],
@@ -419,7 +360,7 @@ def ranked_match_set(page_index: DataFrame, inverted_terms: DataFrame,
     (shared_pages_meilisearch.py:167-176 — the reference configures ONE
     ordered chain ``words, typo, proximity, attribute, sort, exactness,
     quality_score:desc, word_count:desc``; this computes all of its
-    criteria in one pass instead of the per-rule variants above).
+    criteria in one pass).
 
     Requires an index built with ``positions=True``. Two shuffles total:
     the (doc, query_term) aggregation and the doc aggregation — the typo
@@ -493,68 +434,6 @@ def ranked_match_set(page_index: DataFrame, inverted_terms: DataFrame,
             .drop("_mpos"))
 
 
-#: the reference's configured ranking chain, in order
-#: (shared_pages_meilisearch.py:167-176). ``sort`` is the query-time
-#: user-sort slot — empty unless the caller passes ``sort_by``.
-RANKING_RULES = ("words", "typo", "proximity", "attribute", "sort",
-                 "exactness", "quality_score:desc", "word_count:desc")
-
-
-def search_ranked(page_index: DataFrame, inverted_terms: DataFrame,
-                  query: str, limit: int = 20, max_edit: int = 1,
-                  sort_by: list[Column] | None = None) -> DataFrame:
-    """Unified ranked search applying the reference's FULL Meilisearch
-    rule chain in configured order (``RANKING_RULES``,
-    shared_pages_meilisearch.py:167-176):
-
-    1. words      — matched query terms desc
-    2. typo       — total best-match edit distance asc
-    3. proximity  — min pairwise token distance asc (nulls last)
-    4. attribute  — earliest matching position asc (title before content)
-    5. sort       — caller's ``sort_by`` columns (empty by default)
-    6. exactness  — exact consecutive phrase match desc
-    7. quality_score desc, 8. word_count desc  (custom rules)
-
-    with a deterministic final (url_canon, ts14) tie-break. This is the
-    one-stop search a reference user gets from ``search_shared_pages`` —
-    the per-rule variants above remain as focused building blocks."""
-    scored = ranked_match_set(page_index, inverted_terms, query, max_edit)
-    if not tokenize_query(query):
-        return scored.limit(0)
-    out = scored.join(page_index, ["url_canon", "ts14"], "inner")
-    order = [F.desc("matched_terms"), F.asc("typo_cost"),
-             F.asc_nulls_last("proximity"), F.asc_nulls_last("best_pos")]
-    order += list(sort_by or [])
-    order += [F.desc("exact_phrase"), F.desc("quality_score"),
-              F.desc("word_count"), F.asc("url_canon"), F.asc("ts14")]
-    return out.orderBy(*order).limit(limit)
-
-
-def search_typo(page_index: DataFrame, inverted_terms: DataFrame, query: str,
-                limit: int = 20, max_edit: int = 1) -> DataFrame:
-    """Typo-tolerant ranked search: query terms expand to edit-distance ≤
-    ``max_edit`` index terms; exact matches rank above typo matches (the
-    reference's ``words > typo`` rule order, meilisearch_service.py:454-470),
-    then the standard ranking chain."""
-    terms = tokenize_query(query)
-    if not terms:
-        return search(page_index, inverted_terms, query, limit)
-    expanded = expand_terms_typo(inverted_terms, terms, max_edit)
-    hits = inverted_terms.join(F.broadcast(expanded), "term", "inner")
-    scored = hits.groupBy("url_canon", "ts14").agg(
-        F.countDistinct("query_term").alias("matched_terms"),
-        F.countDistinct(F.when(F.col("edit_dist") == 0, F.col("query_term")))
-        .alias("exact_terms"),
-        F.sum("tf").alias("tf_sum"),
-    )
-    out = scored.join(page_index, ["url_canon", "ts14"], "inner")
-    return (out.orderBy(
-        F.desc("matched_terms"), F.desc("exact_terms"), F.desc("tf_sum"),
-        F.desc("quality_score"), F.desc("word_count"),
-        F.asc("url_canon"), F.asc("ts14"))
-        .limit(limit))
-
-
 # --------------------------------------------------------------------------
 # BM25 relevance (Robertson & Spärck Jones; the Okapi BM25 standard the
 # reference's Meilisearch rule chain does not expose — an engine addition
@@ -618,52 +497,6 @@ def bm25_rank(inverted_terms: DataFrame, query_terms: list[str],
             .agg(F.count_distinct("term").alias("matched_terms"),
                  F.sum("tf").cast("long").alias("tf_sum"),
                  F.sum("_s_nano").cast("long").alias("bm25_e9")))
-
-
-# --------------------------------------------------------------------------
-# bucketed index storage: term-hash partition pruning (the 100 TB path)
-# --------------------------------------------------------------------------
-
-def write_partitioned_index(inverted_terms: DataFrame, path: str,
-                            n_buckets: int = 64) -> None:
-    """Persist the inverted-term table partitioned by ``term_bucket =
-    pmod(xxhash64(term), n_buckets)`` — the storage layout that makes a
-    query read ~|query terms| / n_buckets of the index instead of all of
-    it (Iceberg analog: ``PARTITIONED BY (bucket(N, term))``). Posting
-    lists for one term land in exactly one directory, so Spark's static
-    partition pruning keeps every non-query bucket out of the scan — no
-    files opened, no footers read."""
-    (inverted_terms
-     .withColumn("term_bucket",
-                 F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int"))
-     .write.mode("overwrite").partitionBy("term_bucket").parquet(path))
-
-
-def read_pruned_postings(spark, path: str, terms: list[str],
-                         n_buckets: int = 64, schema=None) -> DataFrame:
-    """Read ONLY the query terms' buckets from a partitioned index.
-    The ``term_bucket IN (...)`` predicate is a literal partition filter
-    (visible as ``PartitionFilters`` in the scan — asserted in
-    test_index), and the residual ``term IN (...)`` pushes down onto the
-    parquet row groups of the surviving buckets.
-
-    Pass ``schema`` (the index schema + ``term_bucket int``) to skip
-    footer-based inference entirely — with schema-merge enabled, plan-time
-    inference would otherwise read EVERY file's footer, defeating the
-    point of pruning (a catalog table carries its schema in metadata; the
-    test proves non-query buckets are then never opened at all)."""
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    uniq = list(dict.fromkeys(terms))
-    if not uniq:
-        return reader.parquet(path).limit(0).drop("term_bucket")
-    tdf = spark.createDataFrame([(t,) for t in uniq], "term string")
-    buckets = sorted({r["b"] for r in tdf.select(
-        F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("b"))
-        .distinct().collect()})  # |query terms| driver scalars, not rows
-    return (reader.parquet(path)
-            .filter(F.col("term_bucket").isin(buckets)
-                    & F.col("term").isin(uniq))
-            .drop("term_bucket"))
 
 
 def current_view_postings(inverted_terms: DataFrame,

@@ -52,29 +52,3 @@ def detect_gaps(df: DataFrame, key: str, start: str = "start",
             .filter(F.col("gap_end").isNotNull()
                     & (F.col("gap_size") >= min_gap))
             .select(key, "gap_start", "gap_end", "gap_size"))
-
-
-def coverage_fraction(df: DataFrame, key: str, window_start: str,
-                      window_end: str, start: str = "start",
-                      end: str = "end") -> DataFrame:
-    """A5: covered/window ratio per key — merged-island length divided by
-    the [window_start, window_end] span (incremental_scraping.py:379-424).
-    ``window_start/window_end`` are columns on ``df`` (constant per key)."""
-    merged = merge_intervals(
-        df.select(key, start, end), key, start, end)
-    bounds = df.groupBy(key).agg(
-        F.min(window_start).alias("__ws"), F.max(window_end).alias("__we"))
-    j = merged.join(bounds, key)
-    clipped = (F.least(F.col(end).cast("double"), F.col("__we").cast("double"))
-               - F.greatest(F.col(start).cast("double"),
-                            F.col("__ws").cast("double")))
-    per_key = j.groupBy(key, "__ws", "__we").agg(
-        F.sum(F.greatest(clipped, F.lit(0.0))).alias("covered"))
-    return per_key.select(
-        key,
-        F.round(
-            F.col("covered")
-            / (F.col("__we").cast("double") - F.col("__ws").cast("double")),
-            6,
-        ).alias("coverage"),
-    )

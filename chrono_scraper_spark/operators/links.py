@@ -94,14 +94,6 @@ def anchor_text_counts(links: DataFrame) -> DataFrame:
                  F.count_distinct("src_host").alias("n_src_hosts")))
 
 
-def host_edges(links: DataFrame) -> DataFrame:
-    """Distinct (src, dst) host pairs — ``graph.host_authority``'s input,
-    derived from actual page HTML instead of a synthetic formula."""
-    return (links.select(F.col("src_host").alias("src"),
-                         F.col("dst_host").alias("dst"))
-            .filter(F.col("dst") != "").distinct())
-
-
 def meta_robots(pages: DataFrame, html_col: str = "html",
                 url_col: str = "url") -> DataFrame:
     """Page-level Robots-Exclusion-Protocol directives from

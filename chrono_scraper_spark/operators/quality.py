@@ -1055,117 +1055,8 @@ def wordpiece_encode(docs: DataFrame, vocab: DataFrame,
 
 
 # --------------------------------------------------------------------------
-# fastText-style classifier TRAINING (pyspark.ml bridge to fasttext_score's
-# zero-shuffle inference shape)
-# --------------------------------------------------------------------------
-
-def fasttext_train(labeled: DataFrame, label_col: str = "label",
-                   text_col: str = "text",
-                   n_buckets: int = FASTTEXT_BUCKETS,
-                   max_iter: int = 60, reg_param: float = 0.0,
-                   ) -> tuple[list[int], int]:
-    """Train the hashed-bucket quality classifier with Spark MLlib and
-    export weights for the zero-shuffle inference path
-    (``fasttext_score_trained``): tokens → md5 bucket counts (the SAME
-    bucket function inference uses) → dense count vector
-    (``array_to_vector``, JVM-side) → ``LogisticRegression``.
-
-    Labeled quality-classifier corpora are small by construction (curated
-    positive/negative seeds, 10⁴-10⁶ docs — CCNet trains on Wikipedia
-    refs), so a dense ``n_buckets`` feature vector per labeled doc is the
-    right trade: the featurize pass is one Arrow-batched ``mapInPandas``
-    (numpy bincount per doc, no explode/shuffle), and MLlib's LBFGS does
-    the iterations. The 100 TB-scale half of the system is INFERENCE,
-    which stays a zero-shuffle codegen projection over the exported
-    weights.
-
-    Returns ``(weights_milli, bias_milli)`` — per-bucket weights and the
-    intercept, milli-quantized exactly like ``fasttext_score``'s
-    deterministic stand-in, so the trained model swaps into the same
-    integer-fold plan."""
-    import numpy as np
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import types as ST
-
-    bucket = lambda t: (_hex_int(F.md5(t), 1, 8) % n_buckets)  # noqa: E731
-    feats = labeled.select(
-        F.col(label_col).cast("double").alias("label"),
-        T.tokens(F.col(text_col)).alias("_tk")
-    ).select(
-        "label",
-        F.transform("_tk", lambda t: bucket(t).cast("int")).alias("_b"))
-
-    out_schema = ST.StructType([
-        ST.StructField("label", ST.DoubleType()),
-        ST.StructField("counts", ST.ArrayType(ST.DoubleType())),
-    ])
-
-    def _featurize(batches):  # pragma: no cover — executor-side
-        import pandas as _pd
-
-        # mean-of-buckets (fastText) form: counts normalized by token
-        # count, so the learned logit is Σ w_b·(count_b/n) + b — exactly
-        # the mean-weight fold the inference projection computes
-        for pdf in batches:
-            counts = [
-                np.bincount(np.asarray(b, dtype=np.int64),
-                            minlength=n_buckets).astype(float) / len(b)
-                if len(b) else np.zeros(n_buckets)
-                for b in pdf["_b"]
-            ]
-            yield _pd.DataFrame({"label": pdf["label"],
-                                 "counts": counts})
-
-    train = (feats.mapInPandas(_featurize, out_schema)
-             .select("label",
-                     array_to_vector("counts").alias("features")))
-    lr = LogisticRegression(maxIter=max_iter, regParam=reg_param)
-    model = lr.fit(train)
-    w = model.coefficients.toArray()
-    weights_milli = [int(round(x * 1000.0)) for x in w]
-    return weights_milli, int(round(float(model.intercept) * 1000.0))
-
-
-def fasttext_score_trained(docs: DataFrame, weights_milli: list[int],
-                           bias_milli: int = 0, id_col: str = "doc_id",
-                           text_col: str = "text",
-                           threshold_micro: int = FASTTEXT_THRESHOLD_MICRO,
-                           ) -> DataFrame:
-    """``fasttext_score`` with TRAINED weights: identical zero-shuffle
-    codegen projection (md5 bucket → weight lookup → long fold → one
-    sigmoid), but the per-bucket weight comes from an inline weights
-    array (``element_at`` on a literal array — the broadcast-codebook
-    pattern in expression form; at a few thousand buckets the array is
-    KBs of plan, streamed at scan speed over any corpus size)."""
-    n_buckets = len(weights_milli)
-    arr = F.array(*[F.lit(int(x)).cast("long") for x in weights_milli])
-    toks = T.tokens(F.col(text_col))
-    weight = lambda t: F.element_at(  # noqa: E731
-        arr, (_hex_int(F.md5(t), 1, 8) % n_buckets).cast("int") + 1)
-    step1 = docs.select(
-        F.col(id_col),
-        F.size(toks).cast("long").alias("n_tokens"),
-        F.aggregate(F.transform(toks, weight), F.lit(0).cast("long"),
-                    lambda acc, x: acc + x).alias("w_sum"))
-    logit = ((F.col("w_sum") / F.greatest(F.col("n_tokens"), F.lit(1))
-              + F.lit(bias_milli)) / 1000.0)
-    score_micro = F.when(F.col("n_tokens") == 0, F.lit(500_000)) \
-        .otherwise(F.round(F.lit(1e6) / (F.lit(1.0) + F.exp(-logit)))) \
-        .cast("long")
-    return step1.select(
-        id_col, "n_tokens", "w_sum",
-        score_micro.alias("score_micro"),
-        ((F.col("n_tokens") > 0)
-         & (score_micro >= threshold_micro)).alias("keep"))
-
-
-# --------------------------------------------------------------------------
 # readability (quality_scoring.py analog)
 # --------------------------------------------------------------------------
-
-# get_quality_grade thresholds (quality_scoring.py:35-38)
-GRADE_THRESHOLDS = ((85, "A"), (70, "B"), (50, "C"), (30, "D"))
 
 
 def _syllables(word: Column) -> Column:
@@ -1291,8 +1182,8 @@ def bigram_logprob(docs: DataFrame, id_col: str = "doc_id",
 
 
 # --------------------------------------------------------------------------
-# BPE tokenizer TRAINING (the learn-merges half; wordpiece_encode and
-# bpe_encode are the apply halves)
+# BPE tokenizer TRAINING (the learn-merges half; wordpiece_encode is the
+# apply half)
 # --------------------------------------------------------------------------
 
 BPE_END = "</w>"
@@ -1320,7 +1211,7 @@ def bpe_train(docs: DataFrame, n_merges: int = 50,
               id_col: str = "doc_id", text_col: str = "text",
               min_pair_count: int = 2) -> DataFrame:
     """Learn a BPE merge table from the corpus (Sennrich et al. 2016) —
-    the training counterpart of ``wordpiece_encode``/``bpe_encode``
+    the training counterpart of ``wordpiece_encode``
     (complements ``build_vocab``'s counting pass).
 
     Scale shape — the part that matters at 100 TB: BPE trains on the
@@ -1377,76 +1268,6 @@ def bpe_train(docs: DataFrame, n_merges: int = 50,
         merges,
         "rank long, left string, right string, merged string, "
         "pair_count long")
-
-
-def _bpe_word(word: str, ranks: dict, end: str) -> list[str]:
-    """Classic rank-ordered BPE apply for one word."""
-    syms = list(word) + [end]
-    while len(syms) > 1:
-        best = None
-        for i in range(len(syms) - 1):
-            rk = ranks.get((syms[i], syms[i + 1]))
-            if rk is not None and (best is None or rk < best):
-                best = rk
-        if best is None:
-            break
-        pair = next(p for p, rk in ranks.items() if rk == best)
-        out: list[str] = []
-        i = 0
-        while i < len(syms):
-            if (i < len(syms) - 1
-                    and (syms[i], syms[i + 1]) == pair):
-                out.append(syms[i] + syms[i + 1])
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        syms = out
-    return syms
-
-
-def bpe_encode(docs: DataFrame, merges: DataFrame,
-               id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Apply a trained BPE merge table: merges (a bounded codebook,
-    broadcast as a rank dict — same discipline as wordpiece_encode's
-    frozenset) drive the classic lowest-rank-first merge loop per word
-    in ONE Arrow-batched pandas UDF pass; pre-tokenization stays
-    JVM-side. Output per doc: n_pieces, piece_sig (md5 of the joined
-    piece stream — value-checks the exact segmentation)."""
-    import hashlib
-
-    from pyspark.sql import types as ST
-    from pyspark.sql.functions import pandas_udf
-
-    ranks = {(r["left"], r["right"]): int(r["rank"])
-             for r in merges.select("left", "right", "rank").collect()}
-    bc = docs.sparkSession.sparkContext.broadcast(ranks)
-
-    out_t = ST.StructType([
-        ST.StructField("n_pieces", ST.LongType()),
-        ST.StructField("piece_sig", ST.StringType()),
-    ])
-
-    @pandas_udf(out_t)
-    def _enc(tok_ser: pd.Series) -> pd.DataFrame:  # pragma: no cover
-        rk = bc.value
-        rows = []
-        for toks in tok_ser:
-            out: list[str] = []
-            for w in (toks if toks is not None else []):
-                out.extend(_bpe_word(w, rk, BPE_END))
-            rows.append({
-                "n_pieces": len(out),
-                "piece_sig": hashlib.md5(
-                    " ".join(out).encode()).hexdigest(),
-            })
-        return pd.DataFrame(rows)
-
-    return (docs
-            .select(F.col(id_col),
-                    _enc(T.tokens(F.col(text_col))).alias("_e"))
-            .select(id_col, F.col("_e.n_pieces").alias("n_pieces"),
-                    F.col("_e.piece_sig").alias("piece_sig")))
 
 
 def with_compression_ratio(docs: DataFrame, text_col: str = "text",

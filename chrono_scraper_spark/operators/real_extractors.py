@@ -70,20 +70,6 @@ _RE_ANY_DATE = re.compile(r"\b(\d{4}-\d{2}-\d{2})\b")
 _traf_config = None
 
 
-def available() -> dict[str, bool]:
-    """Which real strategies this environment can run."""
-    return {
-        "trafilatura": TRAFILATURA_AVAILABLE,
-        "readability": READABILITY_AVAILABLE and BS4_AVAILABLE,
-        "newspaper3k": NEWSPAPER_AVAILABLE,
-        "beautifulsoup": BS4_AVAILABLE,
-    }
-
-
-def any_available() -> bool:
-    return any(available().values())
-
-
 def _trafilatura_cfg():
     global _traf_config
     if _traf_config is None:

@@ -78,77 +78,3 @@ def recrawl_schedule(pages: DataFrame, url_col: str = "url",
                         (F.col("lambda_e9") * F.col("age_s")).cast("long"))
             .withColumn("cold_start", F.col("n_captures") == 1)
             .withColumn("due", F.col("score_e9") >= due_threshold_e9))
-
-
-def merge_revalidated(fetched: DataFrame,
-                      prior_prefix: str = "prior_") -> DataFrame:
-    """Fold 304-Not-Modified rows back onto their stored captures.
-
-    Input: one row per revalidation fetch, carrying the live-fetch
-    outputs (``html``, ``http_status``, ``fetch_err``, ``resp_etag``,
-    ``resp_last_modified`` from ``fetch_http(validator_cols=…)``) plus
-    the stored capture the caller joined in under ``prior_prefix``
-    columns (``prior_text``, ``prior_title``, ``prior_digest``,
-    ``prior_etag``, ``prior_last_modified`` — whichever exist).
-
-    Output columns (one zero-shuffle projection):
-
-    * ``not_modified`` — http_status == 304;
-    * ``text`` / ``title`` / ``digest`` — the stored values on 304 rows,
-      NULL on fresh rows (the caller extracts those from ``html``
-      downstream — a 304 row must NOT re-enter the extractor);
-    * ``etag`` / ``last_modified`` — the validators to STORE. On 304
-      rows: the response's when sent, else the stored ones carried
-      forward (RFC 9110 §15.4.5 allows a 304 to omit validators —
-      keeping the old ones is the correct cache behavior). The same
-      carry-forward applies to FAILED fetches (no valid response — the
-      stored validators must survive for the next conditional attempt).
-      On fresh 200 rows the response validators are stored AS-IS (NULL
-      when the server omits them): the old validators validate the OLD
-      body, and storing them against the new capture would make a later
-      revert-to-old-content 304 against the wrong stored text;
-    * ``method`` — 'revalidated_304' on 304 rows, NULL otherwise (fresh
-      rows get their method from the extraction cascade).
-
-    The economics: at archive scale most pages don't change between
-    visits (the Poisson rates ``recrawl_schedule`` estimates are tiny
-    for the long tail), so the steady-state crawl round is dominated by
-    304 header exchanges — no body bytes, no extraction compute. This
-    operator is what turns the stored validators into that saving.
-    """
-    def prior(name: str):
-        col = prior_prefix + name
-        return F.col(col) if col in fetched.columns \
-            else F.lit(None).cast("string")
-
-    nm = F.col("http_status") == 304
-    out = fetched.withColumn("not_modified", nm)
-    for name in ("text", "title", "digest"):
-        if prior_prefix + name in fetched.columns:
-            out = out.withColumn(name, F.when(nm, prior(name)))
-    resp_etag = (F.col("resp_etag") if "resp_etag" in fetched.columns
-                 else F.lit(None).cast("string"))
-    resp_lm = (F.col("resp_last_modified")
-               if "resp_last_modified" in fetched.columns
-               else F.lit(None).cast("string"))
-    # validator routing: a 304 takes the response's validators with the
-    # stored ones as fallback; a fresh 200 stores the response's AS-IS
-    # (NULL when absent); a failed fetch keeps the STORED validators
-    # outright — an error page's ETag must not replace the validator of
-    # the capture the archive still serves.
-    fetch_err = (F.col("fetch_err") if "fetch_err" in fetched.columns
-                 else F.lit(None).cast("string"))
-    html = (F.col("html") if "html" in fetched.columns
-            else F.lit(None).cast("binary"))
-    fresh_ok = ~nm & fetch_err.isNull() & html.isNotNull()
-    return (out
-            .withColumn("etag",
-                        F.when(nm, F.coalesce(resp_etag, prior("etag")))
-                        .when(fresh_ok, resp_etag)
-                        .otherwise(prior("etag")))
-            .withColumn("last_modified",
-                        F.when(nm, F.coalesce(resp_lm,
-                                              prior("last_modified")))
-                        .when(fresh_ok, resp_lm)
-                        .otherwise(prior("last_modified")))
-            .withColumn("method", F.when(nm, "revalidated_304")))

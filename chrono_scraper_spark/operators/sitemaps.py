@@ -1,20 +1,16 @@
-"""Sitemap discovery: robots.txt ``Sitemap:`` directives, sitemap-XML
-parsing, and lastmod-driven recrawl candidacy.
+"""Sitemap discovery: sitemap-XML parsing and lastmod-driven recrawl
+candidacy.
 
 The reference discovers URLs exclusively through Wayback/CC CDX indexes;
 a live crawler's other standard discovery channel is sitemaps.org
-protocol XML. Three composable relational passes, all JVM regexp/array
+protocol XML. Two composable relational passes, all JVM regexp/array
 expressions (RE2-compatible patterns, shared verbatim with the DuckDB
 oracle — no XML library, sitemap files in the wild are too dirty for
 strict parsers anyway, and the two tags we need are regular):
 
-* ``sitemap_urls_from_robots`` — ``Sitemap:`` lines from robots bodies
-  (the directive is group-independent per sitemaps.org, so no UA
-  resolution — unlike Allow/Disallow/Crawl-delay);
 * ``parse_sitemaps`` — ``<url><loc>/<lastmod>`` entries from urlset
-  bodies, plus child references from ``<sitemapindex>`` files (one
-  explode per body; at 50k-URL-per-file protocol limits a body is
-  ~5 MB, far under Spark's 2 GiB cell cap);
+  bodies (one explode per body; at 50k-URL-per-file protocol limits a
+  body is ~5 MB, far under Spark's 2 GiB cell cap);
 * ``sitemap_recrawl_status`` — join parsed entries against the capture
   log: ``new`` (never captured), ``stale`` (lastmod after the last
   capture — the sitemap says the page changed), ``fresh`` otherwise.
@@ -34,27 +30,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 URL_BLOCK_RE = r"(?is)<url>.*?</url>"
-SMAP_BLOCK_RE = r"(?is)<sitemap>.*?</sitemap>"
 LOC_RE = r"(?is)<loc>\s*(.*?)\s*</loc>"
 LASTMOD_RE = r"(?is)<lastmod>\s*(.*?)\s*</lastmod>"
 CHANGEFREQ_RE = r"(?is)<changefreq>\s*(.*?)\s*</changefreq>"
 PRIORITY_RE = r"(?is)<priority>\s*(.*?)\s*</priority>"
-
-
-def sitemap_urls_from_robots(robots: DataFrame) -> DataFrame:
-    """``(host, sitemap_url)`` from ``Sitemap:`` lines in robots bodies
-    (case-insensitive directive, group-independent)."""
-    lines = (robots
-             .select("host", F.explode(F.split(F.col("body"), "\n"))
-                     .alias("raw"))
-             .withColumn("line", F.trim(F.regexp_replace("raw", "#.*$", ""))))
-    return (lines
-            .filter(F.lower("line").startswith("sitemap:"))
-            .select("host",
-                    F.trim(F.expr(
-                        "substring(line, instr(line, ':') + 1)"))
-                    .alias("sitemap_url"))
-            .filter(F.col("sitemap_url") != "").distinct())
 
 
 def parse_sitemaps(bodies: DataFrame, host_col: str = "host",
@@ -87,39 +66,6 @@ def parse_sitemaps(bodies: DataFrame, host_col: str = "host",
                                F.col("changefreq")))
             .withColumn("priority",
                         F.expr("try_cast(priority AS DOUBLE)")))
-
-
-#: sitemap changefreq token → revisit interval in seconds ('always' maps
-#: to 5 min like a news crawler's floor; 'never' to NULL — lastmod alone
-#: governs). The publisher hint composes with recrawl_schedule's measured
-#: Poisson rate via least()/greatest() at the caller's policy.
-_CHANGEFREQ_S = {"always": 300, "hourly": 3600, "daily": 86400,
-                 "weekly": 604800, "monthly": 2629800, "yearly": 31557600}
-
-
-def changefreq_interval_s(col):
-    """Column expr: changefreq token → seconds (unknown/never → NULL)."""
-    expr = None
-    for tok, secs in _CHANGEFREQ_S.items():
-        v = F.lit(secs).cast("long")
-        expr = F.when(col == tok, v) if expr is None \
-            else expr.when(col == tok, v)
-    return expr
-
-
-def sitemap_index_refs(bodies: DataFrame, host_col: str = "host",
-                       body_col: str = "body") -> DataFrame:
-    """``(host, child_url)`` references from ``<sitemapindex>`` bodies —
-    the caller fetches children and feeds them back through
-    ``parse_sitemaps`` (the index nesting depth is 1 by protocol)."""
-    body = F.col(body_col).cast("string")
-    blocks = F.regexp_extract_all(body, F.lit(SMAP_BLOCK_RE), F.lit(0))
-    return (bodies
-            .select(F.col(host_col).alias("host"),
-                    F.explode(blocks).alias("block"))
-            .select("host",
-                    F.regexp_extract("block", LOC_RE, 1).alias("child_url"))
-            .filter(F.col("child_url") != "").distinct())
 
 
 def sitemap_recrawl_status(entries: DataFrame, captures: DataFrame,

@@ -1,7 +1,7 @@
 """Document deduplication family for training-data pipelines.
 
 Exact (hash groupBy), MinHash+LSH (shingle → minhash → band → bucket join),
-SimHash (64-bit, pure JVM bit aggregation), n-gram Jaccard verification, and
+SimHash (64-bit, md5-bit portable), n-gram Jaccard verification, and
 embedding-cosine near-dup. Engine additions beyond the reference's
 digest-level dedup (SURVEY §2.3) — the ops a 100 TB corpus needs before
 training.
@@ -13,8 +13,8 @@ Scale design:
   shuffle is proportional to candidate pairs, not n². Mega-buckets (boiler-
   plate text) are handled by AQE skew-join splitting.
 - SimHash is 64 aggregate expressions over exploded tokens (no UDF); pair
-  candidates come from 16-bit chunk buckets (pigeonhole: hamming ≤ 3 ⇒ some
-  chunk equal).
+  candidates come from chunk buckets (pigeonhole: hamming ≤ 3 ⇒ some chunk
+  equal).
 - Embedding near-dup mirrors MinHash: random-hyperplane LSH buckets, then
   exact cosine on candidates only.
 """
@@ -133,38 +133,8 @@ def minhash_near_duplicates(docs: DataFrame, id_col: str = "doc_id",
 
 
 # --------------------------------------------------------------------------
-# SimHash (64-bit, no UDF)
+# SimHash (64-bit, md5-bit portable, no UDF)
 # --------------------------------------------------------------------------
-
-def simhash64(docs: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per document, computed entirely JVM-side:
-    explode tokens → xxhash64(token) → per-bit ±1 sums → sign vector →
-    reassembled long. One shuffle (the groupBy id)."""
-    tok = docs.select(F.col(id_col),
-                      F.explode(tokens(F.col(text_col))).alias("tok"))
-    h = F.xxhash64("tok")
-    aggs = [
-        F.sum(F.when(F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1,
-                     F.lit(1)).otherwise(F.lit(-1))).alias(f"b{b}")
-        for b in range(64)
-    ]
-    sums = tok.groupBy(id_col).agg(*aggs)
-    sim = None
-    for b in range(64):
-        bit = F.when(F.col(f"b{b}") > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long"))
-        term = bit * F.lit(1 << b).cast("long") if b < 63 else \
-            F.when(bit == 1, F.lit(-(1 << 63)).cast("long")).otherwise(
-                F.lit(0).cast("long"))
-        sim = term if sim is None else sim + term
-    return sums.select(F.col(id_col), sim.alias("simhash"))
-
-
-def _popcount64(x: Column) -> Column:
-    """Hamming weight via bit_count (Spark built-in)."""
-    return F.bit_count(x)
-
 
 def simhash_bits_portable(docs: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text") -> DataFrame:
@@ -172,8 +142,8 @@ def simhash_bits_portable(docs: DataFrame, id_col: str = "doc_id",
     hex digits (bit b of a token = bit (b%4) of hex digit b//4) — portable:
     the identical construction runs in the DuckDB oracle
     (oracle_gen.simhash_sum_exprs_sql), so pair output is value-checkable.
-    Same shape as ``simhash64`` (explode → 64 aggregates → sign vector);
-    one shuffle (the groupBy id)."""
+    Shape: explode → 64 aggregates → sign vector; one shuffle (the
+    groupBy id)."""
     tok = docs.select(F.col(id_col),
                       F.explode(tokens(F.col(text_col))).alias("tok"))
     hx = F.md5("tok")
@@ -202,10 +172,10 @@ def _bits_hamming(a: Column, b: Column) -> Column:
 def simhash_near_duplicates_portable(docs: DataFrame, id_col: str = "doc_id",
                                      text_col: str = "text",
                                      max_hamming: int = 3) -> DataFrame:
-    """``simhash_near_duplicates`` over the portable md5-derived bits —
-    identical pigeonhole candidate construction (16-bit chunks), hamming
-    verify on the bit strings. Used by the oracle-checked contract query;
-    the xxhash64 long variant below is the faster production path."""
+    """Near-dup pairs with SimHash hamming distance ≤ max_hamming over the
+    portable md5-derived bits. Candidates from 16-bit chunk equality
+    (pigeonhole: ≤3 differing bits ⇒ at least one of 4 chunks identical),
+    then hamming verify on the bit strings."""
     sim = simhash_bits_portable(docs, id_col, text_col)
     chunks = sim.select(
         F.col(id_col), "bits",
@@ -226,35 +196,6 @@ def simhash_near_duplicates_portable(docs: DataFrame, id_col: str = "doc_id",
             .withColumn("hamming",
                         _bits_hamming(F.col("bits_a"), F.col("bits_b"))
                         .cast("int"))
-            .filter(F.col("hamming") <= max_hamming)
-            .select("a", "b", "hamming"))
-
-
-def simhash_near_duplicates(docs: DataFrame, id_col: str = "doc_id",
-                            text_col: str = "text",
-                            max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs with SimHash hamming distance ≤ max_hamming.
-    Candidates from 16-bit chunk equality (pigeonhole: ≤3 differing bits ⇒
-    at least one of 4 chunks identical), then exact hamming verify."""
-    sim = simhash64(docs, id_col, text_col)
-    chunks = sim.select(
-        F.col(id_col), "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(i).alias("chunk_idx"),
-                     F.shiftrightunsigned("simhash", 16 * i)
-                     .bitwiseAND(F.lit(0xFFFF)).alias("chunk"))
-            for i in range(4)
-        ])).alias("c"),
-    ).select(id_col, "simhash", "c.chunk_idx", "c.chunk")
-    left = chunks.select(F.col(id_col).alias("a"),
-                         F.col("simhash").alias("sim_a"), "chunk_idx", "chunk")
-    right = chunks.select(F.col(id_col).alias("b"),
-                          F.col("simhash").alias("sim_b"), "chunk_idx", "chunk")
-    cands = (left.join(right, ["chunk_idx", "chunk"])
-             .filter(F.col("a") < F.col("b"))
-             .select("a", "b", "sim_a", "sim_b").distinct())
-    hamming = _popcount64(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    return (cands.withColumn("hamming", hamming)
             .filter(F.col("hamming") <= max_hamming)
             .select("a", "b", "hamming"))
 

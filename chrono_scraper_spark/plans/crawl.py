@@ -114,7 +114,6 @@ class CrawlJob:
         robots_rules: DataFrame | None = None,
         budget_overrides: DataFrame | None = None,
         salt_target_rows: int | None = None,
-        broadcast_fetch_join: bool = True,
         retry_transient: bool = False,
         max_retries: int = C.MAX_RETRIES,
         failure_rate_trip: float | None = None,
@@ -140,7 +139,6 @@ class CrawlJob:
         self.robots_rules = robots_rules
         self.budget_overrides = budget_overrides
         self.salt_target_rows = salt_target_rows
-        self.broadcast_fetch_join = broadcast_fetch_join
         # T7: re-enter failed rows next round until max_retries (celery
         # retry analog, shared_pages_scraping.py:277-284). Off by default:
         # corpus-replay failures are deterministic, so the reference-parity
@@ -493,11 +491,9 @@ class CrawlJob:
             # FETCH: the frontier is metadata-only; payloads join back for the
             # scheduled subset. Broadcasting the scheduled keys keeps the
             # (payload-heavy) corpus side unshuffled — html moves zero times
-            # before extraction. At 10^10 scale with a >1e7-row schedule, swap
-            # the broadcast for a bucketed join on url (pages table bucketed by
-            # url at write time) — same code path minus the hint. In live-fetch
-            # mode (origin HTTP), with_salted_host_partition distributes the
-            # scheduled set instead (P8; operator tested separately).
+            # before extraction. In live-fetch mode (origin HTTP),
+            # with_salted_host_partition distributes the scheduled set
+            # instead (P8; operator tested separately).
             if "retry_count" not in scheduled.columns:
                 scheduled = scheduled.withColumn("retry_count",
                                                  F.lit(0).cast("int"))
@@ -526,10 +522,7 @@ class CrawlJob:
                 work = fetch_http(work, **self.http_fetch)
             else:
                 pages_raw = self._read_pages()
-                # bucketed-table corpora store ts14; selecting the STORED
-                # column (not a re-derived expression) keeps the join key equal
-                # to the bucket key, so the scan's HashPartitioning satisfies
-                # the join's required distribution — no payload-side Exchange
+                # a corpus that stores ts14 joins on the stored column
                 if "ts14" in pages_raw.columns:
                     payload = pages_raw.select("url", "ts14", "html")
                 else:
@@ -537,14 +530,10 @@ class CrawlJob:
                         "url",
                         F.date_format("warc_ts", "yyyyMMddHHmmss").alias("ts14"),
                         "html")
-                bucketed = self.pages_path.startswith("table:")
                 # broadcast only while the scheduled set is genuinely small;
-                # above the cutoff, a bucketed corpus table keeps the join
-                # bucket-local (only the metadata-sized scheduled set shuffles
-                # into the buckets), and a plain parquet corpus falls back to a
-                # full shuffle join
-                broadcasting = (self.broadcast_fetch_join
-                                and n_pending <= 500_000)
+                # above the cutoff the fetch join falls back to a full
+                # shuffle join
+                broadcasting = n_pending <= 500_000
                 if broadcasting:
                     work = payload.join(F.broadcast(scheduled), ["url", "ts14"],
                                         "inner")
@@ -570,11 +559,7 @@ class CrawlJob:
                 # tasks/core), not a fixed constant: a fixed 50k target gave one
                 # 30k-row mega-host partition a 7-8 s straggler.
                 scan_parts = payload.rdd.getNumPartitions()
-                # bucketed corpora behave like the broadcast case: the join
-                # output inherits the bucket partitioning (url-hash — byte-
-                # balanced regardless of host skew), so no salting repartition
-                # unless the bucket count is too coarse to feed the cluster
-                if (not (broadcasting or bucketed)
+                if (not broadcasting
                         or scan_parts < max(2, parallelism * 3 // 4)):
                     work = with_salted_host_partition(
                         work, target_rows_per_partition=salt_target)

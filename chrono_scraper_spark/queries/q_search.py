@@ -330,7 +330,7 @@ def q_fulltext_ranked(spark, sf_dir):
     chain in configured order (shared_pages_meilisearch.py:167-176):
     words → typo → proximity → attribute → sort(no-op) → exactness →
     quality_score:desc → word_count:desc (operators/index.py::
-    search_ranked / ranked_match_set). The emitted ``rank`` column freezes
+    ranked_match_set). The emitted ``rank`` column freezes
     the total order, so the value hash verifies the CHAIN, not just the
     per-rule scores. Planted docs guarantee every rule decides an adjacent
     pair (see _RANKED_PLANTED)."""

@@ -39,42 +39,11 @@ FRONTIER_COLUMNS = [
 
 def read_pages(spark: SparkSession, path: str,
                schema: StructType | None = None) -> DataFrame:
-    """The Common-Crawl-style corpus (input_hint shape + frontier columns).
-
-    ``path`` is either a parquet directory or ``table:<name>`` — a catalog
-    table written by :func:`write_bucketed_pages`. The table form is the
-    10^10-row deployment shape: bucketed by the fetch-join key, so the
-    payload side of every round's fetch join is exchange-free (the Iceberg
-    analog is ``PARTITIONED BY (bucket(N, url))`` with storage-partitioned
-    joins). ``schema``, when known from an earlier read, skips the parquet
-    schema-inference job (a table has its schema in the metastore)."""
-    if path.startswith("table:"):
-        return spark.table(path[len("table:"):])
+    """The Common-Crawl-style corpus (input_hint shape + frontier columns):
+    a parquet directory. ``schema``, when known from an earlier read, skips
+    the parquet schema-inference job."""
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(path)
-
-
-def write_bucketed_pages(pages: DataFrame, table_name: str, path: str,
-                         n_buckets: int = 64) -> None:
-    """Persist the corpus as a bucketed+sorted catalog table keyed by the
-    fetch-join key ``(url, ts14)``.
-
-    This is the scale answer for CrawlJob's >broadcast-cutoff fetch join
-    (plans/crawl.py): a plain parquet corpus must shuffle ~100 TB of html
-    payloads onto the join key every round, while a bucketed table's scan
-    already satisfies the join's required distribution — only the scheduled
-    set (metadata-only, millions of rows) shuffles into the N buckets, and
-    the ``sortBy`` lets SortMergeJoin skip the payload-side sort too.
-    ``ts14`` is materialized as a stored column so the join key is the
-    bucket column itself, not a derived expression.
-    """
-    df = pages
-    if "ts14" not in df.columns:
-        df = df.withColumn("ts14", ts14(F.col("warc_ts")))
-    (df.write.mode("overwrite").format("parquet")
-       .bucketBy(n_buckets, "url", "ts14").sortBy("url", "ts14")
-       .option("path", path)
-       .saveAsTable(table_name))
 
 
 def _seed_condition(seed: Row, url: Column, host: Column,

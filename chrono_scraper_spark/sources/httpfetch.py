@@ -261,15 +261,14 @@ def fetch_http(
 
     ``range_cols=(offset_col, length_col)`` sends a per-row
     ``Range: bytes=offset-(offset+length-1)`` header — the Common Crawl
-    CDX-pointer read (one WARC gzip member per request, S6); compose with
-    ``sources.warc.decode_warc_member`` via ``fetch_warc_range``.
+    CDX-pointer read (one WARC gzip member per request, S6) that
+    ``sources.warc.decode_warc_member`` decodes.
 
     ``validator_cols=(etag_col, last_modified_col)`` sends per-row
     ``If-None-Match`` / ``If-Modified-Since`` conditional headers (NULL
     cells send nothing) — the RFC 9110 revalidation fast path: a 304 Not
     Modified row comes back with ``html`` NULL, ``http_status`` 304 and
-    ``fetch_err`` NULL (a SUCCESS — compose with
-    ``operators.recrawl.merge_revalidated`` to reuse the stored capture).
+    ``fetch_err`` NULL (a SUCCESS: the caller reuses the stored capture).
     ``capture_validators=True`` (implied by ``validator_cols``) appends
     ``resp_etag`` / ``resp_last_modified`` response columns so the
     catalog can store validators for the next round's conditionals. At

@@ -1,4 +1,4 @@
-"""WARC (ISO 28500) source: dependency-free writer + parser, Spark scan.
+"""WARC (ISO 28500) source: dependency-free writer + parser.
 
 Common Crawl — the corpus the reference's CC route reads
 (common_crawl_service / wayback_machine.py WARC filename+offset+length
@@ -11,19 +11,10 @@ records (deterministically — gzip mtime pinned to 0, record IDs derived
 from md5(url, date) instead of random UUIDs) and the parser inverts them
 byte-for-byte, so round-trip identity is oracle-checkable.
 
-Scale design:
-
-* **Per-record gzip members are the parallelism contract.** CC's layout
-  exists so a reader can start at any (offset, length) from the CDX index
-  and decompress one member — S6's range fetch. ``read_warc`` parallelizes
-  by FILE (binaryFile scan → one task per file; CC ships ~100k × 1 GB
-  files per crawl, far more files than executors), while
-  ``decode_warc_member`` is the (offset,length)-sliced kernel a range-read
-  path applies to bytes fetched per the CDX pointers — the same join shape
-  as CrawlJob's payload join, with the fetch done by ``fetch_http``.
-* **No driver-side bytes.** Files land directly in executor tasks via the
-  binaryFile data source; parsing is a mapInPandas over (path, content).
-* gzip/http parsing is stdlib-only and runs inside Arrow-batched workers.
+Per-record gzip members are the parallelism contract: CC's layout exists
+so a reader can start at any (offset, length) from the CDX index and
+decompress one member — S6's range fetch. ``decode_warc_member`` is that
+(offset,length)-sliced kernel. gzip/http parsing is stdlib-only.
 """
 
 from __future__ import annotations
@@ -31,11 +22,6 @@ from __future__ import annotations
 import gzip
 import hashlib
 import io
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 WARC_VERSION = b"WARC/1.0"
 _CRLF = b"\r\n"
@@ -234,119 +220,3 @@ def decode_warc_member(member: bytes) -> dict | None:
     member (or raw record) — to one parsed record."""
     recs = parse_warc(member)
     return recs[0] if recs else None
-
-
-def fetch_warc_range(
-    scheduled: DataFrame,
-    *,
-    warc_url_col: str = "warc_url",
-    offset_col: str = "warc_offset",
-    length_col: str = "warc_length",
-    **fetch_kw,
-) -> DataFrame:
-    """S6+S7 composed — the true Common Crawl deployment shape
-    (content_extraction_service.py:70-96 ``_WarcRecord``; wayback_machine
-    WARC filename+offset+length fields): each row's CDX pointer
-    (``warc_url``, ``warc_offset``, ``warc_length``) becomes one HTTP
-    **Range** GET through ``fetch_http``'s keep-alive pool (politeness and
-    host-partitioning semantics identical to the page-fetch path), and the
-    returned gzip member decodes executor-side via ``decode_warc_member``.
-
-    Appends: ``html`` (the record's HTTP payload — feeds the extraction
-    UDF exactly like a replay-mode payload), ``rec_url`` / ``warc_date`` /
-    ``rec_mime`` / ``rec_status`` (record headers), plus ``http_status`` /
-    ``fetch_err`` from the fetch. A failed fetch or unparseable member
-    yields ``html = NULL`` with the error recorded — dead-letter (E12)
-    semantics, a task never fails because a server or a member did.
-    """
-    from pyspark.sql import functions as F
-
-    from .httpfetch import fetch_http
-
-    if "ts14" not in scheduled.columns:
-        scheduled = scheduled.withColumn("ts14", F.lit("0"))
-    fetched = fetch_http(scheduled, url_col=warc_url_col,
-                         html_col="_warc_member",
-                         range_cols=(offset_col, length_col), **fetch_kw)
-    out_schema = T.StructType(
-        [f for f in fetched.schema.fields if f.name != "_warc_member"]
-        + [T.StructField("html", T.BinaryType()),
-           T.StructField("rec_url", T.StringType()),
-           T.StructField("warc_date", T.StringType()),
-           T.StructField("rec_mime", T.StringType()),
-           T.StructField("rec_status", T.IntegerType())])
-    keep = [f.name for f in fetched.schema.fields
-            if f.name != "_warc_member"]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            htmls, urls, dates, mimes, statuses = [], [], [], [], []
-            errs = list(pdf["fetch_err"])
-            for i, member in enumerate(pdf["_warc_member"]):
-                rec = (decode_warc_member(bytes(member))
-                       if member is not None else None)
-                if rec is None:
-                    if member is not None and errs[i] is None:
-                        errs[i] = "warc member parse error"
-                    htmls.append(None)
-                    urls.append(None)
-                    dates.append(None)
-                    mimes.append(None)
-                    statuses.append(None)
-                else:
-                    htmls.append(rec["payload"])
-                    urls.append(rec["url"])
-                    dates.append(rec["date"])
-                    mimes.append(rec["mime"])
-                    statuses.append(rec["status"])
-            out = pdf[keep].copy()
-            out["fetch_err"] = pd.Series(errs, dtype=object)
-            out["html"] = pd.Series(htmls, dtype=object)
-            out["rec_url"] = pd.Series(urls, dtype=object)
-            out["warc_date"] = pd.Series(dates, dtype=object)
-            out["rec_mime"] = pd.Series(mimes, dtype=object)
-            out["rec_status"] = pd.array(statuses, dtype="Int32")
-            yield out
-
-    return fetched.mapInPandas(run, schema=out_schema)
-
-
-WARC_SCHEMA = T.StructType([
-    T.StructField("warc_file", T.StringType()),
-    T.StructField("url", T.StringType()),
-    T.StructField("warc_date", T.StringType()),
-    T.StructField("mime", T.StringType()),
-    T.StructField("status", T.IntegerType()),
-    T.StructField("html", T.BinaryType()),
-])
-
-
-def read_warc(spark: SparkSession, path: str,
-              warc_type: str = "response") -> DataFrame:
-    """Scan a directory/glob of .warc / .warc.gz files into
-    (warc_file, url, warc_date, mime, status, html). One task per file
-    (gzip members are not splittable mid-file; CC's many-files layout is
-    the parallelism unit — see module docstring)."""
-    files = (spark.read.format("binaryFile")
-             .option("pathGlobFilter", "*.warc*")
-             .load(path)
-             .select("path", "content"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in WARC_SCHEMA.fields}
-            for p, content in zip(pdf["path"], pdf["content"]):
-                for rec in parse_warc(bytes(content)):
-                    if warc_type and rec["warc_type"] != warc_type:
-                        continue
-                    rows["warc_file"].append(p)
-                    rows["url"].append(rec["url"])
-                    rows["warc_date"].append(rec["date"])
-                    rows["mime"].append(rec["mime"])
-                    rows["status"].append(rec["status"])
-                    rows["html"].append(rec["payload"])
-            pdf_out = pd.DataFrame(rows)
-            pdf_out["status"] = pdf_out["status"].astype("Int32")
-            yield pdf_out
-
-    return files.mapInPandas(run, schema=WARC_SCHEMA)

@@ -1,8 +1,6 @@
-"""Saved-query alerting: AND-match semantics, batch/streaming parity."""
+"""Saved-query alerting: AND-match semantics."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from chrono_scraper_spark.operators.alerts import match_saved_queries
 
@@ -22,40 +20,3 @@ def test_and_semantics_and_edge_queries(spark):
     got = {(r["query_id"], r["doc_id"])
            for r in match_saved_queries(docs, saved).collect()}
     assert got == {(10, 1), (11, 1), (11, 3), (14, 1), (14, 3)}
-
-
-def test_alert_stream_matches_batch(spark, tmp_path):
-    from chrono_scraper_spark.corpus import generate_pages
-    from chrono_scraper_spark.plans.catalog import SnapshotCatalog
-    from chrono_scraper_spark.streaming import micro_batch as MB
-
-    corpus = str(tmp_path / "pages")
-    generate_pages(spark, 80, partitions=4).write.parquet(corpus)
-    whole = spark.read.parquet(corpus)
-    # build queries from actual corpus vocabulary so matches exist
-    w = whole.select(F.explode(F.split("text", " ")).alias("w")) \
-        .filter("w != ''").groupBy("w").count() \
-        .orderBy(F.desc("count"), "w").limit(2).collect()
-    saved = spark.createDataFrame(
-        [(1, w[0]["w"]), (2, f"{w[0]['w']} {w[1]['w']}"), (3, "zzqx")],
-        "query_id int, query string")
-
-    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
-    q = MB.alerts_stream_writer(
-        MB.read_pages_stream(spark, corpus, max_files_per_trigger=2),
-        cat, str(tmp_path / "ck"), saved).start()
-    q.awaitTermination(120)
-    got = {(r["query_id"], r["url"], r["ts14"])
-           for r in cat.read("alerts").collect()}
-    w14 = whole.selectExpr("*",
-                           "date_format(warc_ts,'yyyyMMddHHmmss') ts14")
-    want = {(r["query_id"], r["url"], r["ts14"])
-            for r in match_saved_queries(
-                w14, saved, id_col=("url", "ts14")).collect()}
-    assert got == want and len(want) > 0
-    # replay: no new files -> no duplicate alerts
-    q2 = MB.alerts_stream_writer(
-        MB.read_pages_stream(spark, corpus), cat,
-        str(tmp_path / "ck"), saved).start()
-    q2.awaitTermination(60)
-    assert cat.read("alerts").count() == len(want)

@@ -157,32 +157,6 @@ def test_log2_quantile_sketch_zero_and_determinism(spark):
     assert got[50] == (0, 0)  # ten zeros dominate the median
 
 
-def test_log2_histogram_merge_exactness(spark):
-    """Mergeability contract: quantiles from merged shard histograms ==
-    quantiles from the whole dataset, exactly."""
-    from pyspark.sql import functions as F
-
-    from chrono_scraper_spark.operators.analytics import (
-        log2_histogram,
-        log2_quantile_sketch,
-        merge_histograms,
-        quantiles_from_histogram,
-    )
-
-    whole = spark.range(1, 500).select(F.col("id").alias("v"))
-    a = whole.filter("v % 3 = 0")
-    b = whole.filter("v % 3 = 1")
-    c = whole.filter("v % 3 = 2")
-    merged = merge_histograms(log2_histogram(a, "v"),
-                              log2_histogram(b, "v"),
-                              log2_histogram(c, "v"))
-    got = {tuple(r) for r in
-           quantiles_from_histogram(merged, (50, 90, 99)).collect()}
-    want = {tuple(r) for r in
-            log2_quantile_sketch(whole, "v", (50, 90, 99)).collect()}
-    assert got == want
-
-
 def test_hll_registers_match_python_twin(spark):
     """Every (bucket, register) pair must equal the bit-level reference
     computation — the sketch's cross-engine determinism claim."""
@@ -218,28 +192,6 @@ def test_hll_estimate_accuracy_and_small_range(spark):
     assert A.hll_distinct(dup, "v").collect()[0]["est_distinct"] == est
 
 
-def test_hll_merge_exactness_and_grouping(spark):
-    """merge(sketch(A), sketch(B)) must produce the identical register
-    table — and hence the identical estimate — as sketch(A ∪ B)."""
-    whole = spark.range(5000).select(
-        (F.col("id") % 3).cast("string").alias("g"),
-        F.concat(F.lit("u"), F.col("id")).alias("v"))
-    a = whole.filter(F.xxhash64("v") % 2 == 0)
-    b = whole.join(a, ["g", "v"], "left_anti")
-    merged = A.merge_hll_registers(
-        A.hll_registers(a, "v", keys=("g",)),
-        A.hll_registers(b, "v", keys=("g",)), keys=("g",))
-    got = {tuple(r) for r in merged.collect()}
-    want = {tuple(r)
-            for r in A.hll_registers(whole, "v", keys=("g",)).collect()}
-    assert got == want
-    ge = {r["g"]: r["est_distinct"]
-          for r in A.hll_estimate(merged, keys=("g",)).collect()}
-    we = {r["g"]: r["est_distinct"]
-          for r in A.hll_distinct(whole, "v", keys=("g",)).collect()}
-    assert ge == we and set(ge) == {"0", "1", "2"}
-
-
 def test_hll_rejects_bad_p(spark):
     df = spark.createDataFrame([("a",)], "v string")
     with pytest.raises(ValueError):
@@ -267,56 +219,12 @@ def test_cms_overestimate_only_and_exact_when_sparse(spark):
     assert g[0]["est"] == 0
 
 
-def test_cms_merge_exactness_and_weights(spark):
-    rows = [(f"h{k}", k * 10) for k in range(1, 31) for _ in range(3)]
-    df = spark.createDataFrame(rows, "host string, nbytes int")
-    a = df.filter(F.xxhash64("host") % 2 == 0)
-    b = df.filter(F.xxhash64("host") % 2 != 0)
-    merged = A.cms_merge(A.cms_build(a, "host"), A.cms_build(b, "host"))
-    assert ({tuple(r) for r in merged.collect()}
-            == {tuple(r) for r in A.cms_build(df, "host").collect()})
-    # weighted build: per-host byte totals instead of row counts
-    est = {r["host"]: r["est"]
-           for r in A.cms_query(A.cms_build(df, "host", weight="nbytes"),
-                                df, "host").collect()}
-    assert est["h5"] == 150 and est["h30"] == 900
-
-
 def test_cms_rejects_bad_params(spark):
     df = spark.createDataFrame([("a",)], "v string")
     with pytest.raises(ValueError):
         A.cms_build(df, "v", d=0)
     with pytest.raises(ValueError):
         A.cms_build(df, "v", w=8192)
-
-
-def test_hll_union_and_intersection_estimates(spark):
-    """Union estimate == estimate of the merged sketch (exact property);
-    inclusion-exclusion overlap lands near the true intersection."""
-    a = spark.range(0, 6000).select(
-        F.concat(F.lit("u"), F.col("id")).alias("v"))
-    b = spark.range(4000, 10000).select(
-        F.concat(F.lit("u"), F.col("id")).alias("v"))
-    ra, rb = A.hll_registers(a, "v"), A.hll_registers(b, "v")
-    eu = A.hll_union_estimate(ra, rb).collect()[0]["est_distinct"]
-    whole = A.hll_distinct(a.unionByName(b), "v") \
-        .collect()[0]["est_distinct"]
-    assert eu == whole
-    ov = A.hll_intersection_estimate(ra, rb).collect()[0]["est_overlap"]
-    # true overlap 2000 of 10000; inclusion-exclusion ~3x single-sketch
-    # error (6.5% of 10000) -> generous 1000 absolute bound
-    assert abs(ov - 2000) < 1000
-    # disjoint sets: overlap clamps at >= 0
-    c = spark.range(50000, 51000).select(
-        F.concat(F.lit("u"), F.col("id")).alias("v"))
-    ovd = A.hll_intersection_estimate(
-        ra, A.hll_registers(c, "v")).collect()[0]["est_overlap"]
-    assert 0 <= ovd < 800
-    # grouped variant joins on the keys
-    ga = A.hll_registers(a.withColumn("g", F.lit("x")), "v", keys=("g",))
-    gb = A.hll_registers(b.withColumn("g", F.lit("x")), "v", keys=("g",))
-    rows = A.hll_intersection_estimate(ga, gb, keys=("g",)).collect()
-    assert len(rows) == 1 and rows[0]["g"] == "x"
 
 
 def test_hll_ignores_nulls(spark):

@@ -1,5 +1,6 @@
-"""End-to-end crawl: ordering + URL-seen parity vs the Python oracle,
-resume from snapshots, torn-round replay, full-text search over the result,
+"""End-to-end crawl: ordering + URL-seen parity vs the Python oracle on
+both seen-set anti-join paths (exact, Bloom), resume from snapshots,
+torn-round replay, full-text search over the result,
 and the retry/circuit-breaker options (T7/T8).
 """
 
@@ -51,6 +52,27 @@ def _oracle(spark, corpus_path):
     return crawl_oracle(rows, rps=RPS, burst=BURST, round_seconds=ROUND_SECONDS)
 
 
+@pytest.fixture(params=["exact", "bloom"])
+def antijoin(request, monkeypatch):
+    """The seen-set anti-join path the crawl's rounds take. ``bloom`` drops
+    the Bloom threshold to 0, so every round with a non-empty url_seen runs
+    the Bloom-prefiltered anti-join. Returns the path and the list of Bloom
+    anti-join calls."""
+    import chrono_scraper_spark.plans.crawl as crawl_mod
+
+    calls = []
+    real = crawl_mod.bloom_prefilter_anti_join
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(crawl_mod, "bloom_prefilter_anti_join", spy)
+    if request.param == "bloom":
+        monkeypatch.setattr(crawl_mod, "BLOOM_THRESHOLD", 0)
+    return request.param, calls
+
+
 def _engine_state(cat):
     log = [(r["round_idx"], r["seq"], r["url"], r["ts14"], r["fetch_status"])
            for r in cat.read("fetch_log").collect()]
@@ -62,7 +84,7 @@ def _engine_state(cat):
     return log, seen, filtered
 
 
-def test_crawl_matches_oracle(spark, tmp_path, corpus_path, seeds):
+def test_crawl_matches_oracle(spark, tmp_path, corpus_path, seeds, antijoin):
     job = _job(spark, tmp_path, corpus_path, seeds, "wh_main")
     rounds = job.run(max_rounds=50)
     assert rounds and rounds[-1].get("deferred", 0) == 0
@@ -73,6 +95,8 @@ def test_crawl_matches_oracle(spark, tmp_path, corpus_path, seeds):
     assert set(filtered) == set(exp["filtered"])
     for k, (status, reason) in exp["filtered"].items():
         assert filtered[k] == (status, reason), k
+    path, bloom_calls = antijoin
+    assert bool(bloom_calls) == (path == "bloom"), len(bloom_calls)
 
     # lineage recorded one row per round with partition counts
     lineage = job.cat.read("crawl_rounds").collect()
@@ -104,7 +128,7 @@ def test_resume_equals_uninterrupted(spark, tmp_path, corpus_path, seeds):
     assert _engine_state(ref.cat) == _engine_state(resumed.cat)
 
 
-def test_torn_round_replay(spark, tmp_path, corpus_path, seeds):
+def test_torn_round_replay(spark, tmp_path, corpus_path, seeds, antijoin):
     """Crash simulation: round 1 commits everything, then the crawl_rounds
     lineage pointer is rolled back (= crash before the round's commit point).
     Replaying round 1 against the pinned previous-round versions must
@@ -125,6 +149,8 @@ def test_torn_round_replay(spark, tmp_path, corpus_path, seeds):
     assert replay.next_round() == 1  # the torn round is not "done"
     replay.run(max_rounds=50)
     assert _engine_state(ref.cat) == _engine_state(replay.cat)
+    path, bloom_calls = antijoin
+    assert bool(bloom_calls) == (path == "bloom"), len(bloom_calls)
 
 
 def test_round_state_reads_no_spark_job(spark, tmp_path, corpus_path, seeds):

@@ -1,14 +1,10 @@
-"""Pattern-based NER analog: extraction, counters, entity-filtered search."""
+"""Pattern-based NER analog: entity extraction."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from chrono_scraper_spark.functions.entities import (
-    extract_entities,
-    filter_by_entity,
-    with_entities,
-)
+from chrono_scraper_spark.functions.entities import extract_entities
 
 
 def test_extract_entities_types_and_order(spark):
@@ -22,26 +18,3 @@ def test_extract_entities_types_and_order(spark):
     assert ("url", "https://x.org/a") in got
     assert ("person", "Meet Jane Doe") in got  # greedy capitalized span
     assert ("money", "$9.99") in got
-
-
-def test_with_entities_counters(spark):
-    df = spark.createDataFrame(
-        [("Alice Smith met Bob Jones on 2021-05-06",), ("no entities here",)],
-        "text string")
-    out = {r["text"]: r for r in with_entities(df).collect()}
-    r = out["Alice Smith met Bob Jones on 2021-05-06"]
-    assert r["person_entities"] == 2 and r["date_entities"] == 1
-    assert r["entities_extracted"] == 3
-    assert out["no entities here"]["entities_extracted"] == 0
-
-
-def test_filter_by_entity(spark):
-    df = with_entities(spark.createDataFrame(
-        [("u1", "written by Ada Lovelace"),
-         ("u2", "no names at all")], "url string, text string"))
-    hits = filter_by_entity(df, "person")
-    assert [r["url"] for r in hits.collect()] == ["u1"]
-    exact = filter_by_entity(df, "person", "Ada Lovelace")
-    assert [r["url"] for r in exact.collect()] == ["u1"]
-    miss = filter_by_entity(df, "person", "Grace Hopper")
-    assert miss.count() == 0

@@ -1,4 +1,4 @@
-"""RSS/Atom feed discovery + parsing (operators/feeds.py)."""
+"""RSS/Atom feed parsing (operators/feeds.py)."""
 
 from __future__ import annotations
 
@@ -7,21 +7,9 @@ import datetime
 from pyspark.sql import functions as F
 
 from chrono_scraper_spark.operators.feeds import (
-    discover_feeds,
     feed_recrawl_status,
     parse_feeds,
 )
-
-PAGE_HTML = """<html><head>
-<link type="application/rss+xml" rel="alternate" href="/feed.xml">
-<link rel="ALTERNATE" type="application/atom+xml; charset=utf-8"
-      href="https://other.example/atom">
-<link rel="alternate" type="application/rss+xml"
-      href="https://a.example/feed.xml">
-<link rel="stylesheet" href="/style.css">
-<link rel="alternate" type="application/json" href="/feed.json">
-<link rel="alternate" type="application/rss+xml" href="feed-rel.xml">
-</head><body></body></html>"""
 
 RSS = """<?xml version="1.0"?><rss version="2.0"><channel>
 <title>chan</title><link>https://a.example/</link>
@@ -41,20 +29,6 @@ ATOM = """<?xml version="1.0"?><feed xmlns="http://www.w3.org/2005/Atom">
 <entry><title>E2</title><link href="https://b.example/e2"/>
 <updated>bogus</updated></entry>
 </feed>"""
-
-
-def test_discover_feeds(spark):
-    pages = spark.createDataFrame(
-        [("https://a.example/", "a.example", PAGE_HTML.encode())],
-        "url string, host string, html binary")
-    got = {(r["feed_url"], r["feed_type"])
-           for r in discover_feeds(pages).collect()}
-    # root-relative resolved; absolute kept; duplicate collapsed by
-    # distinct; stylesheet/json/bare-relative dropped
-    assert got == {
-        ("https://a.example/feed.xml", "application/rss+xml"),
-        ("https://other.example/atom", "application/atom+xml"),
-    }
 
 
 def test_parse_feeds(spark):

@@ -83,26 +83,8 @@ def test_search_facets(spark):
     assert facets == {("lang", "en"): 1, ("lang", "de"): 1}
 
 
-def test_search_typo_exact_ranks_first(spark):
-    from chrono_scraper_spark.operators.index import search_typo
-
-    pi = _page_index(spark)
-    inv = build_inverted_terms(pi)
-    # 'bta' is edit-1 from 'beta'; u1 also contains exact 'alpha'
-    out = search_typo(pi, inv, "alpha bta", limit=10).collect()
-    assert out[0]["url_canon"] == "u1"       # exact+typo beats typo-only
-    assert {r["url_canon"] for r in out} == {"u1", "u2"}
-    # a pure-typo query still matches
-    out2 = search_typo(pi, inv, "bta", limit=10).collect()
-    assert {r["url_canon"] for r in out2} == {"u1", "u2"}
-
-
 def test_positional_index_and_search(spark):
-    from chrono_scraper_spark.operators.index import (
-        build_inverted_terms,
-        search_positional,
-    )
-    from pyspark.sql import functions as F
+    from chrono_scraper_spark.operators.index import ranked_match_set
 
     rows = [
         # 'query' is the FIRST word here…
@@ -119,44 +101,27 @@ def test_positional_index_and_search(spark):
            for r in inv.collect()}
     assert got[("query", "a")] == 0      # title token position 0
     assert got[("query", "b")] == 9      # 2 title + 7 body tokens before it
-    ranked = search_positional(pi, inv, "query", limit=10).collect()
-    assert [r["url_canon"] for r in ranked] == ["a", "b"]
-    assert ranked[0]["best_pos"] == 0 and ranked[1]["best_pos"] == 9
-
-
-def test_search_proximity_adjacent_outranks_scattered(spark):
-    """Meilisearch rule #3 (proximity): a doc with the query terms adjacent
-    must outrank one with the same terms scattered, everything else equal."""
-    from chrono_scraper_spark.operators.index import search_proximity
-
-    rows = [
-        ("adj", "t", "", "x x alpha beta x x x x", 8, 0.5),
-        ("scat", "t", "", "alpha x x x x x x beta", 8, 0.5),
-        ("single", "t", "", "alpha x x x x x x x", 8, 0.9),
-    ]
-    pi = spark.createDataFrame(
-        rows, "url_canon string, ts14 string, title string, content string, "
-              "word_count int, quality_score double")
-    inv = build_inverted_terms(pi, positions=True)
-    hits = search_proximity(pi, inv, "alpha beta", limit=10).collect()
-    assert [h["url_canon"] for h in hits] == ["adj", "scat", "single"]
-    assert hits[0]["proximity"] == 1
-    assert hits[1]["proximity"] == 7
-    assert hits[2]["proximity"] is None  # single term: no pair distance
+    best = {r["url_canon"]: r["best_pos"]
+            for r in ranked_match_set(pi, inv, "query").collect()}
+    assert best == {"a": 0, "b": 9}
 
 
 def test_min_pair_distance_same_term_runs_skipped(spark):
     """Occurrences of the SAME term between the two closest different terms
     must not break the adjacent-scan (closest different-term pair is found
     across a same-term run)."""
-    from chrono_scraper_spark.operators.index import search_proximity
+    from chrono_scraper_spark.operators.index import min_pair_distance
 
     rows = [("d", "t", "", "alpha alpha alpha beta", 4, 0.5)]
     pi = spark.createDataFrame(
         rows, "url_canon string, ts14 string, title string, content string, "
               "word_count int, quality_score double")
     inv = build_inverted_terms(pi, positions=True)
-    hits = search_proximity(pi, inv, "alpha beta", limit=10).collect()
+    entries = F.collect_list(F.struct("term", "pos_arr"))
+    hits = (inv.filter(F.col("term").isin("alpha", "beta"))
+            .groupBy("url_canon")
+            .agg(min_pair_distance(entries).alias("proximity"))
+            .collect())
     assert hits[0]["proximity"] == 1
 
 
@@ -189,17 +154,14 @@ def test_search_snippets_end_to_end(spark):
 
 
 def test_search_ranked_full_rule_chain(spark):
-    """The unified Meilisearch chain (search_ranked) in configured order:
-    words > typo > proximity > attribute > exactness > quality_score >
-    word_count — a planted corpus where EVERY rule decides exactly one
-    adjacent pair in the final ranking."""
-    from chrono_scraper_spark.operators.index import search_ranked
+    """ranked_match_set scores every Meilisearch rule of the chain —
+    words, typo, proximity, attribute, exactness — on a planted corpus
+    where each rule separates one pair of pages."""
+    from chrono_scraper_spark.operators.index import ranked_match_set
 
     rows = [
         # url, quality, content — query is "data query windw"
         ("p1", 9.0, "data query windw"),           # all rules best
-        ("p2", 9.0, "data query windw extra"),     # +1 word_count
-        ("p3", 10.0, "data query windw"),          # +1 quality
         ("p4", 9.0, "data query window"),          # typo: windw->window
         ("p5", 9.0, "data pad query pad windw"),   # proximity 2
         ("p6", 9.0, "pad data query windw"),       # best_pos 1
@@ -211,104 +173,14 @@ def test_search_ranked_full_rule_chain(spark):
         "url_canon string, ts14 string, title string, content string, "
         "word_count int, quality_score double")
     inv = build_inverted_terms(pi, positions=True)
-    hits = search_ranked(pi, inv, "data query windw", limit=10).collect()
-    order = [h["url_canon"] for h in hits]
-    # quality(p3>p2), word_count(p2>p1), exactness(p1>p7),
-    # attribute(p7>p6), proximity(p6>p5), typo(p5>p4), words(p4>p8)
-    assert order == ["p3", "p2", "p1", "p7", "p6", "p5", "p4", "p8"]
-    by = {h["url_canon"]: h for h in hits}
-    assert by["p3"]["exact_phrase"] and not by["p7"]["exact_phrase"]
+    by = {h["url_canon"]: h for h in
+          ranked_match_set(pi, inv, "data query windw").collect()}
+    assert by["p1"]["exact_phrase"] and not by["p7"]["exact_phrase"]
     assert by["p4"]["typo_cost"] == 1 and by["p5"]["typo_cost"] == 0
     assert by["p5"]["proximity"] == 2 and by["p6"]["proximity"] == 1
     assert by["p6"]["best_pos"] == 1 and by["p7"]["best_pos"] == 0
-    assert by["p8"]["matched_terms"] == 2
-
-
-def test_search_ranked_sort_slot_and_empty(spark):
-    """The 'sort' rule slot: caller criteria apply between attribute and
-    exactness, exactly where the reference's chain puts user sorts."""
-    from chrono_scraper_spark.operators.index import search_ranked
-
-    pi = spark.createDataFrame(
-        [("a", "0", "", "data query windw", 3, 1.0, "2024"),
-         ("b", "0", "", "data query windw", 3, 9.0, "2025")],
-        "url_canon string, ts14 string, title string, content string, "
-        "word_count int, quality_score double, year string")
-    inv = build_inverted_terms(pi, positions=True)
-    # without sort: quality decides (b first); with sort_by year asc: a
-    plain = [h["url_canon"] for h in
-             search_ranked(pi, inv, "data query windw").collect()]
-    assert plain == ["b", "a"]
-    sorted_ = [h["url_canon"] for h in
-               search_ranked(pi, inv, "data query windw",
-                             sort_by=[F.asc("year")]).collect()]
-    assert sorted_ == ["a", "b"]
-    assert search_ranked(pi, inv, "", limit=5).count() == 0
-
-
-def test_partitioned_index_prunes_and_matches(spark, tmp_path):
-    """Bucketed index storage: the pruned read returns exactly the plain
-    read's postings for the query terms, its scan carries a term_bucket
-    PartitionFilter, and it lists only the query buckets' files."""
-    from chrono_scraper_spark.operators.index import (
-        build_inverted_terms,
-        read_pruned_postings,
-        write_partitioned_index,
-    )
-
-    docs = spark.createDataFrame(
-        [(str(i), "0", "", f"alpha beta gamma delta w{i} shared")
-         for i in range(40)],
-        "url_canon string, ts14 string, title string, content string")
-    inv = build_inverted_terms(docs)
-    path = str(tmp_path / "inv")
-    write_partitioned_index(inv, path, n_buckets=16)
-
-    terms = ["alpha", "w7"]
-    pruned = read_pruned_postings(spark, path, terms, n_buckets=16)
-    want = sorted(map(tuple, inv.filter(F.col("term").isin(terms))
-                      .collect()))
-    got = sorted(map(tuple,
-                     pruned.select("term", "url_canon", "ts14", "tf")
-                     .collect()))
-    assert got == want and got
-
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "term_bucket" in plan
-
-    # hard proof the non-query buckets are never OPENED: corrupt a file
-    # in a bucket outside the query set — the full scan now fails, the
-    # pruned scan still returns identical results
-    import glob
-    import os
-
-    from pyspark.sql import functions as SF
-    qb = {r["b"] for r in spark.createDataFrame(
-        [(t,) for t in terms], "term string").select(
-        SF.pmod(SF.xxhash64("term"), SF.lit(16)).cast("int").alias("b"))
-        .collect()}
-    victim_bucket = next(b for b in range(16) if b not in qb
-                         and glob.glob(f"{path}/term_bucket={b}/*.parquet"))
-    victim = glob.glob(f"{path}/term_bucket={victim_bucket}/*.parquet")[0]
-    with open(victim, "wb") as fh:
-        fh.write(b"not parquet at all")
-    try:
-        spark.read.parquet(path).filter("term = 'shared'").count()
-        raise AssertionError("full scan should hit the corrupted file")
-    except Exception as exc:  # noqa: BLE001
-        assert "AssertionError" not in type(exc).__name__
-    from pyspark.sql.types import IntegerType, StructField
-    idx_schema = inv.schema.add(StructField("term_bucket", IntegerType()))
-    again = sorted(map(tuple,
-                       read_pruned_postings(spark, path, terms, 16,
-                                            schema=idx_schema)
-                       .select("term", "url_canon", "ts14", "tf")
-                       .collect()))
-    assert again == want
-    os.remove(victim)
-
-    # empty query -> empty frame, schema intact
-    assert read_pruned_postings(spark, path, [], 16).count() == 0
+    assert by["p8"]["matched_terms"] == 2 and by["p1"]["matched_terms"] == 3
+    assert ranked_match_set(pi, inv, "").count() == 0
 
 
 def test_noindex_pages_excluded_from_search(spark):

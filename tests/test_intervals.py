@@ -1,4 +1,4 @@
-"""Interval merge / gap detection / coverage (W1/W2/A5)."""
+"""Interval merge / gap detection (W1/W2)."""
 
 from __future__ import annotations
 
@@ -34,13 +34,3 @@ def test_detect_gaps(spark):
     all_gaps = {(r["gap_start"], r["gap_end"])
                 for r in IV.detect_gaps(df, "k", min_gap=0).collect()}
     assert all_gaps == {(5, 8), (10, 30)}
-
-
-def test_coverage_fraction(spark):
-    rows = [("a", 0, 50, 0, 100), ("a", 40, 80, 0, 100),
-            ("b", 0, 10, 0, 100)]
-    df = spark.createDataFrame(
-        rows, "k string, start long, end long, ws long, we long")
-    got = {r["k"]: r["coverage"] for r in
-           IV.coverage_fraction(df, "k", "ws", "we").collect()}
-    assert got == {"a": 0.8, "b": 0.1}

@@ -2,12 +2,9 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from chrono_scraper_spark.operators.links import (
     anchor_text_counts,
     extract_links,
-    host_edges,
 )
 
 HTML = (
@@ -68,10 +65,6 @@ def test_anchor_text_counts_and_host_edges(spark):
     # empty-anchor image link excluded from the aggregation
     assert all(k[1] != "" for k in counts)
 
-    edges = {(r["src"], r["dst"]) for r in host_edges(links).collect()}
-    assert edges == {("a.example", "t.example"), ("b.example", "t.example"),
-                     ("b.example", "img.example")}
-
 
 def test_extract_links_plan_is_map_side(spark):
     """extract_links itself shuffles nothing: one Generate (the tag
@@ -80,24 +73,6 @@ def test_extract_links_plan_is_map_side(spark):
         .executedPlan().toString()
     assert "Exchange" not in plan
     assert plan.count("Generate") == 1
-
-
-def test_links_feed_host_authority(spark):
-    """host_edges output plugs straight into graph.host_authority."""
-    from chrono_scraper_spark.operators.graph import host_authority
-
-    pages = spark.createDataFrame(
-        [("https://a.example/1", "a.example",
-          b'<a href="https://b.example/x">b</a>'),
-         ("https://b.example/1", "b.example",
-          b'<a href="https://a.example/y">a</a>'
-          b'<a href="https://c.example/z">c</a>')],
-        "url string, host string, html binary")
-    ranks = {r["host"]: r["rank_nano"]
-             for r in host_authority(host_edges(extract_links(pages)),
-                                     iters=3).collect()}
-    assert set(ranks) == {"a.example", "b.example", "c.example"}
-    assert all(v > 0 for v in ranks.values())
 
 
 def test_rel_canonical_policy(spark):

@@ -597,26 +597,6 @@ def test_wordpiece_encode_plan_zero_exchanges(spark):
     assert plan.count("Exchange") == 0  # broadcast codebook, map-only pass
 
 
-def test_fasttext_train_and_trained_inference(spark):
-    good = ["excellent", "insight", "coherent", "thorough", "reasoned"]
-    bad = ["zzspam", "clickzz", "zzbuy", "zzfree", "zznow"]
-    rows = []
-    for i in range(40):
-        rows.append((i, 1.0, " ".join(good[(i + j) % 5] for j in range(8))))
-        rows.append((100 + i, 0.0,
-                     " ".join(bad[(i + j) % 5] for j in range(8))))
-    df = spark.createDataFrame(rows, "doc_id long, label double, text string")
-    w, b = Q.fasttext_train(df, n_buckets=4096, max_iter=40)
-    assert len(w) == 4096
-    scored = Q.fasttext_score_trained(df.select("doc_id", "text"), w, b)
-    out = {r["doc_id"]: r["keep"] for r in scored.collect()}
-    assert all(out[i] for i in range(40))           # good kept
-    assert not any(out[100 + i] for i in range(40))  # bad dropped
-    plan = Q.fasttext_score_trained(df.select("doc_id", "text"), w, b) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan    # inference stays a codegen projection
-
-
 # --------------------------------------------------------------------------
 # readability (quality_scoring.py analog)
 # --------------------------------------------------------------------------
@@ -774,7 +754,7 @@ def test_bigram_logprob_prefers_seen_sequences(spark):
 
 
 # --------------------------------------------------------------------------
-# BPE training (quality.bpe_train / bpe_encode)
+# BPE training (quality.bpe_train)
 # --------------------------------------------------------------------------
 
 def _py_bpe_train(word_counts, n_merges, min_pair=2):
@@ -827,34 +807,6 @@ def test_bpe_train_matches_python_twin(spark):
            .orderBy("rank").collect()]
     assert got == want
     assert len(got) >= 5     # the corpus supports a real merge sequence
-
-
-def test_bpe_encode_reproduces_training_segmentation(spark):
-    """BPE invariant: applying the learned merges in rank order to the
-    training words reproduces the training-time segmentation."""
-    from chrono_scraper_spark.operators.quality import (_bpe_word,
-                                                        bpe_encode,
-                                                        bpe_train)
-
-    df = spark.createDataFrame(BPE_DOCS, "doc_id long, text string")
-    merges = bpe_train(df, n_merges=12)
-    ranks = {(r.left, r.right): r.rank for r in merges.collect()}
-    wc: Counter = Counter()
-    for _i, t in BPE_DOCS:
-        wc.update(t.split())
-    _m, final = _py_bpe_train(dict(wc), n_merges=12)
-    for w, syms in final.items():
-        assert _bpe_word(w, ranks, "</w>") == syms, w
-    # and the distributed encode agrees with a per-doc python recompute
-    import hashlib
-    got = {r.doc_id: (r.n_pieces, r.piece_sig)
-           for r in bpe_encode(df, merges).collect()}
-    for i, t in BPE_DOCS:
-        pieces = []
-        for w in t.split():
-            pieces.extend(_bpe_word(w, ranks, "</w>"))
-        sig = hashlib.md5(" ".join(pieces).encode()).hexdigest()
-        assert got[i] == (len(pieces), sig), i
 
 
 # ---------------------------------------------------------------------------

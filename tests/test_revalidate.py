@@ -1,5 +1,5 @@
 """Conditional revalidation (If-None-Match / If-Modified-Since / 304):
-``fetch_http(validator_cols=…)`` + ``recrawl.merge_revalidated``.
+``fetch_http(validator_cols=…)``.
 
 A threaded loopback ``http.server`` plays an origin with per-path
 validators; URLs are fetched directly (no wayback template) — the live
@@ -12,9 +12,7 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
-from pyspark.sql import functions as F
 
-from chrono_scraper_spark.operators.recrawl import merge_revalidated
 from chrono_scraper_spark.sources.httpfetch import fetch_http
 
 
@@ -133,68 +131,3 @@ def test_if_modified_since_alone(spark, server):
     assert out["http_status"] == 304 and out["fetch_err"] is None
     # only If-Modified-Since went out
     assert store.hits[0][1] is None and store.hits[0][2] == _LM
-
-
-def test_merge_revalidated_steady_state(spark, server):
-    """The full steady-state round: stored captures + validators →
-    conditional fetch → 304 rows reuse stored text, changed rows carry
-    fresh html; validators to store are correct either way — including
-    when the server omits them on 304 (kept from the store)."""
-    store, base = server
-    store.pages["/same"] = (b"<html>S</html>", '"s1"', _LM)
-    store.pages["/changed"] = (b"<html>C2</html>", '"c2"', _LM)
-    store.pages["/quiet304"] = (b"<html>Q</html>", '"q1"', _LM)
-    store.omit_validators_on_304.add("/quiet304")
-    prior = spark.createDataFrame(
-        [(f"{base}/same", "na", '"s1"', _LM, "S text", "S", "dg-s"),
-         (f"{base}/changed", "na", '"c1"', _LM, "C text", "C", "dg-c"),
-         (f"{base}/quiet304", "na", '"q1"', _LM, "Q text", "Q", "dg-q")],
-        "url string, ts14 string, prior_etag string, "
-        "prior_last_modified string, prior_text string, "
-        "prior_title string, prior_digest string")
-    fetched = fetch_http(prior,
-                         validator_cols=("prior_etag",
-                                         "prior_last_modified"))
-    got = {r["url"].rsplit("/", 1)[1]: r
-           for r in merge_revalidated(fetched).collect()}
-    s = got["same"]
-    assert s["not_modified"] and s["method"] == "revalidated_304"
-    assert (s["text"], s["title"], s["digest"]) == ("S text", "S", "dg-s")
-    assert s["etag"] == '"s1"' and s["html"] is None
-    c = got["changed"]
-    assert not c["not_modified"] and c["method"] is None
-    assert c["text"] is None                 # fresh rows extract downstream
-    assert c["html"] == b"<html>C2</html>" and c["etag"] == '"c2"'
-    q = got["quiet304"]
-    assert q["not_modified"] and q["text"] == "Q text"
-    # 304 omitted validators -> the stored ones are kept
-    assert q["etag"] == '"q1"' and q["last_modified"] == _LM
-
-
-def test_merge_revalidated_zero_shuffle(spark):
-    df = spark.createDataFrame(
-        [("u", 304, None, None, "t", "ti", "d", '"e"', _LM)],
-        "url string, http_status int, resp_etag string, "
-        "resp_last_modified string, prior_text string, prior_title string, "
-        "prior_digest string, prior_etag string, prior_last_modified string")
-    plan = merge_revalidated(df)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "Exchange" not in plan
-
-
-def test_merge_revalidated_validator_routing(spark):
-    """Validator routing is per-outcome (RFC 9110 §15.4.5 scope): a
-    changed 200 with NO response validators stores NULL (the stored
-    ones validate the OLD body); a failed fetch keeps the STORED ones
-    even when the error page sends its own."""
-    df = spark.createDataFrame(
-        [("f", 200, None, "<html>new</html>", None, None, '"old"', _LM),
-         ("x", 503, "http 503", None, '"errpage"', None, '"old"', _LM)],
-        "url string, http_status int, fetch_err string, html string, "
-        "resp_etag string, resp_last_modified string, "
-        "prior_etag string, prior_last_modified string")
-    got = {r["url"]: r for r in merge_revalidated(df).collect()}
-    assert got["f"]["etag"] is None          # resp as-is, no coalesce
-    assert got["f"]["last_modified"] is None
-    assert got["x"]["etag"] == '"old"'       # prior wins outright
-    assert got["x"]["last_modified"] == _LM

@@ -6,25 +6,8 @@ from datetime import datetime
 
 from chrono_scraper_spark.operators.sitemaps import (
     parse_sitemaps,
-    sitemap_index_refs,
     sitemap_recrawl_status,
-    sitemap_urls_from_robots,
 )
-
-
-def test_sitemap_urls_from_robots(spark):
-    robots = spark.createDataFrame(
-        [("a.example",
-          "User-agent: *\nDisallow: /x\n"
-          "Sitemap: https://a.example/sitemap.xml\n"
-          "sitemap: https://a.example/news.xml   # comment\n"
-          "Sitemap: https://a.example/sitemap.xml"),   # dup -> distinct
-         ("b.example", "User-agent: *\nAllow: /")],
-        "host string, body string")
-    got = {(r["host"], r["sitemap_url"])
-           for r in sitemap_urls_from_robots(robots).collect()}
-    assert got == {("a.example", "https://a.example/sitemap.xml"),
-                   ("a.example", "https://a.example/news.xml")}
 
 
 XML = ('<?xml version="1.0"?><urlset>'
@@ -39,17 +22,6 @@ def test_parse_sitemaps(spark):
     got = {r["loc"]: r["lastmod"] for r in parse_sitemaps(bodies).collect()}
     # loc whitespace trimmed by the regex; absent lastmod -> NULL
     assert got == {"https://h/a": "2021-03-04", "https://h/b": None}
-
-
-def test_sitemap_index_refs(spark):
-    idx = ('<sitemapindex>'
-           "<sitemap><loc>https://h/s1.xml</loc>"
-           "<lastmod>2021-01-01</lastmod></sitemap>"
-           "<sitemap><loc>https://h/s2.xml</loc></sitemap>"
-           "</sitemapindex>")
-    bodies = spark.createDataFrame([("h", idx)], "host string, body string")
-    got = {r["child_url"] for r in sitemap_index_refs(bodies).collect()}
-    assert got == {"https://h/s1.xml", "https://h/s2.xml"}
 
 
 def test_sitemap_recrawl_status(spark):
@@ -78,13 +50,7 @@ def test_sitemap_recrawl_status(spark):
 
 def test_parse_sitemaps_changefreq_priority(spark):
     """Optional urlset fields: changefreq token (lowercased), priority
-    double (malformed -> NULL), both NULL when omitted; the interval
-    mapping covers every protocol token."""
-    from chrono_scraper_spark.operators.sitemaps import (
-        changefreq_interval_s,
-        parse_sitemaps,
-    )
-
+    double (malformed -> NULL), both NULL when omitted."""
     body = ("<?xml version='1.0'?><urlset>"
             "<url><loc>https://h/a</loc><changefreq>Daily</changefreq>"
             "<priority>0.8</priority></url>"
@@ -97,12 +63,3 @@ def test_parse_sitemaps_changefreq_priority(spark):
     assert got == {"https://h/a": ("daily", 0.8),
                    "https://h/b": (None, None),   # malformed priority
                    "https://h/c": (None, None)}
-    from pyspark.sql import functions as F
-
-    iv = spark.createDataFrame(
-        [(t,) for t in ["always", "hourly", "daily", "weekly", "monthly",
-                        "yearly", "never", "bogus", None]], "cf string")
-    out = {r["cf"]: r["s"] for r in iv.select(
-        "cf", changefreq_interval_s(F.col("cf")).alias("s")).collect()}
-    assert out["daily"] == 86400 and out["always"] == 300
-    assert out["never"] is None and out["bogus"] is None and out[None] is None

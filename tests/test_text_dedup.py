@@ -60,16 +60,6 @@ def test_lsh_candidates_superset_check(spark, docs):
     assert lsh == brute
 
 
-def test_simhash_near_duplicates(spark, docs):
-    sims = {r["doc_id"]: r["simhash"] for r in TD.simhash64(docs).collect()}
-    assert sims[0] == sims[1]  # identical text → identical simhash
-    pairs = {(r["a"], r["b"]): r["hamming"] for r in
-             TD.simhash_near_duplicates(docs, max_hamming=10).collect()}
-    assert pairs[(0, 1)] == 0
-    assert (0, 2) in pairs  # one-word addition stays within hamming 10
-    assert (0, 4) not in pairs and (0, 5) not in pairs
-
-
 def test_embedding_near_duplicates_exact_and_lsh(spark):
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),

@@ -35,7 +35,7 @@ def test_ts14_roundtrip(spark):
     df = spark.sql("SELECT timestamp'2021-03-05 07:09:11' AS ts")
     out = df.select(
         U.ts14(F.col("ts")).alias("t14"),
-        U.ts14_to_timestamp(U.ts14(F.col("ts"))).alias("back"),
+        F.to_timestamp(U.ts14(F.col("ts")), "yyyyMMddHHmmss").alias("back"),
     ).first()
     assert out["t14"] == "20210305070911"
     assert out["back"] == df.first()["ts"]

@@ -1,9 +1,7 @@
 """WARC source: writer/parser round-trip, CC-style range-member decode,
-file scan via binaryFile, truncation tolerance."""
+truncation tolerance."""
 
 from __future__ import annotations
-
-import gzip
 
 from chrono_scraper_spark.sources import warc as W
 
@@ -62,109 +60,6 @@ def test_truncated_tail_yields_complete_records():
     stream = b"".join(members)[:-40]  # cut into the last record
     recs = W.parse_warc(stream)
     assert len(recs) == 2
-
-
-def test_read_warc_scan(spark, tmp_path):
-    d = tmp_path / "warcs"
-    d.mkdir()
-    # two files, mixed record types; warcinfo must be filtered out
-    info = (b"WARC/1.0\r\nWARC-Type: warcinfo\r\n"
-            b"WARC-Record-ID: <urn:uuid:0>\r\n"
-            b"WARC-Date: 2021-01-01T00:00:00Z\r\n"
-            b"Content-Type: application/warc-fields\r\n"
-            b"Content-Length: 9\r\n\r\nsoftware\n\r\n\r\n")
-    (d / "a.warc.gz").write_bytes(
-        gzip.compress(info, mtime=0) + _rec(0) + _rec(1))
-    (d / "b.warc.gz").write_bytes(_rec(2) + _rec(3))
-    out = W.read_warc(spark, str(d)).collect()
-    assert {r["url"] for r in out} == {
-        f"https://site{i}.example/page-{i}" for i in range(4)}
-    by_url = {r["url"]: r for r in out}
-    r0 = by_url["https://site0.example/page-0"]
-    assert r0["status"] == 404 and r0["mime"] == "text/html"
-    assert bytes(r0["html"]) == "body of page 0 — café".encode()
-    assert r0["warc_date"] == "2021-03-01T12:00:00Z"
-
-
-# ---------------------------------------------------------------------------
-# S6+S7 composed: live HTTP Range fetch of (offset, length) members
-# ---------------------------------------------------------------------------
-
-def test_fetch_warc_range_e2e(spark):
-    """The true CC deployment shape: a loopback server holds one WARC file
-    (concatenated per-record gzip members); frontier rows carry CDX
-    pointers (warc_url, offset, length); ``fetch_warc_range`` issues HTTP
-    Range GETs and decodes each member executor-side. Payloads must come
-    back byte-identical; a pointer past EOF dead-letters."""
-    import threading
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-
-    members, pointers = [], []
-    pos = 0
-    for i in range(5):
-        m = _rec(i)
-        members.append(m)
-        pointers.append((pos, len(m)))
-        pos += len(m)
-    warc_bytes = b"".join(members)
-
-    class H(BaseHTTPRequestHandler):
-        protocol_version = "HTTP/1.1"
-
-        def log_message(self, *a):
-            pass
-
-        def do_GET(self):
-            rng = self.headers.get("Range")
-            if rng and rng.startswith("bytes="):
-                a, _, b = rng[6:].partition("-")
-                a, b = int(a), int(b)
-                if a >= len(warc_bytes):
-                    self.send_response(416)
-                    self.send_header("Content-Length", "0")
-                    self.end_headers()
-                    return
-                body = warc_bytes[a:b + 1]
-                self.send_response(206)
-                self.send_header(
-                    "Content-Range",
-                    f"bytes {a}-{a + len(body) - 1}/{len(warc_bytes)}")
-            else:
-                body = warc_bytes
-                self.send_response(200)
-            self.send_header("Content-Type", "application/warc")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        base = f"http://127.0.0.1:{srv.server_address[1]}/crawl/file.warc.gz"
-        rows = [(f"https://site{i}.example/page-{i}", base, off, ln, "h")
-                for i, (off, ln) in enumerate(pointers)]
-        # one pointer past EOF -> 416 -> dead-letter row
-        rows.append(("https://bad.example/x", base, len(warc_bytes) + 10,
-                     100, "h"))
-        df = spark.createDataFrame(
-            rows, "url string, warc_url string, warc_offset long, "
-                  "warc_length long, host string").coalesce(2)
-        out = {r["url"]: r
-               for r in W.fetch_warc_range(df, max_retries=0).collect()}
-
-        for i in range(5):
-            r = out[f"https://site{i}.example/page-{i}"]
-            assert r["http_status"] == 206 and r["fetch_err"] is None
-            assert bytes(r["html"]) == f"body of page {i} — café".encode()
-            assert r["rec_url"] == f"https://site{i}.example/page-{i}"
-            assert r["rec_status"] == (200 if i % 3 else 404)
-            assert r["rec_mime"] == "text/html"
-        bad = out["https://bad.example/x"]
-        assert bad["html"] is None and bad["http_status"] == 416
-        assert bad["fetch_err"] is not None
-    finally:
-        srv.shutdown()
-        srv.server_close()
 
 
 def test_wet_record_roundtrip_and_linkage():
