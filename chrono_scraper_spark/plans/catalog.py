@@ -30,14 +30,26 @@ delta rows as a new parquet fragment, and the manifest lists the snapshot's
 fragment set; a read is the union of the listed fragments. Commit cost is
 O(delta), never O(accumulated table) — the 10^10-key ``url_seen`` table is
 never rewritten, round over round. ``commit`` (overwrite) replaces the
-fragment set; ``compact`` folds the fragment chain back into one file when
-fragment count grows (Iceberg rewrite_data_files analog).
+fragment set; ``compact`` folds the fragment chain back into right-sized
+files when fragment count grows (Iceberg rewrite_data_files analog).
+
+Data-file layout (Iceberg write properties): every write is compressed
+with ``PARQUET_CODEC`` (zstd, Iceberg's default
+``write.parquet.compression-codec``), and a write whose caller knows a
+bound on its rows is coalesced to ``ceil(rows / TARGET_FILE_ROWS)`` data
+files (Iceberg ``write.target-file-size-bytes``, expressed in rows). A
+round-sized delta is one file instead of one per input partition, so a
+fragment's per-file cost — parquet footer, Hadoop ``.crc`` sidecar, one
+write task — is paid once. The codec is a catalog property, not a session
+key: fragments written under another codec (snappy, before this layout)
+read unchanged, and ``compact`` rewrites them in the current layout.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+import math
 import os
 import shutil
 import time
@@ -45,6 +57,12 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+# Iceberg write properties of every data file the catalog writes (module
+# docstring): the codec, and the row target of one file — the reference's
+# 50-100 MB data file at pages_out's ~2 KB/row under zstd
+PARQUET_CODEC = "zstd"
+TARGET_FILE_ROWS = 50_000
 
 _CURRENT = "_current"
 _MANIFESTS = "_manifests"
@@ -237,12 +255,19 @@ class SnapshotCatalog:
         return self.spark.createDataFrame([], schema)
 
     # -- commits -------------------------------------------------------------
-    def _write_fragment(self, table: str, version: int,
-                        df: DataFrame) -> str:
+    def _write_fragment(self, table: str, version: int, df: DataFrame,
+                        max_rows: int | None = None) -> str:
         """Write one fragment dir for the snapshot; returns its root-relative
-        path (what the manifest stores)."""
+        path (what the manifest stores). ``max_rows`` bounds the rows of
+        ``df`` when the caller knows one without a Spark job; the write is
+        then coalesced to ``ceil(max_rows / TARGET_FILE_ROWS)`` files (at
+        least one). ``coalesce`` adds no stage or job, unlike a repartition
+        or a count; without a bound the input's partitioning is kept."""
+        if max_rows is not None:
+            df = df.coalesce(max(1, math.ceil(max_rows / TARGET_FILE_ROWS)))
         data_dir = self._data_dir(table, version)
-        df.write.mode("overwrite").parquet(data_dir)
+        (df.write.mode("overwrite").option("compression", PARQUET_CODEC)
+         .parquet(data_dir))
         return os.path.relpath(data_dir, self.root)
 
     def _write_rows_fragment(self, table: str, version: int,
@@ -260,7 +285,8 @@ class SnapshotCatalog:
         pq.write_table(
             pa.Table.from_pylist([dict(zip(names, r)) for r in rows],
                                  schema=to_arrow_schema(schema)),
-            os.path.join(data_dir, "part-00000.parquet"))
+            os.path.join(data_dir, "part-00000.parquet"),
+            compression=PARQUET_CODEC)
         return os.path.relpath(data_dir, self.root)
 
     def _commit_delta(self, table: str, frag: str, schema: StructType, *,
@@ -326,17 +352,19 @@ class SnapshotCatalog:
 
     def commit(self, table: str, df: DataFrame, *, operation: str,
                properties: dict | None = None,
-               row_count: int | None = None) -> dict:
+               row_count: int | None = None,
+               max_rows: int | None = None) -> dict:
         """OVERWRITE commit: ``df`` becomes the table's entire next snapshot
         (one fragment). Iceberg: ``df.writeTo(table).overwritePartitions()``.
 
         ``row_count``: caller-provided when already known; otherwise read
         from the written fragment's parquet footers — a local metadata read,
         no extra Spark job (Iceberg gets snapshot record counts from file
-        metadata the same way)."""
+        metadata the same way). ``max_rows``: an upper bound on the rows,
+        which sizes the data files (``_write_fragment``)."""
         prev = self.current_version(table)
         version = (prev or 0) + 1
-        frag = self._write_fragment(table, version, df)
+        frag = self._write_fragment(table, version, df, max_rows=max_rows)
         if row_count is None:
             row_count = self._fragment_row_count(os.path.join(self.root, frag))
         return self._commit_manifest(table, [frag], version=version,
@@ -375,7 +403,8 @@ class SnapshotCatalog:
                           keys: list[str], *, operation: str = "merge",
                           properties: dict | None = None,
                           assume_unique: bool = False,
-                          expect_version: "int | None" = _UNSET) -> dict:
+                          expect_version: "int | None" = _UNSET,
+                          max_rows: int | None = None) -> dict:
         """``MERGE INTO table USING new ON keys WHEN NOT MATCHED THEN INSERT``
         (reference semantics: ON CONFLICT DO NOTHING,
         cdx_deduplication_service.py:229-238) as a MERGE-ON-READ delta: the
@@ -399,7 +428,10 @@ class SnapshotCatalog:
         commit), the guarantee no longer covers the gap and the exact
         anti-join runs as before — same idempotency, fast path only when
         provably safe. Iceberg analog: a MERGE whose snapshot-id check
-        passes can fast-append validated-new rows."""
+        passes can fast-append validated-new rows.
+
+        ``max_rows``: an upper bound on the rows of ``new_rows`` (hence of
+        the delta), which sizes its data files (``_write_fragment``)."""
         if not assume_unique:
             new_rows = new_rows.dropDuplicates(keys)
         prev = self.current_version(table)
@@ -413,19 +445,25 @@ class SnapshotCatalog:
         else:
             fresh = new_rows
         version = (prev or 0) + 1
-        frag = self._write_fragment(table, version, fresh)
+        frag = self._write_fragment(table, version, fresh,
+                                    max_rows=max_rows)
         return self._commit_delta(table, frag, fresh.schema, version=version,
                                   prev=prev, operation=operation,
                                   properties=properties)
 
     def compact(self, table: str, *, properties: dict | None = None) -> dict:
-        """Fold the fragment chain into one fragment (Iceberg
-        rewrite_data_files). Run occasionally — e.g. every N rounds or when
+        """Fold the fragment chain into one fragment of right-sized zstd
+        data files (Iceberg rewrite_data_files with its target file size):
+        the manifest's ``row_count`` sizes the rewrite to
+        ``ceil(rows / TARGET_FILE_ROWS)`` files, so a chain of small deltas
+        becomes one file, whatever codec its fragments were written in.
+        Run occasionally — e.g. every N rounds or when
         ``len(manifest['fragments'])`` crosses a threshold — never per-commit.
         The pinned read carries the table schema, so the schema id stays."""
         df = self.read(table)
         return self.commit(table, df, operation="compact",
-                           properties=properties)
+                           properties=properties,
+                           max_rows=self.row_count(table))
 
     def expire_snapshots(self, table: str, *, keep_last: int = 2) -> dict:
         """Iceberg ``expire_snapshots`` analog: drop all but the newest

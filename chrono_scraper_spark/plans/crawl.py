@@ -32,7 +32,7 @@ set anti-join goes through the Bloom pre-filter once the seen set is big
 enough to matter. A round materializes twice, at the decided candidates and
 at the extracted rows, and both are local checkpoints, not caches: the
 checkpoint cuts the plan lineage, so each later frame (the filtered_log
-merge, the schedule and global order, the five commits, the frontier) plans
+merge, the schedule and global order, the commit wave) plans
 over a LogicalRDD leaf instead of the whole round with its ~120-regex
 decision chain. The driver's analysis, cache lookups and plan strings then
 scale with one phase, not the round (a write plan is 0.5-7.5 KB on the test
@@ -463,6 +463,7 @@ class CrawlJob:
                 assume_unique=True,
                 expect_version=(prev.get("filtered_log") if discovered is None
                                 else _CAT_UNSET),
+                max_rows=counters["filtered"],
             )
             _filtered_pool.shutdown(wait=False)
             _tick("commit_filtered_log")
@@ -631,13 +632,18 @@ class CrawlJob:
             counters["failed"] = int(status_totals.get(C.STATUS_FAILED, 0))
             _tick("counters")
 
-            # ---- commits (all idempotent MERGEs; lineage row last) ----
-            # The five table commits are independent (different tables, all
-            # projections of the materialized extraction checkpoint), so they
-            # run as CONCURRENT Spark jobs from a small thread pool — write
-            # stalls of one commit fill with compute/IO of another; ordering
-            # only matters for the lineage row, which still commits strictly
-            # last.
+            # ---- commits (idempotent MERGEs + the frontier overwrite;
+            # lineage row last) ----
+            # The five table merges and the frontier overwrite are
+            # independent (different tables, all projections of the
+            # round's two checkpoints), so they run as ONE wave of
+            # CONCURRENT Spark jobs from a small thread pool — write stalls
+            # of one commit fill with compute/IO of another; ordering only
+            # matters for the lineage row, which still commits strictly
+            # last, after every commit of the wave and the background
+            # filtered_log merge. Each write passes a row bound the round
+            # already holds (no count job), which sizes its data files
+            # (catalog.TARGET_FILE_ROWS): a round's delta is one file.
             # fetch_log records every ATTEMPT: keyed per round so retried rows
             # appear once per attempt, and a replayed round converges
             fetch_rows = extracted.select(
@@ -689,30 +695,23 @@ class CrawlJob:
             # assume_unique=False — the dedup shuffle is delta-sized.
             digest_rows = (completed.select("digest")
                            .filter(F.col("digest").isNotNull()))
+            # (table, delta, keys, assume_unique, row bound): every attempt
+            # was scheduled, and only completed pages reach pages_out and
+            # seen_digests; a round's postings have no bound the round holds
+            n_sched, n_done = counters["scheduled"], counters["completed"]
             commit_jobs = [
-                ("fetch_log", fetch_rows, ["round_idx", *FRONTIER_KEY], True),
-                ("url_seen", seen_rows, FRONTIER_KEY, True),
-                ("pages_out", pages_out, FRONTIER_KEY, True),
-                ("inverted_terms", inv, ["term", "url_canon", "ts14"], True),
-                ("seen_digests", digest_rows, ["digest"], False),
+                ("fetch_log", fetch_rows, ["round_idx", *FRONTIER_KEY], True,
+                 n_sched),
+                ("url_seen", seen_rows, FRONTIER_KEY, True, n_sched),
+                ("pages_out", pages_out, FRONTIER_KEY, True, n_done),
+                ("inverted_terms", inv, ["term", "url_canon", "ts14"], True,
+                 None),
+                ("seen_digests", digest_rows, ["digest"], False, n_done),
             ]
-            with ThreadPoolExecutor(max_workers=len(commit_jobs)) as pool:
-                futs = [
-                    pool.submit(self.cat.merge_not_matched, table, df, keys,
-                                properties={"round_idx": round_idx},
-                                assume_unique=uniq,
-                                expect_version=prev.get(table))
-                    for table, df, keys, uniq in commit_jobs
-                ]
-                for f in futs:
-                    f.result()
-            # the background filtered_log commit (submitted before the
-            # schedule phase) must land before the lineage row pins versions
-            filtered_log_fut.result()
-            _tick("commit_tables")
 
             # the open frontier = deferred rows ∪ retryable failures (with
-            # retry_count bumped), the next round's candidates
+            # retry_count bumped), the next round's candidates; both are
+            # pending rows of this round, so the pending count bounds it
             next_frontier = deferred.drop("host_rank", "sched_status")
             if "retry_count" not in next_frontier.columns:
                 next_frontier = next_frontier.withColumn(
@@ -723,14 +722,32 @@ class CrawlJob:
                 ).select(*next_frontier.columns)
                 next_frontier = next_frontier.unionByName(retry_rows)
                 counters["retrying"] = retry_rows.count()
-            frontier_m = self.cat.commit(
-                "frontier", next_frontier,
-                operation="overwrite", properties={"round_idx": round_idx})
+
+            # leaving the pool awaits every commit, even when one raises
+            with ThreadPoolExecutor(max_workers=len(commit_jobs) + 1) as pool:
+                futs = [
+                    pool.submit(self.cat.merge_not_matched, table, df, keys,
+                                properties={"round_idx": round_idx},
+                                assume_unique=uniq,
+                                expect_version=prev.get(table),
+                                max_rows=bound)
+                    for table, df, keys, uniq, bound in commit_jobs
+                ]
+                frontier_fut = pool.submit(
+                    self.cat.commit, "frontier", next_frontier,
+                    operation="overwrite", properties={"round_idx": round_idx},
+                    max_rows=n_pending)
+                for f in futs:
+                    f.result()
+                frontier_m = frontier_fut.result()
+            # the background filtered_log commit (submitted before the
+            # schedule phase) must land before the lineage row pins versions
+            filtered_log_fut.result()
             # the frontier's footer row count, not a count over the schedule:
             # exact even if a payload join duplicated a scheduled row
             counters["deferred"] = (frontier_m["row_count"]
                                     - counters.get("retrying", 0))
-            _tick("commit_frontier")
+            _tick("commit_tables")
         finally:
             # no background commit outlives a failed round: a retry in
             # this process could otherwise allocate the same filtered_log
@@ -738,9 +755,9 @@ class CrawlJob:
             if filtered_log_fut is not None:
                 futures_wait([filtered_log_fut])
             # nor does any persisted frame. Released only here: the merge
-            # above reads `decided`, and the frontier commit reads `sched`,
-            # which is planned over it; a local checkpoint is never
-            # recomputed, so a read after its release raises
+            # above reads `decided`, and the frontier commit in the wave
+            # reads `sched`, which is planned over it; a local checkpoint is
+            # never recomputed, so a read after its release raises
             for df in held:
                 release(df)
         counters["timings"] = timings

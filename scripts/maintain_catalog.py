@@ -9,11 +9,15 @@ the companion job Iceberg prescribes — run it BETWEEN crawl runs:
         scripts/maintain_catalog.py --root /path/to/warehouse \
         [--compact-threshold 32] [--keep-last 2] [--tables t1,t2]
 
-Per table: fold the fragment chain into one file when the current
+Per table: fold the fragment chain into one fragment when the current
 manifest lists more than ``--compact-threshold`` fragments (Iceberg
-rewrite_data_files), then drop all but the newest ``--keep-last``
-manifests and delete fragment directories no retained manifest references
-(Iceberg expire_snapshots — this is what actually reclaims disk).
+rewrite_data_files). The rewrite takes the catalog's data-file layout
+(plans/catalog.py): zstd parquet, ``ceil(rows / TARGET_FILE_ROWS)`` files,
+so any table under ~50,000 rows becomes one file, whatever codec and
+file count its older fragments had. Then drop all but the newest
+``--keep-last`` manifests and delete fragment directories no retained
+manifest references (Iceberg expire_snapshots — this is what actually
+reclaims disk).
 Prints one JSON line per table and a totals line.
 """
 

@@ -346,3 +346,108 @@ def test_append_rows_writes_driver_rows_without_a_job(spark, tmp_path):
     cat.append("t", spark.createDataFrame([(2, "b")], "id int, v string"))
     assert sorted(tuple(r) for r in cat.read("t").collect()) == [
         (1, "a"), (2, "b")]
+
+
+def _data_files(cat, frag_rel):
+    """The parquet data files of one fragment, sorted."""
+    frag = os.path.join(cat.root, frag_rel)
+    return sorted(os.path.join(frag, n) for n in os.listdir(frag)
+                  if n.endswith(".parquet"))
+
+
+def _codecs(path):
+    import pyarrow.parquet as pq
+
+    meta = pq.ParquetFile(path).metadata
+    return {meta.row_group(g).column(c).compression
+            for g in range(meta.num_row_groups)
+            for c in range(meta.num_columns)}
+
+
+def test_delta_under_row_target_is_one_zstd_file(spark, tmp_path):
+    """A delta whose row bound is under ``TARGET_FILE_ROWS`` is ONE zstd
+    data file, whatever its input partitioning, and the manifest's
+    row_count stays exact. The driver-side lineage write is zstd too; a
+    write with no bound keeps its input's partitioning."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
+    rows = spark.range(0, 300, numPartitions=5).selectExpr(
+        "id AS k", "repeat(cast(id AS string), 20) AS v")
+    m = cat.merge_not_matched("t", rows, ["k"], assume_unique=True,
+                              max_rows=300)
+    files = _data_files(cat, m["fragments"][-1])
+    assert len(files) == 1
+    assert _codecs(files[0]) == {"ZSTD"}
+    assert m["row_count"] == 300
+    # a replayed delta through the probe: only the 100 new keys land
+    more = spark.range(200, 400, numPartitions=5).selectExpr(
+        "id AS k", "repeat(cast(id AS string), 20) AS v")
+    m = cat.merge_not_matched("t", more, ["k"], assume_unique=True,
+                              max_rows=200)
+    assert len(_data_files(cat, m["fragments"][-1])) == 1
+    assert m["row_count"] == 400 == cat.read("t").count()
+
+    schema = StructType([StructField("k", LongType())])
+    m = cat.append_rows("lineage", [(1,)], schema)
+    assert [_codecs(f) for f in _data_files(cat, m["fragments"][-1])] == [
+        {"ZSTD"}]
+
+    m = cat.commit("unbounded", rows, operation="overwrite")
+    assert len(_data_files(cat, m["fragments"][-1])) == 5
+
+
+def test_delta_over_row_target_splits_into_right_sized_files(
+        spark, tmp_path, monkeypatch):
+    """``ceil(rows / TARGET_FILE_ROWS)`` data files per delta: a 35-row
+    delta over 7 input partitions at a 10-row target writes 4 files."""
+    from chrono_scraper_spark.plans import catalog as catalog_mod
+
+    monkeypatch.setattr(catalog_mod, "TARGET_FILE_ROWS", 10)
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
+    rows = spark.range(0, 35, numPartitions=7).selectExpr("id AS k")
+    m = cat.merge_not_matched("t", rows, ["k"], assume_unique=True,
+                              max_rows=35)
+    files = _data_files(cat, m["fragments"][-1])
+    assert len(files) == 4
+    assert all(_codecs(f) == {"ZSTD"} for f in files)
+    assert m["row_count"] == 35
+
+
+def test_snappy_fragments_read_resume_and_compact_to_zstd(
+        spark, tmp_path, monkeypatch):
+    """A table whose older fragment was written under another codec and
+    the input's partitioning (the layout before right-sized zstd files)
+    reads, takes further merges and compacts into right-sized zstd
+    files with the same rows."""
+    from chrono_scraper_spark.plans import catalog as catalog_mod
+
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
+    old = spark.range(0, 60, numPartitions=4).selectExpr(
+        "id AS k", "cast(id AS string) AS v")
+    monkeypatch.setattr(catalog_mod, "PARQUET_CODEC", "snappy")
+    m = cat.merge_not_matched("t", old, ["k"])
+    monkeypatch.undo()
+    old_files = _data_files(cat, m["fragments"][-1])
+    assert len(old_files) > 1
+    assert all(_codecs(f) == {"SNAPPY"} for f in old_files)
+    assert sorted(r["k"] for r in cat.read("t").collect()) == list(range(60))
+
+    # resume: the merge probes the snappy fragment, so only new keys land
+    new = spark.range(40, 120, numPartitions=4).selectExpr(
+        "id AS k", "concat('new-', cast(id AS string)) AS v")
+    m = cat.merge_not_matched("t", new, ["k"], max_rows=80)
+    assert m["row_count"] == 120
+    assert [_codecs(f) for f in _data_files(cat, m["fragments"][-1])] == [
+        {"ZSTD"}]
+    before = sorted(tuple(r) for r in cat.read("t").collect())
+    assert len(before) == 120
+    assert dict(before)[50] == "50"  # the existing key was not overwritten
+
+    monkeypatch.setattr(catalog_mod, "TARGET_FILE_ROWS", 50)
+    m = cat.compact("t")
+    files = _data_files(cat, m["fragments"][0])
+    assert len(m["fragments"]) == 1 and len(files) == 3
+    assert all(_codecs(f) == {"ZSTD"} for f in files)
+    assert m["row_count"] == 120
+    assert sorted(tuple(r) for r in cat.read("t").collect()) == before

@@ -1,6 +1,6 @@
 """End-to-end crawl: ordering + URL-seen parity vs the Python oracle on
 both seen-set anti-join paths (exact, Bloom), resume from snapshots,
-torn-round replay, full-text search over the result,
+torn-round replay, a failed commit wave, full-text search over the result,
 and the retry/circuit-breaker options (T7/T8).
 """
 
@@ -234,9 +234,9 @@ def test_drain_round_job_budget(spark, tmp_path, corpus_path, seeds,
     write_plans = {}
     write_fragment = cat._write_fragment
 
-    def recording_write(table, version, df):
+    def recording_write(table, version, df, **kwargs):
         write_plans[table] = df._jdf.queryExecution().analyzed().toString()
-        return write_fragment(table, version, df)
+        return write_fragment(table, version, df, **kwargs)
 
     monkeypatch.setattr(cat, "_write_fragment", recording_write)
     job.run_round(1)    # warm: compiles the drain round's plans
@@ -293,6 +293,65 @@ def test_failed_round_awaits_filtered_log_commit(spark, tmp_path, corpus_path,
 
     monkeypatch.undo()
     retry = _job(spark, tmp_path, corpus_path, seeds, "wh_fail")
+    assert retry.next_round() == 0  # the failed round wrote no lineage row
+    retry.run(max_rounds=50)
+    exp = _oracle(spark, corpus_path)
+    log, seen, filtered = _engine_state(retry.cat)
+    assert log == exp["fetch_log"]
+    assert seen == exp["url_seen"]
+    assert filtered == exp["filtered"]
+
+
+def test_failed_commit_wave_awaits_every_commit(spark, tmp_path, corpus_path,
+                                               seeds, monkeypatch):
+    """The table merges and the frontier overwrite run as one concurrent
+    wave. If one merge of the wave raises, run_round must not return before
+    every other commit of the wave and the background filtered_log merge
+    has landed, must write no lineage row and must release every
+    checkpoint and cache; a fresh job's replay converges to the oracle."""
+    import threading
+
+    job = _job(spark, tmp_path, corpus_path, seeds, "wh_wave")
+    merge, commit = job.cat.merge_not_matched, job.cat.commit
+    failed = threading.Event()
+    landed = {}
+
+    def faulty_merge(table, *args, **kwargs):
+        if table == "inverted_terms":
+            time.sleep(1.0)
+            failed.set()
+            raise RuntimeError("injected inverted_terms failure")
+        if table == "filtered_log":
+            # still writing when the wave fails
+            failed.wait(timeout=120)
+            time.sleep(0.5)
+        out = merge(table, *args, **kwargs)
+        landed[table] = time.monotonic()
+        return out
+
+    def late_commit(table, *args, **kwargs):
+        if table == "frontier":
+            failed.wait(timeout=120)
+            time.sleep(0.5)
+        out = commit(table, *args, **kwargs)
+        landed[table] = time.monotonic()
+        return out
+
+    monkeypatch.setattr(job.cat, "merge_not_matched", faulty_merge)
+    monkeypatch.setattr(job.cat, "commit", late_commit)
+    persisted = persisted_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="injected inverted_terms failure"):
+        job.run_round(0)
+    raised = time.monotonic()
+    assert set(landed) == {"fetch_log", "url_seen", "pages_out",
+                           "seen_digests", "frontier", "filtered_log"}
+    assert max(landed.values()) <= raised
+    assert not job.cat.exists("crawl_rounds")
+    # the failed round released its discovery cache and both checkpoints
+    assert persisted_rdd_ids(spark) == persisted
+
+    monkeypatch.undo()
+    retry = _job(spark, tmp_path, corpus_path, seeds, "wh_wave")
     assert retry.next_round() == 0  # the failed round wrote no lineage row
     retry.run(max_rounds=50)
     exp = _oracle(spark, corpus_path)
